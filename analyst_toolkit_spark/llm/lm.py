@@ -56,8 +56,11 @@ def _ngrams_of_chars(ch: Column, n: int) -> Column:
     gram position AND per element_at (the _ngrams_of lesson, ~30x measured
     when violated). Null/short inputs yield the empty array, exactly like
     :func:`_ngrams_of`; element_at stays in bounds by construction (max
-    index = size(ch))."""
-    m = F.size(ch) - F.lit(n - 1)
+    index = size(ch)). ``split('', '')`` is ``['']``, one element for zero
+    characters: it counts as length 0, so the empty string yields no
+    unigram either."""
+    nchars = F.size(ch) - F.when(F.try_element_at(ch, F.lit(1)) == "", 1).otherwise(0)
+    m = nchars - F.lit(n - 1)
     idx = F.when(m >= 1, F.sequence(F.lit(1), m)).otherwise(
         F.array().cast("array<int>")
     )

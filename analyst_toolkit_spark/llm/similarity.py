@@ -14,6 +14,7 @@ from __future__ import annotations
 import os as _os
 import random
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -1939,9 +1940,7 @@ def _bench_dots_fn(values: list[list[float]], norms: list[float] | None):
     BN = np.asarray(norms, dtype=np.float64) if norms is not None else None
     m, d = B.shape
 
-    def _fn(s):
-        import pandas as pd
-
+    def _fn(s: pd.Series) -> pd.Series:
         n = len(s)
         vals = np.full((n, d), np.nan, dtype=np.float64)
         ok = np.zeros(n, dtype=bool)

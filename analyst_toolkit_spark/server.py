@@ -36,6 +36,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Row
 
+from analyst_toolkit_spark.session import codegen_stats
 from analyst_toolkit_spark.tools import Toolkit, _ALIASES, _MODULE_TOOLS
 
 PROTOCOL_VERSION = "2024-05-01"  # reference server.py:124
@@ -372,6 +373,12 @@ class RpcServer:
         self.toolkit = toolkit
         self.metrics = RuntimeMetrics()
 
+    def metrics_snapshot(self) -> dict:
+        """The GET /metrics payload: the per-RPC counters plus a ``codegen``
+        block (JVM compile count and time, and the codegen cache size that
+        produced them), read from the JVM only here, at scrape time."""
+        return {**self.metrics.snapshot(), "codegen": codegen_stats(self.toolkit.spark)}
+
     # -- tool surface -------------------------------------------------------
 
     def list_tools(self) -> list[dict]:
@@ -620,7 +627,7 @@ class _RpcHTTPHandler(BaseHTTPRequestHandler):
         elif self.path == "/ready":
             self._send_json({"status": "ready"})
         else:
-            self._send_json(self.rpc.metrics.snapshot())
+            self._send_json(self.rpc.metrics_snapshot())
 
 
 def serve_http(

@@ -12,6 +12,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: ``spark.sql.codegen.cache.maxEntries`` — sized from the engine's measured
+#: plan working set (see the comment at its use in :func:`get_spark`).
+CODEGEN_CACHE_ENTRIES = 1024
+
 
 def get_spark(app_name: str = "analyst_toolkit_spark", master: str | None = None) -> SparkSession:
     """Build (or fetch) the session.
@@ -78,6 +82,20 @@ def get_spark(app_name: str = "analyst_toolkit_spark", master: str | None = None
                 "HDFSBackedStateStoreProvider",
             ),
         )
+        # Generated-code reuse. Spark keeps Janino-compiled classes in one
+        # JVM-wide LRU keyed by the generated source; the engine re-plans the
+        # same shapes on every tool call and curate pass, so a cache smaller
+        # than that working set recompiles them every time. Measured distinct
+        # classes: agent_session cycle 155, curate_corpus pass 168,
+        # pipeline_batch run 87 — at Spark's default of 100 entries a
+        # 24-call agent cycle compiled ~110 classes and a curate pass ~160;
+        # at this size, only the classes of not-yet-seen tables. A class
+        # averages ~2.7 KB of bytecode (CodegenMetrics) and ~35 KB of
+        # metaspace once loaded (803 classes grew metaspace by 28 MB), so a
+        # full cache pins about 35 MB: bounded for a long-lived server.
+        # Static conf: it takes effect only for the session that starts
+        # the JVM.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
@@ -85,3 +103,15 @@ def get_spark(app_name: str = "analyst_toolkit_spark", master: str | None = None
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_stats(spark: SparkSession) -> dict:
+    """Janino compiles since the JVM started (Spark's ``CodegenMetrics``,
+    JVM-wide), beside the cache size that produced them. Each call is a few
+    py4j round trips: read it when metrics are scraped, not per request."""
+    compile_ms = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    return {
+        "compiles_total": compile_ms.getCount(),
+        "compile_ms_mean": round(compile_ms.getSnapshot().getMean(), 2),
+        "cache_max_entries": int(spark.conf.get("spark.sql.codegen.cache.maxEntries")),
+    }

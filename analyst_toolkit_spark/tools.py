@@ -285,6 +285,8 @@ class Toolkit:
 
     def tool_data_health(self, **kw) -> dict:
         score = calculate_health_score(metrics_from_history(self._history))
+        # the tool status reports the call; the health colour has its own key
+        score["health_status"] = score.pop("status")
         return {"status": "pass", "module": "data_health", **score}
 
     def tool_run_history(self, limit: int = 50, **kw) -> dict:

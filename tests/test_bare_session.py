@@ -6,14 +6,18 @@ in a subprocess and checks the config-sensitive queries against DuckDB there.
 """
 
 import json
+import os
 import subprocess
 import sys
+
+#: the checkout these tests belong to, wherever it lives
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _SCRIPT = r"""
 import json, sys
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])  # the checkout root
 import __spark_entry__ as entry_mod
 from tests.oracle import compare, duckdb_con
 
@@ -44,11 +48,11 @@ print("RESULTS:" + json.dumps(results))
 
 def test_events_on_bare_session():
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT],
+        [sys.executable, "-c", _SCRIPT, ROOT],
         capture_output=True,
         text=True,
         timeout=600,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     marker = [l for l in proc.stdout.splitlines() if l.startswith("RESULTS:")]
     assert marker, f"no results marker\nstdout:{proc.stdout[-2000:]}\nstderr:{proc.stderr[-2000:]}"

@@ -4299,3 +4299,43 @@ def test_connected_components_driver_tier_matches_distributed(spark, monkeypatch
     # empty graph: no labels, either tier
     monkeypatch.setattr(D, "CC_DRIVER_TIER_MAX_EDGES", 200000)
     assert D.connected_components(spark.createDataFrame([], "id_a long, id_b long")).collect() == []
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 5])
+def test_ngrams_of_chars_matches_substr_form(spark, n):
+    """The split-once char-array form of the char n-grams yields the gram
+    multiset of the substr form, per row: astral codepoints (surrogate
+    pairs in Java strings), the empty string, strings shorter than n, and
+    null."""
+    from collections import Counter
+
+    from analyst_toolkit_spark.llm import lm as L
+
+    texts = [
+        "",
+        "a",
+        "ab",
+        "abcd",
+        "hello world hello",
+        "😀",
+        "a😀b😀c",
+        "𝔘𝔫𝔦𝔠𝔬𝔡𝔢 mix é🀄x",
+        "aaaaaa",
+        None,
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+    rows = (
+        df.select("i", "t", F.split("t", "").alias("ch"))
+        .select(
+            "i",
+            L._ngrams_of(F.col("t"), n).alias("sub"),
+            L._ngrams_of_chars(F.col("ch"), n).alias("chars"),
+        )
+        .collect()
+    )
+    assert len(rows) == len(texts)
+    for r in rows:
+        assert Counter(r["chars"] or []) == Counter(r["sub"] or []), (n, texts[r["i"]], r)
+    by_i = {r["i"]: r for r in rows}
+    assert by_i[5]["chars"] == (["😀"] if n == 1 else [])
+    assert len(by_i[6]["chars"]) == max(0, 5 - n + 1)

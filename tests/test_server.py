@@ -243,6 +243,45 @@ def test_metrics_and_ready_endpoints(toolkit):
         httpd.shutdown()
 
 
+def test_metrics_codegen_block_read_at_scrape_only(toolkit, monkeypatch):
+    """GET /metrics carries the JVM's codegen compile count and time beside
+    the codegen cache size that produced them; RPCs never read the JVM
+    counters, only a scrape does."""
+    import analyst_toolkit_spark.server as srv
+    from analyst_toolkit_spark.session import CODEGEN_CACHE_ENTRIES
+
+    reads = []
+    real = srv.codegen_stats
+    monkeypatch.setattr(srv, "codegen_stats", lambda spark: reads.append(1) or real(spark))
+    httpd = serve_http(toolkit, port=0)
+    try:
+        port = httpd.server_address[1]
+        for i in range(3):
+            body = json.dumps(
+                {"jsonrpc": "2.0", "id": i, "method": "tools/call", "params": {"name": "run_history"}}
+            ).encode()
+            urllib.request.urlopen(
+                urllib.request.Request(f"http://127.0.0.1:{port}/rpc", data=body), timeout=30
+            ).read()
+        assert reads == []
+
+        def scrape():
+            with urllib.request.urlopen(f"http://127.0.0.1:{port}/metrics", timeout=10) as r:
+                return json.loads(r.read())["codegen"]
+
+        before = scrape()
+        # a plan shape this JVM has not compiled yet
+        toolkit.spark.range(3).selectExpr("id * 918273645 + 5647382910 AS x").collect()
+        after = scrape()
+        assert reads == [1, 1]
+        assert after["cache_max_entries"] == CODEGEN_CACHE_ENTRIES
+        assert isinstance(after["compiles_total"], int)
+        assert after["compiles_total"] > before["compiles_total"]
+        assert after["compile_ms_mean"] > 0
+    finally:
+        httpd.shutdown()
+
+
 def test_metrics_auth_gated(toolkit):
     httpd = serve_http(toolkit, port=0, auth_token="sekrit")
     try:

@@ -62,6 +62,8 @@ def test_infer_auto_heal_health(toolkit, csv_path):
 
     health = toolkit.call("data_health")
     assert 0 <= health["overall_score"] <= 100
+    assert health["status"] == "pass"
+    assert health["health_status"] in ("green", "yellow", "red")
 
     hist = toolkit.call("run_history")
     assert any(e["module"] == "infer_configs" for e in hist["ledger"])
