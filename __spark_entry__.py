@@ -2017,7 +2017,7 @@ def q_lexical_cosine_pairs_docs(spark, sf):
     At sf0.1+ the ~40-term synthetic vocabulary makes this corpus
     adversarially DENSE (97.8M candidate census at sf0.1) and the default
     pair_cap census RAISES — working as designed (dedup first / raise the
-    cap deliberately, as examples/sweep_r11_100x.py does to measure the
+    cap deliberately, as the NOTES_r11.md 100x sweep does to measure the
     linear slope). The driver exercises this row at sf0.01 only."""
     docs = load_table(spark, sf, "documents")
     return L_text.tfidf_cosine_pairs(docs, threshold=0.9)

@@ -13,8 +13,6 @@ codegen'd aggregation pass; nothing here adds a scan or a shuffle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -23,26 +21,21 @@ from pyspark.sql import functions as F
 #: single-threaded final merge, memory O(distinct)) to the bounded-memory
 #: sample-bracket-then-refine path. Both are EXACT; only the execution shape
 #: differs, so the switch never changes results — it changes what survives a
-#: 100× scale-up. Override with $SPARK_GRAFT_QUANTILE_REFINE_BYTES.
-QUANTILE_REFINE_THRESHOLD_BYTES = int(
-    os.environ.get("SPARK_GRAFT_QUANTILE_REFINE_BYTES", str(4 << 30))
-)
+#: 100× scale-up.
+QUANTILE_REFINE_THRESHOLD_BYTES = 4 << 30
 
 #: Below this optimizer-estimated input size, exact quantiles collect the
 #: needed columns once over Arrow and use numpy (measured 4-6x faster than the
 #: builtin percentile aggregate at sub-100 MB scale: the aggregate's per-value
 #: hash-map update dominates tiny inputs). Identical linear interpolation.
 #: Never engages when the size is unknown or large.
-QUANTILE_DRIVER_THRESHOLD_BYTES = int(
-    os.environ.get("SPARK_GRAFT_QUANTILE_DRIVER_BYTES", str(128 << 20))
-)
+QUANTILE_DRIVER_THRESHOLD_BYTES = 128 << 20
 
 #: Row cap backstopping the driver tier against optimizer mis-estimates: a
 #: column-free count() guard runs BEFORE any collect, so driver memory stays
 #: bounded even if plan bytes lied (zero rows collected on overflow);
 #: overflow falls back to the builtin aggregate (same exact results).
-#: Override with $SPARK_GRAFT_QUANTILE_DRIVER_ROWS.
-QUANTILE_DRIVER_MAX_ROWS = int(os.environ.get("SPARK_GRAFT_QUANTILE_DRIVER_ROWS", "4000000"))
+QUANTILE_DRIVER_MAX_ROWS = 4_000_000
 
 # Catalyst reports defaultSizeInBytes (~Long.MaxValue) when it has no stats —
 # an in-memory test relation, not a 8-EiB table. Treat those as "unknown".

@@ -159,13 +159,8 @@ MAX_BUCKET = 1000
 #: (localCheckpoint) instead of re-deriving it for the census AND the hit
 #: join; above it (or unknown, which is NOT small) the recompute form stands
 #: — the stream is a multiple of the text bytes and would become
-#: hundreds-of-TB executor spill at corpus scale. Override via env for
-#: clusters with generous local disk.
-import os as _os
-
-SPAN_GRAM_CUT_MAX_INPUT_BYTES = int(
-    _os.environ.get("SPARK_GRAFT_SPAN_CUT_MAX_BYTES", str(4 << 30))
-)
+#: hundreds-of-TB executor spill at corpus scale.
+SPAN_GRAM_CUT_MAX_INPUT_BYTES = 4 << 30
 
 #: r16 — driver union-find tier for :func:`connected_components`: edge
 #: graphs at or below this DISTINCT-edge count skip the distributed
@@ -179,9 +174,7 @@ SPAN_GRAM_CUT_MAX_INPUT_BYTES = int(
 #: the cap (or with a durable ``checkpoint_dir``, the 100 TB posture) the
 #: distributed fixpoint runs exactly as before. Data-size-adaptive, not a
 #: core-count tune; 0 disables.
-CC_DRIVER_TIER_MAX_EDGES = int(
-    _os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", "200000")
-)
+CC_DRIVER_TIER_MAX_EDGES = 200_000
 
 
 def _union_find_labels(edge_rows):
@@ -1384,10 +1377,7 @@ def dedup_representatives(
 #: path abandons pair materialization (output-bound: the r6 100×-duplication
 #: sweep measured 159.6 s for ~25M pairs on a 500k-doc corpus) for the
 #: linear bucket-components + star-verify path (63.7 s on the same corpus).
-#: Override with $SPARK_GRAFT_NEARDUP_PAIR_CAP.
-import os as _os
-
-NEARDUP_PAIR_CAP = int(_os.environ.get("SPARK_GRAFT_NEARDUP_PAIR_CAP", "5000000"))
+NEARDUP_PAIR_CAP = 5_000_000
 
 
 def candidate_pair_census(

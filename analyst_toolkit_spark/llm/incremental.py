@@ -28,8 +28,6 @@ an index written by one engine version probes identically in the next.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,7 +46,7 @@ META_FILE = "meta.json"
 #: the batch's fps inline as an isin predicate (directory + row-group
 #: pruning, no join); above it the probe joins. Bounded driver memory:
 #: the tier decision collects at most this many+1 (fp, prefix) rows.
-PROBE_ISIN_MAX = int(os.environ.get("SPARK_GRAFT_PROBE_ISIN_MAX", "1024"))
+PROBE_ISIN_MAX = 1024
 
 
 def _fingerprints(df: DataFrame, key: str, id_col: str, prefix_width: int = 2) -> DataFrame:
@@ -444,7 +442,7 @@ def near_probe(
 
 #: bucket-count ceiling for the point-lookup probe tier (isin directory
 #: pruning); a batch touching more distinct buckets probes by join.
-SEM_PROBE_ISIN_MAX = int(os.environ.get("SPARK_GRAFT_SEM_PROBE_ISIN_MAX", "1024"))
+SEM_PROBE_ISIN_MAX = 1024
 
 
 def semantic_index_write(
@@ -671,7 +669,7 @@ BM25_TERM_BUCKETS = 64
 #: Distinct-term ceiling for a probe workload: the pruned scan inlines the
 #: term set as an isin predicate (directory pruning on the bucket column +
 #: row-group skipping on term min/max), so the set must stay plan-sized.
-BM25_PROBE_MAX_TERMS = int(os.environ.get("SPARK_GRAFT_BM25_PROBE_MAX_TERMS", "4096"))
+BM25_PROBE_MAX_TERMS = 4096
 
 
 def _bm25_bucket(term, n_buckets: int):

@@ -10,8 +10,6 @@ mirroring ``functions.stats.quantile_strategy``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 from analyst_toolkit_spark.functions.stats import plan_row_estimate, plan_size_bytes
@@ -19,8 +17,8 @@ from analyst_toolkit_spark.functions.stats import plan_row_estimate, plan_size_b
 #: Above this optimizer-estimated input size, "auto" pair operators switch
 #: from the exact all-pairs plan to the bucketed (LSH/banded) plan. All-pairs
 #: work grows with the SQUARE of input size, so this gate is much lower than
-#: the quantile gates. Override with $SPARK_GRAFT_ALLPAIRS_BYTES.
-ALLPAIRS_THRESHOLD_BYTES = int(os.environ.get("SPARK_GRAFT_ALLPAIRS_BYTES", str(64 << 20)))
+#: the quantile gates.
+ALLPAIRS_THRESHOLD_BYTES = 64 << 20
 
 #: Row ceiling for the exact all-pairs tier. Bytes alone are NOT a safe gate
 #: for O(n²) work: 5k short documents fit in a few MB of parquet yet make
@@ -29,7 +27,7 @@ ALLPAIRS_THRESHOLD_BYTES = int(os.environ.get("SPARK_GRAFT_ALLPAIRS_BYTES", str(
 #: 2k embedding rows still meant 4M cosine pairs at 32.6 s). When the byte
 #: gate passes, a column-free count() confirms the row count; that one
 #: cheap scan is noise next to the quadratic job it prevents.
-ALLPAIRS_MAX_EXACT_ROWS = int(os.environ.get("SPARK_GRAFT_ALLPAIRS_ROWS", "1500"))
+ALLPAIRS_MAX_EXACT_ROWS = 1500
 
 
 def ensure_parallelism(df: DataFrame, target: int | None = None) -> DataFrame:

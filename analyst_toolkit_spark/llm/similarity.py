@@ -11,7 +11,6 @@ At 100 TB the corpus side stays partitioned by bucket; queries broadcast.
 
 from __future__ import annotations
 
-import os as _os
 import random
 
 import pandas as pd
@@ -839,7 +838,7 @@ def ivf_probe(
        is a broadcast by construction.
 
     Raw tier + refine = exactly a wider probe (scoring is already exact).
-    Measured (examples/sweep_r12_refine.py, 20k vectors, nlist=16,
+    Measured (NOTES_r12.md, 20k vectors, nlist=16,
     boundary-straddling queries): recall@10 0.58-0.66 at nprobe=4 →
     >= 0.9 for all three tiers at refine_factor=4.
     """
@@ -1269,7 +1268,7 @@ def ivf_probe_many(
     grid's 7 collects), wrong for a production retrieval workload. Past a
     few hundred queries use :func:`ivf_probe_join` — the same per-query
     results from ONE fixed-shape plan (measured at sf0.1: 64.6 s vs 2.3 s
-    at 200 queries, examples/sweep_r14_probe_join.py).
+    at 200 queries, PLANS.md; a rerun in NOTES_r14.md: 37.5 s vs 2.6 s).
     """
     if not queries:
         raise ValueError("ivf_probe_many: empty query list")
@@ -1417,8 +1416,8 @@ def ivf_probe_join(
 
     Cost shape at 100 TB: plan size is O(nlist x dim + m x 2^nbits), NOT
     O(|queries|); one scan + one join + the two bounded ranking exchanges
-    regardless of workload size (examples/sweep_r14_probe_join.py measures
-    flat-vs-linear against the union form).
+    regardless of workload size (NOTES_r14.md records the flat-vs-linear
+    sweep against the union form).
     """
     import math
 
@@ -1856,10 +1855,11 @@ DECON_BENCH_MAX_CELLS = 262144
 #: multiply-adds per corpus row are exactly the work profile §4.2 is about
 #: (HOF lambdas are not whole-stage-codegen'd — measured 6.3 s -> 0.6 s on
 #: the sf0.1 curate_semantic_decon corpus, identical doubles BIT-FOR-BIT,
-#: see :func:`_bench_dots_fn`). The env seam (0 disables) keeps the pure-JVM
-#: fold available for deployments that must not run Python workers in this
-#: path; results are identical either way.
-DECON_VECTORIZED = _os.environ.get("SPARK_GRAFT_DECON_VECTORIZED", "1") != "0"
+#: see :func:`_bench_dots_fn`). The flag exists only so the bit-identity
+#: test (``tests/test_llm.py::test_semantic_decon_vectorized_matches_jvm_fold``)
+#: can set it False and run the pure-JVM ``F.aggregate`` + ``zip_with`` fold
+#: as the reference; the engine always runs the kernel.
+DECON_VECTORIZED = True
 
 
 def _bench_values(rows: list, vec_col: str) -> tuple[list[list[float]], list[float], int]:
@@ -1996,7 +1996,7 @@ def semantic_decontaminate(
     (``DECON_VECTORIZED``, guide §4.2 — the |bench|×dim multiply-adds per
     row ran ~10x slower as interpreted per-element HOF expressions,
     measured at sf0.1), bit-identical by construction to the pure-JVM
-    ``F.aggregate`` + ``zip_with`` fold that remains behind the env seam
+    ``F.aggregate`` + ``zip_with`` fold kept as the test reference
     (see :func:`_bench_dots_fn` for the identity argument).
 
     Returns the full corpus row set plus ``max_bench_cosine`` (double,
@@ -2097,8 +2097,8 @@ def semantic_decon_exposure(
     Plan shape at 100 TB (same contract as the forward literal tier): the
     benchmark ships with the scan; each corpus row becomes (index, cosine)
     pairs (the O(|bench|×dim) dot products in the vectorized Arrow kernel
-    when ``DECON_VECTORIZED``, the per-element HOF fold behind the env
-    seam — identical doubles, see :func:`_bench_dots_fn`), FILTERS to hits
+    when ``DECON_VECTORIZED``, else the per-element HOF fold the test uses
+    as reference — identical doubles, see :func:`_bench_dots_fn`), FILTERS to hits
     map-side, and only the surviving (index, cosine) pairs — normally a
     sliver — explode into the one keyed aggregation over
     <= ``max_benchmark`` groups. Corpus row

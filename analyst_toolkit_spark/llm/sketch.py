@@ -76,7 +76,7 @@ def kmv_sketch(
     # VALUES) and drops adjacent duplicates via lag over the same window
     # spec (no extra sort) — output identical to the old
     # distinct-on-(grp,hex) construction on every input, collisions
-    # included. Measured (examples/prof_r15_kmv.py): the distinct stage
+    # included. Measured (OPTIMIZATION_r15.md): the distinct stage
     # 1.50 -> 1.22 s at sf0.1; the rejected one-shuffle dense_rank-only
     # form (no gram distinct) shuffled the full occurrence stream and
     # measured no win (2.16 vs 2.03 s).

@@ -12,8 +12,6 @@ n-gram heuristic).
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -24,9 +22,7 @@ from pyspark.sql import functions as F
 #: estimate is unknown, which is NOT small) the recompute form stands. Same
 #: spill math as dedup.SPAN_GRAM_CUT_MAX_INPUT_BYTES. (r16: hoisted here
 #: from the vocabulary section, r15 ADVICE.)
-TOKEN_STAT_CUT_MAX_INPUT_BYTES = int(
-    _os.environ.get("SPARK_GRAFT_TOKEN_STAT_CUT_MAX_INPUT_BYTES", str(4 * 1024**3))
-)
+TOKEN_STAT_CUT_MAX_INPUT_BYTES = 4 * 1024**3
 
 
 def token_count(col: str | Column) -> Column:

@@ -24,7 +24,6 @@ Spark design notes:
 from __future__ import annotations
 
 import difflib
-import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -33,16 +32,13 @@ SQL_NULL_SENTINEL = "null"
 
 #: Above this optimizer-estimated input size, fuzzy correction's "auto" mode
 #: stops collecting distinct values to the driver and routes to the fully
-#: in-plan distributed map (mirrors llm/scale.py pair_strategy). Override
-#: with $SPARK_GRAFT_FUZZY_DRIVER_BYTES.
-FUZZY_DRIVER_THRESHOLD_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FUZZY_DRIVER_BYTES", str(256 << 20))
-)
+#: in-plan distributed map (mirrors llm/scale.py pair_strategy).
+FUZZY_DRIVER_THRESHOLD_BYTES = 256 << 20
 
 #: Hard cap on distinct values build_fuzzy_map will collect; beyond it the
 #: driver map would be unbounded — callers are pointed at the distributed
 #: variant instead of silently OOM-ing the driver.
-FUZZY_MAX_DISTINCT = int(os.environ.get("SPARK_GRAFT_FUZZY_MAX_DISTINCT", "100000"))
+FUZZY_MAX_DISTINCT = 100_000
 
 
 def fuzzy_strategy(df: DataFrame) -> str:

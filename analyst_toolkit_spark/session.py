@@ -1,9 +1,10 @@
-"""SparkSession factory with scale-aware defaults.
+"""SparkSession factory.
 
-Local test posture: one JVM, ``local[N]`` threads. Cluster posture: the same
-configs are the ones that matter at 1000 executors — AQE for runtime shuffle
-re-planning and skew-join splitting, Arrow for every Python<->JVM hop,
-partition-size caps so a 100 TB scan yields sane tasks.
+:func:`get_spark` sets only the confs whose value differs from Spark's own
+default or depends on the host; everything else (AQE and its partition
+coalescing and skew-join splitting, the advisory and file-split partition
+sizes, parquet filter pushdown, the lz4 I/O codec, the streaming state-store
+provider) runs on Spark's defaults, which ``tests/test_session_conf.py`` pins.
 """
 
 from __future__ import annotations
@@ -20,9 +21,27 @@ CODEGEN_CACHE_ENTRIES = 1024
 def get_spark(app_name: str = "analyst_toolkit_spark", master: str | None = None) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``). The
-    shuffle-partition default tracks core count locally; on a real cluster AQE
-    coalesces from the configured initial number, so oversizing is harmless.
+    Confs set, and why each differs from Spark's default:
+
+    - ``spark.sql.shuffle.partitions``: the core count (at least 8), 32 when
+      ``SPARK_GRAFT_CPUS`` is unset; Spark's 200 makes hundreds of tiny tasks
+      per shuffle at local scale. On a cluster AQE coalesces from it.
+    - ``spark.sql.session.timeZone=UTC``: Spark takes the host's zone, so
+      timestamp parsing and rendering would vary by host.
+    - ``spark.sql.execution.arrow.pyspark.enabled``: off by default; every
+      Python<->JVM hop (``toPandas``, ``createDataFrame``) goes over Arrow.
+    - ``spark.sql.legacy.parquet.nanosAsLong``: nanosecond parquet
+      timestamps (e.g. pandas-written event streams) read as long, which
+      ``ingest.load_table`` converts to µs timestamps; Spark fails on them.
+    - ``spark.sql.codegen.cache.maxEntries``: :data:`CODEGEN_CACHE_ENTRIES`
+      instead of 100 (see the comment at its use).
+    - ``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` (default ``8g``)
+      instead of 1g; the driver tiers collect bounded frames.
+    - ``spark.ui.enabled=false``: no web UI thread or port for a library.
+    - ``-Djava.net.preferIPv4Stack=true``: the JVM otherwise may bind IPv6
+      on hosts without a working IPv6 loopback.
+
+    ``SPARK_GRAFT_CPUS`` sets local parallelism (default ``*``, every core).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
@@ -31,57 +50,9 @@ def get_spark(app_name: str = "analyst_toolkit_spark", master: str | None = None
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", n_shuffle)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE post-shuffle sizing seam (r16, r15 VERDICT #7): with
-        # parallelismFirst=true (Spark's default, kept here) AQE refuses to
-        # coalesce below the core count even when the data is tiny — the
-        # measured cause of the sub-1.0 8-vs-32-core ratios on the smallest
-        # bench rows. false sizes post-shuffle partitions purely by data
-        # (advisoryPartitionSizeInBytes), the scale-adaptive posture Spark's
-        # own docs recommend for production. Both are env-flippable; see
-        # OPTIMIZATION_r16.md for the measured trade at sf0.1.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_AQE_ADVISORY_BYTES", "64m"),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        # nanosecond parquet timestamps (e.g. pandas-written event streams)
-        # read as long; ingest.load_table converts them to µs timestamps
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.files.maxPartitionBytes", "128m")
-        # Shuffle/spill/broadcast codec (guide §2.3): lz4 default keeps the
-        # bench comparable across rounds; at cluster scale zstd usually
-        # trades a little CPU for markedly fewer shuffle bytes — flip via
-        # env and MEASURE (sf0.1 shuffles are KBs, so only a quiet-host A/B
-        # at real scale can justify changing the default).
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
-        # Streaming state-store provider seam (r16, r15 VERDICT #4): measured
-        # A/B at sf0.1 (3 interleaved runs per row, examples/prof_r16_rocksdb)
-        # put RocksDB inside the HDFSBacked provider's spread on all three
-        # stream-join rows — state there is KBs, so provider overhead is the
-        # whole cost either way. At production state sizes RocksDB is the
-        # documented choice (bounded JVM heap, changelog checkpointing):
-        # flip via env and measure micro-batch latency there. Default stays
-        # Spark's own default so stream bench rows remain comparable.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            os.environ.get(
-                "SPARK_GRAFT_STATE_STORE_PROVIDER",
-                "org.apache.spark.sql.execution.streaming.state."
-                "HDFSBackedStateStoreProvider",
-            ),
-        )
         # Generated-code reuse. Spark keeps Janino-compiled classes in one
         # JVM-wide LRU keyed by the generated source; the engine re-plans the
         # same shapes on every tool call and curate pass, so a cache smaller
