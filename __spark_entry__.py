@@ -95,27 +95,12 @@ _QSTATS_MEMO: dict[tuple, dict[str, dict]] = {}
 
 
 def _shared_qstats(spark, sf: str, table: str, cols: tuple[str, ...]) -> dict[str, dict]:
-    from analyst_toolkit_spark.functions.stats import (
-        percentile_exact,
-        quantile_strategy,
-        quantiles_driver,
-    )
+    from analyst_toolkit_spark.functions.stats import collect_stats, quantile_stats
 
     key = (sf, table, cols)
     if key not in _QSTATS_MEMO:
         df = load_table(spark, sf, table)
-        if quantile_strategy(df) == "driver":
-            qs, mm = quantiles_driver(df, {c: [0.25, 0.5, 0.75] for c in cols}, minmax=True)
-            _QSTATS_MEMO[key] = {
-                c: {"q": qs[c], "min": mm[c][0], "max": mm[c][1]} for c in cols
-            }
-            return _QSTATS_MEMO[key]
-        aggs = []
-        for c in cols:
-            aggs.append(percentile_exact(F.col(c), [0.25, 0.5, 0.75]).alias(f"q::{c}"))
-            aggs.append(F.min(c).alias(f"min::{c}"))
-            aggs.append(F.max(c).alias(f"max::{c}"))
-        row = df.agg(*aggs).first()
+        row = collect_stats(df, quantile_stats(df, {c: [0.25, 0.5, 0.75] for c in cols}, minmax=True))
         _QSTATS_MEMO[key] = {
             c: {
                 "q": [float(x) for x in row[f"q::{c}"]],

@@ -13,8 +13,11 @@ codegen'd aggregation pass; nothing here adds a scan or a shuffle.
 
 from __future__ import annotations
 
+from typing import Any
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 #: Above this optimizer-estimated input size, ``quantile_strategy`` switches
 #: exact quantiles from the builtin ``percentile`` aggregate (value→count map,
@@ -34,7 +37,7 @@ QUANTILE_DRIVER_THRESHOLD_BYTES = 128 << 20
 #: Row cap backstopping the driver tier against optimizer mis-estimates: a
 #: column-free count() guard runs BEFORE any collect, so driver memory stays
 #: bounded even if plan bytes lied (zero rows collected on overflow);
-#: overflow falls back to the builtin aggregate (same exact results).
+#: overflow falls through to the refined tier (same exact results).
 QUANTILE_DRIVER_MAX_ROWS = 4_000_000
 
 # Catalyst reports defaultSizeInBytes (~Long.MaxValue) when it has no stats —
@@ -78,9 +81,7 @@ def plan_row_estimate(df: DataFrame) -> int:
     return -1
 
 
-def quantile_strategy(
-    df: DataFrame, exact: bool = True, threshold_bytes: int | None = None
-) -> str:
+def quantile_strategy(df: DataFrame, exact: bool = True) -> str:
     """Pick the quantile execution shape for this frame's size:
 
     - ``"approx"``  — caller asked for ``exact=False``: t-digest sketch,
@@ -91,9 +92,10 @@ def quantile_strategy(
     - ``"builtin"`` — exact ``percentile`` aggregate. Right in the middle:
       one fused agg pass, but its final merge is single-threaded and memory
       is O(distinct values).
-    - ``"refined"`` — ``exact_quantiles_refined``: 3 bounded passes whose
-      memory is O(bracket), independent of table size. Same exact results;
-      the shape that survives 100 TB.
+    - ``"refined"`` — ``exact_quantiles_refined``: four bounded passes (a
+      count, a sample agg, a rank agg and a bracket collect) whose memory is
+      O(bracket), independent of table size. Same exact results; the shape
+      that survives 100 TB.
 
     All three exact tiers return identical linearly-interpolated values —
     the choice is purely an execution-shape choice. Unknown plan size
@@ -103,9 +105,8 @@ def quantile_strategy(
     """
     if not exact:
         return "approx"
-    thr = QUANTILE_REFINE_THRESHOLD_BYTES if threshold_bytes is None else threshold_bytes
     size = plan_size_bytes(df)
-    if 0 <= thr <= size:
+    if 0 <= QUANTILE_REFINE_THRESHOLD_BYTES <= size:
         return "refined"
     if 0 <= size <= QUANTILE_DRIVER_THRESHOLD_BYTES:
         return "driver"
@@ -113,10 +114,12 @@ def quantile_strategy(
 
 
 def collect_driver_bounded(df: DataFrame, cols: list[str]):
-    """Bounded driver collect for the small-input tiers: a column-free
-    ``count()`` guard first (nothing is collected at all when the optimizer
-    mis-estimated and the frame exceeds ``QUANTILE_DRIVER_MAX_ROWS``), then a
-    plain parallel ``toPandas``. Returns the pandas frame or None on overflow.
+    """The driver tier's bounded collect: None unless ``quantile_strategy``
+    picks the driver tier for this frame (the one size gate every driver-side
+    shortcut shares). Then a column-free ``count()`` guard (nothing is
+    collected at all when the optimizer mis-estimated and the frame exceeds
+    ``QUANTILE_DRIVER_MAX_ROWS``), then a plain parallel ``toPandas``.
+    Returns the pandas frame or None.
 
     Why not ``limit(cap+1).toPandas()`` (the previous guard): a global limit
     plans as CollectLimitExec — a serial, single-task collection — measured
@@ -126,91 +129,86 @@ def collect_driver_bounded(df: DataFrame, cols: list[str]):
     zero rows when over budget. The count scan is column-free (Catalyst
     prunes every column), so it reads parquet metadata + row existence only.
     """
-    if df.count() > QUANTILE_DRIVER_MAX_ROWS:
+    if quantile_strategy(df) != "driver" or df.count() > QUANTILE_DRIVER_MAX_ROWS:
         return None
     return df.select(*cols).toPandas()
 
 
-def quantiles_driver(
-    df: DataFrame, cols_ps: dict[str, list[float]], minmax: bool = False, nunique: bool = False
-):
-    """Exact quantiles for TINY inputs: collect the needed columns once over
-    Arrow, ``np.quantile`` (linear interpolation — same formula as the
-    builtin aggregate and pandas) per column. Gated by ``quantile_strategy``
-    behind ``QUANTILE_DRIVER_THRESHOLD_BYTES``.
+def _nan_as_null(df: DataFrame, col: str) -> Column:
+    """``col`` with NaN read as missing in float/double columns — what pandas
+    (and so the driver tier) does. Spark's aggregates otherwise count NaN as a
+    value that sorts above +inf."""
+    c = F.col(col)
+    if isinstance(df.schema[col].dataType, (T.FloatType, T.DoubleType)):
+        return F.when(~F.isnan(c), c)
+    return c
 
-    Mis-estimate guard: the plan-bytes gate trusts the optimizer, and parquet
-    bytes under-estimate in-memory pandas footprint (dictionary-encoded
-    strings, many columns). The collect therefore goes through
-    ``collect_driver_bounded`` — a column-free count guard, so memory stays
-    bounded no matter how wrong the estimate was (zero rows collected on
-    overflow) — and on overflow the function silently computes the same
-    answer with the distributed builtin aggregate instead. Either way the
-    caller gets exact results from one call.
 
-    Returns ``{col: [q...]}``; with ``minmax`` and/or ``nunique`` set, a tuple
-    appending ``{col: (min, max)}`` and/or ``{col: distinct_count}`` (pandas
-    ``nunique`` — null-excluding, same as ``countDistinct``) computed from the
-    same single collect. All-null columns yield ``[None, ...]`` / ``(None, None)``.
+def quantile_stats(
+    df: DataFrame, cols_ps: dict[str, list[float]], exact: bool = True, minmax: bool = False
+) -> dict[str, Any]:
+    """Quantiles (and with ``minmax`` the min and max) of each column, on the
+    tier ``quantile_strategy`` picks. The only place that branches on a tier.
+
+    Returns ``{"q::<col>": [q, ...]}`` plus ``"min::<col>"``/``"max::<col>"``.
+    A value is either already computed (driver and refined tiers; ``None``
+    entries for an all-null column) or an aggregate Column (builtin and
+    approx tiers, and min/max on the refined tier). The caller runs those
+    Columns inside its own single ``df.agg`` (see :func:`collect_stats`), so
+    no tier adds a scan or a job to the caller's pass. NaN in float/double
+    columns counts as missing on every tier.
+
+    When the driver tier's row cap trips (an optimizer mis-estimate), the
+    answer comes from the refined tier: such an input sits exactly where the
+    builtin's single-threaded value→count merge is slowest (measured 7-11 s
+    builtin vs 3-4.6 s refined on a 6M-row column).
     """
+    if not cols_ps:
+        return {}
+    tier = quantile_strategy(df, exact)
+    if tier == "driver":
+        pdf = collect_driver_bounded(df, list(cols_ps))
+        if pdf is not None:
+            return _driver_stats(pdf, cols_ps, minmax)
+        tier = "refined"
+    out: dict[str, Any] = {}
+    if tier == "refined":
+        out = {f"q::{c}": q for c, q in exact_quantiles_refined(df, cols_ps).items()}
+    for c, ps in cols_ps.items():
+        v = _nan_as_null(df, c)
+        if tier == "builtin":
+            out[f"q::{c}"] = percentile_exact(v, ps)
+        elif tier == "approx":
+            out[f"q::{c}"] = F.percentile_approx(v, F.array(*[F.lit(p) for p in ps]), 10000)
+        if minmax:
+            out[f"min::{c}"] = F.min(v)
+            out[f"max::{c}"] = F.max(v)
+    return out
+
+
+def _driver_stats(pdf, cols_ps: dict[str, list[float]], minmax: bool) -> dict[str, Any]:
+    """quantile_stats on the collected frame: ``np.quantile`` (linear
+    interpolation — same formula as the builtin aggregate and pandas)."""
     import numpy as np
 
-    pdf = collect_driver_bounded(df, list(cols_ps))
-    if pdf is None:
-        return _quantiles_builtin_fallback(df, cols_ps, minmax, nunique)
-    out: dict[str, list] = {}
-    mm: dict[str, tuple] = {}
-    nu: dict[str, int] = {}
+    out: dict[str, Any] = {}
     for c, ps in cols_ps.items():
-        series = pdf[c].dropna()
-        nu[c] = int(series.nunique())
-        vals = series.to_numpy(dtype=float)
-        if vals.size == 0:
-            out[c] = [None] * len(ps)
-            mm[c] = (None, None)
-        else:
-            out[c] = [float(x) for x in np.quantile(vals, ps)]
-            mm[c] = (float(vals.min()), float(vals.max()))
-    result: tuple = (out,)
-    if minmax:
-        result += (mm,)
-    if nunique:
-        result += (nu,)
-    return result if len(result) > 1 else out
+        vals = pdf[c].dropna().to_numpy(dtype=float)
+        empty = vals.size == 0
+        out[f"q::{c}"] = [None] * len(ps) if empty else [float(x) for x in np.quantile(vals, ps)]
+        if minmax:
+            out[f"min::{c}"] = None if empty else float(vals.min())
+            out[f"max::{c}"] = None if empty else float(vals.max())
+    return out
 
 
-def _quantiles_builtin_fallback(
-    df: DataFrame, cols_ps: dict[str, list[float]], minmax: bool, nunique: bool
-):
-    """quantiles_driver's overflow path: same result shape, distributed.
-
-    Quantiles go through :func:`exact_quantiles_refined`, NOT the builtin
-    ``percentile`` aggregate: an input that tripped the row guard (>4M rows)
-    sits exactly where the builtin's single-threaded value→count merge is
-    slowest — measured 7-11 s builtin vs 3-4.6 s refined on a 6M-row column
-    (the round-5 10× scale sweep caught outlier bounds hitting this path at
-    45× the sf0.1 latency). min/max add one fused agg; countDistinct stays
-    a separate agg on purpose — fusing it would trigger Catalyst's EXPAND
-    rewrite (see operators/profile.py). Results are identical across tiers.
-    """
-    out = dict(exact_quantiles_refined(df, {c: [float(p) for p in ps] for c, ps in cols_ps.items()}))
-    mm = {}
-    if minmax:
-        aggs = []
-        for c in cols_ps:
-            aggs.append(F.min(c).alias(f"mn_{c}"))
-            aggs.append(F.max(c).alias(f"mx_{c}"))
-        row = df.agg(*aggs).first()
-        for c in cols_ps:
-            mn, mx = row[f"mn_{c}"], row[f"mx_{c}"]
-            mm[c] = (None, None) if mn is None else (float(mn), float(mx))
-    result: tuple = (out,)
-    if minmax:
-        result += (mm,)
-    if nunique:
-        nu_row = df.agg(*[F.countDistinct(c).alias(c) for c in cols_ps]).first()
-        result += ({c: int(nu_row[c]) for c in cols_ps},)
-    return result if len(result) > 1 else out
+def collect_stats(df: DataFrame, stats: dict[str, Any], *aggs: Column) -> dict[str, Any]:
+    """Run the aggregate Columns of a :func:`quantile_stats` result and the
+    caller's own aliased ``aggs`` in ONE ``df.agg`` (no job when there is
+    nothing to aggregate). Returns every statistic by name."""
+    pending = [v.alias(k) for k, v in stats.items() if isinstance(v, Column)] + list(aggs)
+    row = df.agg(*pending).first().asDict() if pending else {}
+    return {**stats, **row}
 
 
 def skewness_g1(col: str | Column) -> Column:
@@ -255,7 +253,6 @@ def percentile_exact(col: str | Column, p: float | list[float]) -> Column:
 def exact_quantiles_refined(
     df: DataFrame,
     cols_ps: dict[str, list[float]],
-    accuracy: int = 10_000,
     max_bracket: int = 4_000_000,
 ) -> dict[str, list[float]]:
     """EXACT linearly-interpolated quantiles via sample-bracket-then-refine.
@@ -274,15 +271,15 @@ def exact_quantiles_refined(
          a 4× wider bracket, so correctness never rests on the sample.
 
     All passes are map-side-combinable aggs batched over all columns. Returns
-    {col: [q for each p]} (None where the column is all-null). ``accuracy`` is
-    kept for API compatibility with the sketch-based fast path and bounds the
-    error message threshold only.
+    {col: [q for each p]} (None where the column is all-null). NaN counts as
+    missing, as in pandas: the counts and the sample skip it, and it sorts
+    above every bracket.
     """
     todo = {c: list(ps) for c, ps in cols_ps.items() if ps}
     results: dict[str, list[float]] = {c: [None] * len(ps) for c, ps in cols_ps.items()}
 
     # pass 0: non-null counts (needed for rank targets regardless of method)
-    count_row = df.agg(*[F.count(F.col(c)).alias(c) for c in todo]).first()
+    count_row = df.agg(*[F.count(_nan_as_null(df, c)).alias(c) for c in todo]).first()
     counts = {c: int(count_row[c] or 0) for c in todo}
     for c in [c for c, n in counts.items() if n == 0]:
         todo.pop(c)  # all-null column: result stays None
@@ -305,7 +302,7 @@ def exact_quantiles_refined(
         aggs = []
         for c, ps in todo.items():
             qs = [max(0.0, p - delta) for p in ps] + [min(1.0, p + delta) for p in ps]
-            aggs.append(percentile_exact(F.col(c), qs).alias(f"b::{c}"))
+            aggs.append(percentile_exact(_nan_as_null(sdf, c), qs).alias(f"b::{c}"))
         row1 = sdf.agg(*aggs).first()
         brackets: dict[str, tuple[float, float, int]] = {}
         for c, ps in list(todo.items()):

@@ -62,10 +62,8 @@ def _column_stats_driver(df: DataFrame, cols: list[str]) -> list[dict] | None:
     is not known-small, a column type is non-atomic, or the row cap trips."""
     from pyspark.sql import types as T
 
-    from analyst_toolkit_spark.functions.stats import collect_driver_bounded, quantile_strategy
+    from analyst_toolkit_spark.functions.stats import collect_driver_bounded
 
-    if quantile_strategy(df) != "driver":
-        return None
     atomic = {f.name for f in df.schema.fields if isinstance(f.dataType, T.AtomicType)}
     if any(c not in atomic for c in cols):
         return None

@@ -19,12 +19,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from analyst_toolkit_spark.functions.stats import (
-    exact_quantiles_refined,
-    percentile_exact,
-    quantile_strategy,
-    quantiles_driver,
-)
+from analyst_toolkit_spark.functions.stats import collect_stats, quantile_stats
 
 
 @dataclass
@@ -107,31 +102,12 @@ def impute(df: DataFrame, specs: list[ImputeSpec], exact: bool = True):
     median_cols = [s.column for s in specs if s.strategy == "median"]
     mode_cols = [s.column for s in specs if s.strategy == "mode"]
 
-    fills: dict[str, Any] = {}
-    refined: dict[str, list[float]] = {}
-    if median_cols:
-        strategy = quantile_strategy(df, exact=exact)
-        if strategy == "refined":
-            refined = exact_quantiles_refined(df, {c: [0.5] for c in median_cols})
-        elif strategy == "driver":
-            refined = quantiles_driver(df, {c: [0.5] for c in median_cols})
-    aggs = []
-    for c in mean_cols:
-        aggs.append(F.avg(F.col(c)).alias(f"mean::{c}"))
+    qstats = quantile_stats(df, {c: [0.5] for c in median_cols}, exact)
+    row = collect_stats(df, qstats, *[F.avg(F.col(c)).alias(f"mean::{c}") for c in mean_cols])
+    fills: dict[str, Any] = {c: row[f"mean::{c}"] for c in mean_cols}
     for c in median_cols:
-        if c in refined:
-            continue
-        stat = percentile_exact(F.col(c), 0.5) if exact else F.percentile_approx(F.col(c), 0.5, 10000)
-        aggs.append(stat.alias(f"median::{c}"))
-    if aggs:
-        row = df.agg(*aggs).collect()[0]
-        for c in mean_cols:
-            fills[c] = row[f"mean::{c}"]
-        for c in median_cols:
-            if c not in refined:
-                fills[c] = row[f"median::{c}"]
-    for c, q in refined.items():
-        fills[c] = q[0]
+        q = row[f"q::{c}"]
+        fills[c] = q[0] if q else None
     fills.update(mode_values(df, mode_cols))
     for s in specs:
         if s.strategy == "constant":

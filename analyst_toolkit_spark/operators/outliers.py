@@ -24,10 +24,9 @@ from pyspark.sql import functions as F
 
 from analyst_toolkit_spark.functions.stats import (
     any_horizontal,
-    exact_quantiles_refined,
+    collect_stats,
     percentile_exact,
-    quantile_strategy,
-    quantiles_driver,
+    quantile_stats,
 )
 
 
@@ -42,41 +41,24 @@ class OutlierSpec:
 def compute_bounds(df: DataFrame, specs: list[OutlierSpec], exact: bool = True) -> dict[str, tuple[float, float]]:
     """column -> (lower, upper) bound, all specs in one aggregation pass.
 
-    Above ``QUANTILE_REFINE_THRESHOLD_BYTES`` of estimated input the IQR
-    quartiles come from the bounded-memory refine path instead of the builtin
-    ``percentile`` aggregate (same exact values — see
-    ``functions.stats.quantile_strategy``); mean/stddev for z-score specs stay
-    in a plain streaming agg either way.
+    IQR quartiles come from ``functions.stats.quantile_stats``, whose tier
+    follows the input size (every exact tier gives the same values);
+    mean/stddev for z-score specs ride the same agg.
     """
-    strategy = quantile_strategy(df, exact=exact)
-    refined: dict[str, list[float]] = {}
-    iqr_cols = {s.column: [0.25, 0.75] for s in specs if s.method == "iqr"}
-    if iqr_cols and strategy == "refined":
-        refined = exact_quantiles_refined(df, iqr_cols)
-    elif iqr_cols and strategy == "driver":
-        refined = quantiles_driver(df, iqr_cols)
     aggs = []
     for s in specs:
         c = F.col(s.column)
-        if s.method == "iqr":
-            if s.column in refined:
-                continue
-            if exact:
-                aggs.append(percentile_exact(c, [0.25, 0.75]).alias(f"{s.column}__q"))
-            else:
-                aggs.append(
-                    F.percentile_approx(c, F.array(F.lit(0.25), F.lit(0.75)), 10000).alias(f"{s.column}__q")
-                )
-        elif s.method == "zscore":
+        if s.method == "zscore":
             aggs.append(F.avg(c).alias(f"{s.column}__mean"))
             aggs.append(F.stddev_samp(c).alias(f"{s.column}__std"))
-        else:
+        elif s.method != "iqr":
             raise ValueError(f"unknown outlier method {s.method!r}")
-    row = df.agg(*aggs).collect()[0] if aggs else {}
+    qstats = quantile_stats(df, {s.column: [0.25, 0.75] for s in specs if s.method == "iqr"}, exact)
+    row = collect_stats(df, qstats, *aggs)
     bounds: dict[str, tuple[float, float]] = {}
     for s in specs:
         if s.method == "iqr":
-            q = refined.get(s.column) or row[f"{s.column}__q"]
+            q = row[f"q::{s.column}"]
             if q is None or q[0] is None:
                 bounds[s.column] = (float("-inf"), float("inf"))
                 continue

@@ -14,15 +14,14 @@ oracle-checkable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from analyst_toolkit_spark.functions.stats import (
-    exact_quantiles_refined,
     kurtosis_g2,
     percentile_exact,
-    quantile_strategy,
+    quantile_stats,
     skewness_g1,
 )
 
@@ -70,28 +69,23 @@ def profile(
     """
     cols = columns or df.columns
     num = set(numeric_columns(df))
-    strategy = quantile_strategy(df, exact=exact)
-    if strategy == "driver":
+    if exact:
         # Tiny known input: ONE Arrow collect of the profiled columns and the
         # whole profile computes in pandas/numpy — no Spark aggregation jobs
         # at all. 3-4x faster than the fused agg below at sub-128 MB scale
         # (the percentile aggregate's per-value hash-map update dominates),
         # and skew/kurt come from pandas itself — the exact reference
-        # semantics. Row-cap overflow (optimizer mis-estimate) falls through
-        # to the distributed path.
+        # semantics. None above the size gate or when the row cap trips.
         out = _profile_driver(df, cols, num)
         if out is not None:
             return out
-        strategy = "builtin"
-    # Above the size threshold the exact quartiles leave the fused agg for the
-    # bounded-memory refine path (same exact values; the builtin percentile's
-    # single-threaded merge / O(distinct) buffer is what breaks at 100 TB) and
-    # re-enter the output as literals.
-    refined_q: dict[str, list[float]] = {}
-    targets = {c: [0.25, 0.5, 0.75] for c in cols if c in num}
-    if targets and strategy == "refined":
-        refined_q = exact_quantiles_refined(df, targets)
+    # Quartiles come from quantile_stats: aggregate Columns that join the
+    # fused agg below, or (above the refine threshold) values from the
+    # bounded-memory refine path that re-enter the agg as literals.
+    qstats = quantile_stats(df, {c: [0.25, 0.5, 0.75] for c in cols if c in num}, exact)
     aggs: list = [F.count(F.lit(1)).alias("__rows")]
+    for k, v in qstats.items():
+        aggs.append((v if isinstance(v, Column) else F.array(*[F.lit(x).cast("double") for x in v])).alias(k))
     # Exact distinct counts go in a SEPARATE aggregation: mixing countDistinct
     # with TypedImperative aggs (percentile) triggers Catalyst's EXPAND
     # rewrite, which multiplies every input row per distinct column and makes
@@ -115,14 +109,6 @@ def profile(
                 skewness_g1(col).alias(f"{c}__skew"),
                 kurtosis_g2(col).alias(f"{c}__kurt"),
             ]
-            if c in refined_q:
-                pass
-            elif exact:
-                aggs.append(percentile_exact(col, [0.25, 0.5, 0.75]).alias(f"{c}__q"))
-            else:
-                aggs.append(
-                    F.percentile_approx(col, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)), 10000).alias(f"{c}__q")
-                )
 
     wide = df.agg(*aggs)
     if dist_aggs:
@@ -136,11 +122,7 @@ def profile(
         is_num = c in num
 
         def _q(i: int, c: str = c, is_num: bool = is_num):
-            if not is_num:
-                return F.lit(None).cast("double")
-            if c in refined_q:
-                return F.lit(refined_q[c][i]).cast("double")
-            return F.col(f"{c}__q")[i].cast("double")
+            return F.col(f"q::{c}")[i].cast("double") if is_num else F.lit(None).cast("double")
 
         structs.append(
             F.struct(

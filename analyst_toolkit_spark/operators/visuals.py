@@ -20,12 +20,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from analyst_toolkit_spark.functions.stats import (
-    exact_quantiles_refined,
-    percentile_exact,
-    quantile_strategy,
-    quantiles_driver,
-)
+from analyst_toolkit_spark.functions.stats import collect_stats, quantile_stats
 from analyst_toolkit_spark.operators.profile import numeric_columns
 
 
@@ -99,33 +94,8 @@ def boxplot_stats(
             row[f"q::{c}"] = p["q"]
             row[f"min::{c}"] = p["min"]
             row[f"max::{c}"] = p["max"]
-    elif (strategy := quantile_strategy(df)) in ("refined", "driver"):
-        targets = {c: [0.25, 0.5, 0.75] for c in cols}
-        if strategy == "driver":
-            # tiny input: one Arrow collect covers quartiles AND min/max
-            refined, mm_d = quantiles_driver(df, targets, minmax=True)
-            mm = {f"{k}::{c}": v[i] for c, v in mm_d.items() for i, k in enumerate(("min", "max"))}
-        else:
-            # big-input shape: quartiles via the bounded-memory refine path,
-            # min/max in a plain streaming agg (see functions.stats)
-            refined = exact_quantiles_refined(df, targets)
-            mm = df.agg(
-                *[F.min(c).alias(f"min::{c}") for c in cols],
-                *[F.max(c).alias(f"max::{c}") for c in cols],
-            ).first()
-        row = {}
-        for c in cols:
-            q = refined[c]
-            row[f"q::{c}"] = None if q[0] is None else q
-            row[f"min::{c}"] = mm[f"min::{c}"]
-            row[f"max::{c}"] = mm[f"max::{c}"]
     else:
-        aggs = []
-        for c in cols:
-            aggs.append(percentile_exact(F.col(c), [0.25, 0.5, 0.75]).alias(f"q::{c}"))
-            aggs.append(F.min(c).alias(f"min::{c}"))
-            aggs.append(F.max(c).alias(f"max::{c}"))
-        row = df.agg(*aggs).first()
+        row = collect_stats(df, quantile_stats(df, {c: [0.25, 0.5, 0.75] for c in cols}, minmax=True))
 
     # second pass batched for all columns: whisker ends (extremes within
     # fence) + flier counts — still one scan

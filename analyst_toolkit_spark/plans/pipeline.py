@@ -8,8 +8,12 @@ JSON-able summary into the run history, which folds into the 0-100 health
 score (functions/scoring.py).
 
 Scale notes: modules are lazy transformations on one DataFrame; only summary
-aggregations materialize (each a single map-side-partial agg). Optional parquet
-checkpoints between modules break lineage for very long chains — at 100 TB you
+aggregations materialize (each a single map-side-partial agg). Each summary
+runs where its module runs, on the caller's thread, so every Spark job of a
+run carries the caller's job group and local properties (``cancelJobGroup``
+stops the whole run). Quantile statistics pick their execution tier in one
+place (``functions.stats.quantile_stats``). Optional parquet checkpoints
+between modules break lineage for very long chains — at 100 TB you
 checkpoint after the row-changing modules (duplicates, handling), not after
 pure column transforms.
 """
@@ -93,91 +97,21 @@ def run_pipeline(spark: SparkSession, cfg: C.PipelineConfig, df: DataFrame | Non
 
     run = PipelineRun(run_id=cfg.run_id, df=df)
 
-    # r15 optimization round — overlap independent summary jobs (guide §2.6).
-    # Each module's SUMMARY (profile collect, validation counts, duplicate
-    # counts, outlier counts) is a pure read of the immutable DataFrame the
-    # module saw; DataFrame immutability makes those reads safe to execute
-    # concurrently even though later modules replace `df` with transformed
-    # frames. Summaries are submitted to a small thread pool (Spark's
-    # scheduler runs concurrent jobs and back-fills idle cores with the next
-    # job's tasks), while the df transformation chain stays strictly
-    # sequential on this thread. History entries resolve IN MODULE ORDER at
-    # the end, so run.history / run.health are byte-identical to the
-    # sequential execution. Two deliberate barriers:
-    #   - checkpoint_dir set → fully sequential (checkpoint writes are side
-    #     effects that must not precede a failing gatekeeper raise);
-    #   - fail_on_error validation → submitted, then awaited immediately
-    #     (it is a gate: nothing eager downstream may run past a failure).
-    import threading
-
-    pending: list = []  # resolve-closures, strictly in module order
-
-    def _submit(fn):
-        """Run fn now (sequential/checkpoint mode) or on a daemon thread;
-        returns a waiter that re-raises the job's exception. One short-lived
-        thread per summary (≤3 per run) instead of a pool: nothing to shut
-        down if a later module raises mid-chain."""
-        if cfg.checkpoint_dir:
-            res = fn()
-            return lambda: res
-        box: dict = {}
-
-        def _run():
-            try:
-                box["v"] = fn()
-            except BaseException as e:  # noqa: BLE001 — re-raised in the waiter
-                box["e"] = e
-
-        t = threading.Thread(target=_run, daemon=True)
-        t.start()
-
-        def _wait():
-            t.join()
-            if "e" in box:
-                raise box["e"]
-            return box["v"]
-
-        return _wait
-
     # M01 diagnostics — profile; null_rate = mean of per-column null fractions
     # (the reference's df.isnull().mean().mean(), SURVEY A3)
     if cfg.enabled("diagnostics"):
-        snap = df
-
-        def _diag(snap=snap):
-            return M_prof.profile(snap.drop(ingest.ROW_ID)).collect()
-
-        diag_wait = _submit(_diag)
-
-        def _resolve_diag():
-            prof_rows = diag_wait()
-            null_rate = (
-                sum(r["null_pct"] for r in prof_rows) / len(prof_rows) if prof_rows else 0.0
-            )
-            row_count = prof_rows[0]["count"] if prof_rows else 0
-            run.reports["diagnostics"] = prof_rows
-            _record(run, "diagnostics", {"null_rate": null_rate, "row_count": row_count})
-
-        pending.append(_resolve_diag)
+        prof_rows = M_prof.profile(df.drop(ingest.ROW_ID)).collect()
+        null_rate = sum(r["null_pct"] for r in prof_rows) / len(prof_rows) if prof_rows else 0.0
+        row_count = prof_rows[0]["count"] if prof_rows else 0
+        run.reports["diagnostics"] = prof_rows
+        _record(run, "diagnostics", {"null_rate": null_rate, "row_count": row_count})
 
     # M02 validation (audit mode)
     if cfg.enabled("validation"):
         vcfg, fail = C.validation_config(cfg.module_config("validation"))
-        snap = df
-
-        def _val(snap=snap, vcfg=vcfg, fail=fail):
-            return M_val.run_validation(snap, vcfg, fail_on_error=fail)
-
-        val_wait = _submit(_val)
-        if fail:
-            val_wait()  # gate: a raise must precede any downstream eager work
-
-        def _resolve_val():
-            res = val_wait()
-            run.reports["validation"] = res
-            _record(run, "validation", {"passed": res["passed"], "failed_rules": res["failed_rules"]})
-
-        pending.append(_resolve_val)
+        res = M_val.run_validation(df, vcfg, fail_on_error=fail)
+        run.reports["validation"] = res
+        _record(run, "validation", {"passed": res["passed"], "failed_rules": res["failed_rules"]})
 
     # M03 normalization
     if cfg.enabled("normalization"):
@@ -212,49 +146,32 @@ def run_pipeline(spark: SparkSession, cfg: C.PipelineConfig, df: DataFrame | Non
                 changelog[f"coerce:{col}"] = info
         df = _checkpoint(df, cfg, cfg.run_id, "normalization")
         run.reports["normalization"] = changelog
-        pending.append(
-            lambda changelog=changelog: _record(run, "normalization", {"actions": len(changelog)})
-        )
+        _record(run, "normalization", {"actions": len(changelog)})
 
     # gatekeeper re-validation — raises on failure (run_validation_pipeline.py:90-103)
     if cfg.enabled("validation_gatekeeper"):
         vcfg, fail = C.validation_config(cfg.module_config("validation_gatekeeper"))
         res = M_val.run_validation(df, vcfg, fail_on_error=True if fail is False else fail)
         run.reports["validation_gatekeeper"] = res
-        pending.append(
-            lambda res=res: _record(
-                run, "validation", {"passed": res["passed"], "failed_rules": res["failed_rules"]}
-            )
-        )
+        _record(run, "validation", {"passed": res["passed"], "failed_rules": res["failed_rules"]})
 
     # M04 duplicates
     if cfg.enabled("duplicates"):
         dcfg = C.duplicates_config(cfg.module_config("duplicates"))
         flagged = M_dup.flag_duplicates(df, dcfg.subset_columns, keep=dcfg.keep if dcfg.mode == "remove" else False)
-
-        def _dup_counts(flagged=flagged):
-            return flagged.agg(
-                F.sum(F.col("is_duplicate").cast("long")).alias("dups"), F.count(F.lit(1)).alias("rows")
-            ).first()
-
-        dup_wait = _submit(_dup_counts)
+        counts = flagged.agg(
+            F.sum(F.col("is_duplicate").cast("long")).alias("dups"), F.count(F.lit(1)).alias("rows")
+        ).first()
+        _record(
+            run,
+            "duplicates",
+            {"duplicate_count": int(counts["dups"] or 0), "row_count": int(counts["rows"]), "mode": dcfg.mode},
+        )
         if dcfg.mode == "remove":
             df = M_dup.drop_duplicates_keep_order(df, dcfg.subset_columns, keep=dcfg.keep)
             df = _checkpoint(df, cfg, cfg.run_id, "duplicates")
 
-        def _resolve_dup(dcfg=dcfg):
-            counts = dup_wait()
-            _record(
-                run,
-                "duplicates",
-                {"duplicate_count": int(counts["dups"] or 0), "row_count": int(counts["rows"]), "mode": dcfg.mode},
-            )
-
-        pending.append(_resolve_dup)
-
-    # M05 outlier detection — the bounds aggregation stays on this thread
-    # (the flag columns it produces are literals every later module's frame
-    # derives from); only the flag-count summary rides the pool.
+    # M05 outlier detection
     detection_results: dict = {}
     if cfg.enabled("outlier_detection"):
         numeric = [c for c in M_prof.numeric_columns(df) if c != ingest.ROW_ID]
@@ -262,25 +179,15 @@ def run_pipeline(spark: SparkSession, cfg: C.PipelineConfig, df: DataFrame | Non
         if specs:
             df, detection_results = M_out.detect_outliers(df, specs)
             flag_cols = [v["flag_col"] for v in detection_results.values()]
-            snap = df
-
-            def _out_counts(snap=snap, flag_cols=flag_cols):
-                return snap.agg(
-                    F.sum(any_horizontal([F.col(c) for c in flag_cols]).cast("long")).alias("n"),
-                    F.count(F.lit(1)).alias("rows"),
-                ).first()
-
-            out_wait = _submit(_out_counts)
-
-            def _resolve_out(detection_results=detection_results):
-                counts = out_wait()
-                _record(
-                    run,
-                    "outliers",
-                    {"outlier_count": int(counts["n"] or 0), "row_count": int(counts["rows"]), "columns": list(detection_results)},
-                )
-
-            pending.append(_resolve_out)
+            counts = df.agg(
+                F.sum(any_horizontal([F.col(c) for c in flag_cols]).cast("long")).alias("n"),
+                F.count(F.lit(1)).alias("rows"),
+            ).first()
+            _record(
+                run,
+                "outliers",
+                {"outlier_count": int(counts["n"] or 0), "row_count": int(counts["rows"]), "columns": list(detection_results)},
+            )
 
     # M06 outlier handling — consumes M05 results (per-column strategies)
     if cfg.enabled("outlier_handling") and detection_results:
@@ -292,36 +199,24 @@ def run_pipeline(spark: SparkSession, cfg: C.PipelineConfig, df: DataFrame | Non
         }
         df = M_out.handle_outliers_per_column(df, detection_results, specs)
         df = _checkpoint(df, cfg, cfg.run_id, "outlier_handling")
-        pending.append(
-            lambda applied=applied: _record(run, "outlier_handling", {"strategies": applied})
-        )
+        _record(run, "outlier_handling", {"strategies": applied})
 
-    # M07 imputation — fill statistics depend on the post-handling frame, so
-    # the aggregation stays on this thread (critical path by data flow).
+    # M07 imputation
     if cfg.enabled("imputation"):
         specs = [s for s in C.impute_specs(cfg.module_config("imputation")) if s.column in df.columns]
         df, fills = M_imp.impute(df, specs)
         run.reports["imputation"] = fills
-        pending.append(
-            lambda fills=fills: _record(run, "imputation", {"filled_columns": sorted(fills)})
-        )
+        _record(run, "imputation", {"filled_columns": sorted(fills)})
 
     # M10 final audit
     if cfg.enabled("final_audit"):
         facfg = C.final_audit_config(cfg.module_config("final_audit"))
         df, res = M_fa.run_final_audit(df, facfg)
         run.reports["final_audit"] = res
-        pending.append(
-            lambda res=res: _record(
-                run, "final_audit", {"certified": res["certified"]},
-                status="completed" if res["certified"] else "failed",
-            )
+        _record(
+            run, "final_audit", {"certified": res["certified"]},
+            status="completed" if res["certified"] else "failed",
         )
-
-    # resolve every summary strictly in module order (identical history to
-    # the sequential execution)
-    for resolve in pending:
-        resolve()
 
     run.df = df
     # resolve lazy observe-backed counters (parse_datetime NaT accounting)

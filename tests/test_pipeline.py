@@ -191,3 +191,22 @@ def test_pipeline_gatekeeper_raises(spark, dirty):
 def test_unknown_module_rejected():
     with pytest.raises(ValueError, match="unknown module"):
         C.pipeline_config({"modules": {"nonsense": {"run": True}}})
+
+
+def test_pipeline_jobs_stay_in_callers_job_group(spark, dirty):
+    # every Spark job of a run carries the caller's job group, so
+    # cancelJobGroup stops the whole run and the jobs can be attributed to it
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("pipeline-run", "pipeline-run")
+    try:
+        run_pipeline(spark, C.pipeline_config(MASTER), dirty)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    assert tracker.getJobIdsForGroup("pipeline-run")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()

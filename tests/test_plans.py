@@ -34,9 +34,10 @@ _REQUIRED_ARROW_UDF = {
     "cdc_chunk_census_docs",
     # r16: the literal-decontamination tiers evaluate their |bench|×dim
     # dot products in ONE Arrow batch kernel (similarity.DECON_VECTORIZED,
-    # guide §4.2 — measured 6x on the curate row; bit-identical doubles,
-    # pinned by test_semantic_decon_vectorized_matches_jvm_fold). The JVM
-    # fold remains behind the env seam.
+    # guide §4.2 — measured 6x on the curate row; bit-identical doubles).
+    # The JVM fold survives only as the reference that
+    # test_semantic_decon_vectorized_matches_jvm_fold compares against
+    # (similarity.DECON_VECTORIZED).
     "semantic_decontaminate_embeddings",
     "semantic_decon_exposure_embeddings",
     "curate_semantic_decon_docs",
