@@ -1,10 +1,11 @@
-"""End-to-end corpus curation — the LLM training-data pipeline as ONE lazy
+"""End-to-end corpus curation — the LLM training-data pipeline as ONE
 chain over the operators in this package.
 
 Mirrors what plans/pipeline.py is for the QA modules: each stage is optional,
-config-driven, and composes lazily (one DataFrame flows through; only the
-stage-count report materializes anything, and that is opt-in). The stage
-order is the one production pipelines use:
+config-driven, and composes on one DataFrame that flows through, with a
+lineage cut after each stage that references it twice (see
+:func:`curate_corpus` for what the cuts run). The stage order is the one
+production pipelines use:
 
   clean (strip_html) → PII scrub (redact before anything fingerprints)
   → quality gate (score / repetition / language)
@@ -30,6 +31,7 @@ incremental corpus builds diffable.
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -38,6 +40,7 @@ from pyspark.sql import functions as F
 from analyst_toolkit_spark.llm import dedup as D
 from analyst_toolkit_spark.llm import pack as P
 from analyst_toolkit_spark.llm import text as T
+from analyst_toolkit_spark.sources import io as S_io
 
 
 @dataclass
@@ -275,7 +278,7 @@ class CurationConfig:
     #: included only when a ``lang`` column exists.
     report_data_card: bool = False
     data_card_by: str = "source"
-    #: Cut lineage after each self-referencing stage (localCheckpoint, lazy).
+    #: Cut lineage after each self-referencing stage (``sources.io.cut``).
     #: The dedup/decontaminate stages reference the running frame in TWO
     #: subtrees (the keep-set build and the semi-join back); without a cut
     #: every later stage recomputes the whole upstream chain once per
@@ -294,8 +297,13 @@ class CurationConfig:
 def curate_corpus(df: DataFrame, cfg: CurationConfig | None = None, **overrides):
     """Run the curation chain. Returns ``(curated_df, report)`` where report
     maps stage name → config applied (+ row counts when
-    ``report_counts=True``). Stages not configured are skipped entirely —
-    the chain stays a single lazy plan until the caller acts."""
+    ``report_counts=True``). Stages not configured are skipped entirely.
+    The chain is not one lazy plan: each lineage cut (``sources.io.cut``)
+    runs its subtree's shuffle stages during this call — the local cut
+    before it returns, the durable cut as a parquet write whose later read
+    scans only the written files — so most of the chain's jobs run here
+    (28 of 30 in the curate case of ``tests/test_lineage_cut.py``) and the
+    caller's action runs the rest."""
     cfg = cfg or CurationConfig()
     for k, v in overrides.items():
         setattr(cfg, k, v)
@@ -323,17 +331,12 @@ def curate_corpus(df: DataFrame, cfg: CurationConfig | None = None, **overrides)
             info["rows"] = out.count()
         report[stage] = info
 
-    cut_seq = [0]
+    stages = itertools.count(1)
 
     def _cut(frame: DataFrame) -> DataFrame:
-        if cfg.checkpoint_dir:
-            # reliable cut: parquet round-trip — severed lineage that survives
-            # executor failure (the 100 TB posture; localCheckpoint does not).
-            cut_seq[0] += 1
-            path = f"{cfg.checkpoint_dir.rstrip('/')}/stage_{cut_seq[0]:02d}"
-            frame.write.mode("overwrite").parquet(path)
-            return frame.sparkSession.read.parquet(path)
-        return frame.localCheckpoint(eager=False) if cfg.checkpoint else frame
+        if not (cfg.checkpoint or cfg.checkpoint_dir):
+            return frame
+        return S_io.cut(frame, durable_dir=cfg.checkpoint_dir, name=f"stage_{next(stages):02d}")
 
     def _data_card(frame: DataFrame, components: DataFrame | None = None) -> list[dict]:
         if cfg.data_card_by not in frame.columns:

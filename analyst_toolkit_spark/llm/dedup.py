@@ -16,10 +16,13 @@ zip_with / filter) — JVM expressions, NO Python UDFs, no per-row Python cost.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from analyst_toolkit_spark.llm.text import normalize_text
+from analyst_toolkit_spark.sources import io as S_io
 
 
 def exact_dup_groups(df: DataFrame, key: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -342,7 +345,7 @@ def sentinel_band_hash(spark, k: int, bands: int, method: str = "xxhash"):
 
 
 def _materialize_nocodegen(
-    src: DataFrame, build, durable_path: str | None = None
+    src: DataFrame, build, checkpoint_dir: str | None = None
 ) -> DataFrame:
     """Eagerly materialize ``build(scoped_src)`` with whole-stage codegen OFF,
     re-bound to the caller's session. The signature-fold plans this serves are
@@ -351,8 +354,8 @@ def _materialize_nocodegen(
     scoped to a THROWAWAY ``newSession()`` (independent SQLConf, shared
     SparkContext) so a concurrent query on the caller's session never observes
     mutated global conf; plans cross sessions via global temp views. With
-    ``durable_path`` the cut is a parquet round-trip instead of
-    ``localCheckpoint`` (same executor-loss rationale as
+    ``checkpoint_dir`` the cut is a durable parquet cut (``00_banded``)
+    instead of an eager ``localCheckpoint`` (same executor-loss rationale as
     :func:`connected_components`'s ``checkpoint_dir``)."""
     import uuid
 
@@ -364,9 +367,13 @@ def _materialize_nocodegen(
     src.createOrReplaceGlobalTempView(in_view)
     try:
         out = build(scoped.table(f"global_temp.{in_view}"))
-        if durable_path:
-            out.write.mode("overwrite").parquet(durable_path)
-            return spark.read.parquet(durable_path)
+        if checkpoint_dir:
+            ckpt = S_io.cut(out, durable_dir=checkpoint_dir, name="00_banded")
+            # re-read in the caller's session, reusing the cut's schema (no
+            # second footer job): a scan planned in the scoped session stays
+            # row-based, since codegen-off disables the vectorized reader
+            path = f"{checkpoint_dir.rstrip('/')}/00_banded"
+            return spark.read.schema(ckpt.schema).parquet(path)
         ckpt = out.localCheckpoint(eager=True)
         ckpt.createOrReplaceGlobalTempView(out_view)
         return spark.table(f"global_temp.{out_view}")
@@ -677,15 +684,18 @@ def connected_components(
     O(diameter); near-dup graphs (near-cliques) finish in 2-3 rounds.
     Convergence = the global min-label sum stops falling (one cheap scalar
     agg per iteration; summed as decimal(38,0) so full-range 64-bit hash
-    labels cannot overflow). ``localCheckpoint`` truncates the plan each round so
-    lineage doesn't grow across iterations.
+    labels cannot overflow). A lineage cut (``sources.io.cut``) truncates the
+    plan each round so lineage doesn't grow across iterations.
 
     Iterative-with-driver-loop is inherent to connected components (Spark
-    has no native fixpoint operator); each iteration is a fully distributed
-    job — the driver only compares two longs.
+    has no native fixpoint operator); each iteration is fully distributed —
+    the driver only compares two longs. An iteration is several jobs, not
+    one: its cut runs the round's shuffle stages during the call, and the
+    convergence sum runs two more. On a 41-node chain with the driver tier
+    off, the seed took 6 jobs and the seven rounds 5, 5, 7, 7, 7, 7 and 7.
 
     ``checkpoint_dir`` swaps the executor-local ``localCheckpoint`` lineage
-    cuts for durable parquet round-trips (same option, same rationale as
+    cuts for durable parquet cuts (same option, same rationale as
     ``curate_corpus``): at 100 TB an executor loss mid-fixpoint restarts
     the WHOLE multi-iteration job under localCheckpoint, while the durable
     cut resumes from the last written iteration's files. Identical labels
@@ -701,52 +711,13 @@ def connected_components(
     the old run's higher-numbered snapshots behind). The dir should be
     dedicated to one fixpoint; sibling files with other names are untouched.
     """
-    cut_seq = [0]
-    label_paths: list[str] = []
-
-    def _hadoop_fs(path: str):
-        spark = pairs.sparkSession
-        jvm = spark._jvm
-        hp = jvm.org.apache.hadoop.fs.Path(path)
-        return hp.getFileSystem(spark._jsc.hadoopConfiguration()), hp
-
-    def _rm(path: str) -> None:
-        # best-effort: retention must never fail the fixpoint itself
-        try:
-            fs, hp = _hadoop_fs(path)
-            fs.delete(hp, True)
-        except Exception:
-            pass
-
+    spark = pairs.sparkSession
     if checkpoint_dir:
-        try:
-            fs, hp = _hadoop_fs(checkpoint_dir.rstrip("/"))
-            if fs.exists(hp):
-                for st in fs.listStatus(hp):
-                    name = st.getPath().getName()
-                    if name.endswith("_labels") or name.endswith("_edges"):
-                        fs.delete(st.getPath(), True)
-        except Exception:
-            pass
-
-    def _cut(frame: DataFrame, tag: str) -> DataFrame:
-        # r15 optimization round: the non-durable cut is a LAZY
-        # localCheckpoint — the convergence-sum agg that immediately follows
-        # every labels cut is the action that materializes it, so each
-        # iteration runs ONE job (materialize + sum fused) instead of two
-        # (eager materialize, then a second sum job over the checkpoint).
-        # The durable path keeps its write-then-read shape: the write IS the
-        # materialization and the sum is a cheap parquet scan.
-        if checkpoint_dir:
-            cut_seq[0] += 1
-            path = f"{checkpoint_dir.rstrip('/')}/{cut_seq[0]:02d}_{tag}"
-            frame.write.mode("overwrite").parquet(path)
-            if tag == "labels":
-                label_paths.append(path)
-                if len(label_paths) > 2:
-                    _rm(label_paths.pop(0))
-            return frame.sparkSession.read.parquet(path)
-        return frame.localCheckpoint(eager=False)
+        checkpoint_dir = checkpoint_dir.rstrip("/")
+        S_io.remove(spark, f"{checkpoint_dir}/*_{{labels,edges}}")
+    # durable cuts are numbered in order: 01_edges, 02_labels (the seed),
+    # then one NN_labels per iteration
+    seq = itertools.count(1)
 
     # r15 optimization round: both edge directions come from ONE evaluation
     # of the pairs subtree (explode of a 2-struct array) instead of the old
@@ -770,11 +741,11 @@ def connected_components(
     edges_cache = None
     edge_count_obs = None
     if checkpoint_dir:
-        edges = _cut(sym, "edges")
+        edges = S_io.cut(sym, durable_dir=checkpoint_dir, name=f"{next(seq):02d}_edges")
     else:
         if CC_DRIVER_TIER_MAX_EDGES > 0:
             # r16 driver tier: the distinct-edge count rides the cache's
-            # first materialization (the seed-sum job below) — zero extra
+            # first materialization (the seed cut below) — zero extra
             # jobs to learn whether the graph is small enough to resolve
             # driver-side. See CC_DRIVER_TIER_MAX_EDGES.
             from pyspark.sql import Observation
@@ -789,8 +760,8 @@ def connected_components(
         # (the O(docs x bands) side on the bucket path) saved per
         # iteration once labels outgrow broadcast. One extra build-time
         # shuffle buys that; lineage stays short (edges are built once).
-        # (r15: no eager count() — the seeded-labels sum below is the first
-        # action and populates this cache in the same job.)
+        # (r15: no eager count() — the seeded-labels cut below is the first
+        # to run this subtree and populates the cache.)
         edges = sym.repartition(F.col("dst")).cache()
         edges_cache = edges
     # r15 optimization round — SEEDED initial labels: starting from the
@@ -801,14 +772,15 @@ def connected_components(
     # the whole first loop iteration (two joins + a 3-subtree union-agg +
     # a cut + a sum action) while producing bit-identical labels: the loop
     # now starts from the state the old iteration 1 ended in.
-    labels = _cut(
+    labels = S_io.cut(
         edges.groupBy("src")
         .agg(F.min("dst").alias("__mindst"))
         .select(
             F.col("src").alias("node"),
             F.least(F.col("src"), F.col("__mindst")).alias("comp"),
         ),
-        "labels",
+        durable_dir=checkpoint_dir,
+        name=f"{next(seq):02d}_labels",
     )
     # decimal(38,0) sum: node ids are caller-defined and may be full-range
     # 64-bit hashes (e.g. simhash-keyed pair lists), whose long sum
@@ -854,7 +826,7 @@ def connected_components(
             # CC_DRIVER_TIER_MAX_EDGES rows, a few MB), so the hint is
             # data-size-gated by construction, never a blind constant.
             return F.broadcast(
-                pairs.sparkSession.createDataFrame(
+                spark.createDataFrame(
                     _union_find_labels(rows), schema
                 )
             )
@@ -867,13 +839,16 @@ def connected_components(
         jump = labels.join(l2, labels["comp"] == l2["j_node"], "inner").select(
             labels["node"], l2["j_comp"].alias("comp")
         )
-        labels = _cut(
-            labels.unionAll(prop)
-            .unionAll(jump)
-            .groupBy("node")
-            .agg(F.min("comp").alias("comp")),
-            "labels",
+        n = next(seq)
+        labels = S_io.cut(
+            labels.unionAll(prop).unionAll(jump).groupBy("node").agg(F.min("comp").alias("comp")),
+            durable_dir=checkpoint_dir,
+            name=f"{n:02d}_labels",
         )
+        if checkpoint_dir:
+            # retention: keep this snapshot and its predecessor (number 01
+            # is the edges cut, so the first round deletes nothing)
+            S_io.remove(spark, f"{checkpoint_dir}/{n - 2:02d}_labels")
         cur_sum = labels.agg(_label_sum).first()[0]
         if cur_sum == prev_sum:
             converged = True
@@ -969,12 +944,7 @@ def bucket_components(
     tagged = banded.select(
         F.col(id_col).cast("long").alias("__id"), bucket_key.alias("__bkt")
     )
-    if checkpoint_dir:
-        tag_path = f"{checkpoint_dir.rstrip('/')}/00_bucket_tagged"
-        tagged.write.mode("overwrite").parquet(tag_path)
-        tagged = df.sparkSession.read.parquet(tag_path)
-    else:
-        tagged = tagged.localCheckpoint(eager=False)
+    tagged = S_io.cut(tagged, durable_dir=checkpoint_dir, name="00_bucket_tagged")
     mins = tagged.groupBy("__bkt").agg(F.min("__id").alias("__rep"))
     edges = (
         tagged.join(mins, "__bkt")
@@ -1475,9 +1445,7 @@ def near_dedup_components(
 
     if checkpoint_dir:
         # durable cut: parquet round-trip, resumable after executor loss
-        banded = _materialize_nocodegen(
-            src, _build, durable_path=f"{checkpoint_dir.rstrip('/')}/00_banded"
-        )
+        banded = _materialize_nocodegen(src, _build, checkpoint_dir)
         cleanup = None
     else:
         # cache, not localCheckpoint: the census action below is the pass

@@ -12,15 +12,14 @@ aggregations materialize (each a single map-side-partial agg). Each summary
 runs where its module runs, on the caller's thread, so every Spark job of a
 run carries the caller's job group and local properties (``cancelJobGroup``
 stops the whole run). Quantile statistics pick their execution tier in one
-place (``functions.stats.quantile_stats``). Optional parquet checkpoints
-between modules break lineage for very long chains — at 100 TB you
-checkpoint after the row-changing modules (duplicates, handling), not after
-pure column transforms.
+place (``functions.stats.quantile_stats``). With ``checkpoint_dir`` set,
+normalization, duplicate removal and outlier handling each end in a durable
+parquet lineage cut (``sources.io.cut``), which keeps a long chain's plan
+short.
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -38,6 +37,7 @@ from analyst_toolkit_spark.operators import outliers as M_out
 from analyst_toolkit_spark.operators import profile as M_prof
 from analyst_toolkit_spark.operators import validation as M_val
 from analyst_toolkit_spark.plans import config as C
+from analyst_toolkit_spark.sources import io as S_io
 
 # strptime directive -> Spark datetime pattern (accepts pandas-style configs)
 _STRPTIME = {
@@ -72,14 +72,6 @@ class PipelineRun:
 
 def _record(run: PipelineRun, module: str, summary: dict, status: str = "completed") -> None:
     run.history.append({"module": module, "status": status, "summary": summary})
-
-
-def _checkpoint(df: DataFrame, cfg: C.PipelineConfig, run_id: str, module: str) -> DataFrame:
-    if not cfg.checkpoint_dir:
-        return df
-    path = os.path.join(cfg.checkpoint_dir, f"{run_id}_{module}.parquet")
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
 
 
 def run_pipeline(spark: SparkSession, cfg: C.PipelineConfig, df: DataFrame | None = None) -> PipelineRun:
@@ -144,7 +136,8 @@ def run_pipeline(spark: SparkSession, cfg: C.PipelineConfig, df: DataFrame | Non
             if col in df.columns:
                 df, info = M_norm.coerce_numeric(df, col, t)
                 changelog[f"coerce:{col}"] = info
-        df = _checkpoint(df, cfg, cfg.run_id, "normalization")
+        if cfg.checkpoint_dir:
+            df = S_io.cut(df, durable_dir=cfg.checkpoint_dir, name=f"{cfg.run_id}_normalization.parquet")
         run.reports["normalization"] = changelog
         _record(run, "normalization", {"actions": len(changelog)})
 
@@ -169,7 +162,8 @@ def run_pipeline(spark: SparkSession, cfg: C.PipelineConfig, df: DataFrame | Non
         )
         if dcfg.mode == "remove":
             df = M_dup.drop_duplicates_keep_order(df, dcfg.subset_columns, keep=dcfg.keep)
-            df = _checkpoint(df, cfg, cfg.run_id, "duplicates")
+            if cfg.checkpoint_dir:
+                df = S_io.cut(df, durable_dir=cfg.checkpoint_dir, name=f"{cfg.run_id}_duplicates.parquet")
 
     # M05 outlier detection
     detection_results: dict = {}
@@ -198,7 +192,8 @@ def run_pipeline(spark: SparkSession, cfg: C.PipelineConfig, df: DataFrame | Non
             for col in detection_results
         }
         df = M_out.handle_outliers_per_column(df, detection_results, specs)
-        df = _checkpoint(df, cfg, cfg.run_id, "outlier_handling")
+        if cfg.checkpoint_dir:
+            df = S_io.cut(df, durable_dir=cfg.checkpoint_dir, name=f"{cfg.run_id}_outlier_handling.parquet")
         _record(run, "outlier_handling", {"strategies": applied})
 
     # M07 imputation

@@ -46,50 +46,36 @@ def save_output(
         writer.parquet(path)
 
 
-def write_sized(
-    df: DataFrame,
-    path: str,
-    target_mb: int = 256,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> int:
-    """Size-targeted write: choose the output file count from the
-    optimizer's size estimate so files land near ``target_mb`` — the
-    small-files discipline a 100 TB table needs (every downstream scan pays
-    listing + footer + task-schedule cost PER FILE forever after; the
-    dedup-index write learned this lesson in round 5).
+def cut(df: DataFrame, *, durable_dir: str | None = None, name: str) -> DataFrame:
+    """S10/S5 lineage cut — replaces the reference's joblib checkpoint
+    pickles. The returned frame plans from the cut, not from ``df``'s
+    lineage.
 
-    Uses the plan size estimate (parquet footers propagated through the
-    plan — free, no scan). Parquet compresses ~3-4x from the in-plan
-    estimate, so the estimate is divided by ``_PARQUET_COMPRESSION_GUESS``
-    before sizing. Unknown estimate (-1) falls back to
-    ``spark.sparkContext.defaultParallelism`` files rather than guessing —
-    never a single file (one 100 GB file = one reader task downstream).
-    ``coalesce`` (no shuffle) when shrinking; ``repartition`` only when the
-    frame has FEWER partitions than the target (growing needs the shuffle).
-    Returns the file count used."""
-    from analyst_toolkit_spark.functions.stats import plan_size_bytes
-
-    est = plan_size_bytes(df)
-    if est >= 0:
-        est = est // _PARQUET_COMPRESSION_GUESS if fmt == "parquet" else est
-        n_files = max(1, -(-est // (target_mb << 20)))  # ceil div
-    else:
-        n_files = max(1, df.sparkSession.sparkContext.defaultParallelism)
-    current = df.rdd.getNumPartitions()
-    sized = df.coalesce(n_files) if n_files <= current else df.repartition(n_files)
-    save_output(sized, path, fmt=fmt, mode=mode, partition_by=partition_by)
-    return int(n_files)
-
-
-_PARQUET_COMPRESSION_GUESS = 3  # in-plan bytes -> snappy parquet, conservative
-
-
-def checkpoint(df: DataFrame, path: str) -> DataFrame:
-    """S10/S5: parquet checkpoint — breaks lineage, replaces joblib pickling."""
+    With no ``durable_dir`` it is ``localCheckpoint(eager=False)``: blocks
+    are executor-local (lost with the executor), and the call is not lazy —
+    it runs the shuffle and broadcast stages of ``df``'s subtree before it
+    returns, and the caller's next action runs the final stage. With
+    ``durable_dir`` it is a parquet write to ``{durable_dir}/{name}``
+    (overwrite) that survives executor loss, and the returned read scans
+    only the written files. ``name`` is only used for the durable cut."""
+    if not durable_dir:
+        return df.localCheckpoint(eager=False)
+    path = f"{durable_dir.rstrip('/')}/{name}"
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.parquet(path)
+
+
+def remove(spark: SparkSession, path: str) -> None:
+    """Best-effort recursive delete of every path matching the Hadoop glob
+    ``path``, on any filesystem Spark can write to. Never raises: callers
+    use it for retention and cleanup, which must not fail the work."""
+    try:
+        hp = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
+        for st in fs.globStatus(hp) or []:
+            fs.delete(st.getPath(), True)
+    except Exception:
+        pass
 
 
 def _to_pandas(table: Any):

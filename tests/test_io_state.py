@@ -23,11 +23,13 @@ def test_save_and_load_roundtrip(spark, small, tmp_path):
         assert sorted(back.columns) == ["a", "b"]
 
 
-def test_checkpoint_breaks_lineage(spark, small, tmp_path):
-    ck = M_io.checkpoint(small, str(tmp_path / "ck.parquet"))
-    assert ck.count() == 2
-    # a checkpoint read plans as a fresh scan, not the original lineage
-    assert "Scan parquet" in ck._jdf.queryExecution().executedPlan().toString()
+@pytest.mark.parametrize("durable", [False, True], ids=["local", "durable"])
+def test_cut_breaks_lineage(spark, small, tmp_path, durable):
+    ck = M_io.cut(small, durable_dir=str(tmp_path) if durable else None, name="ck.parquet")
+    assert sorted(map(tuple, ck.collect())) == [(1, "x"), (2, "y")]
+    if durable:
+        # a durable cut plans as a fresh scan, not the original lineage
+        assert "Scan parquet" in ck._jdf.queryExecution().executedPlan().toString()
 
 
 def test_export_report_csv_and_html(small, tmp_path):
@@ -196,39 +198,3 @@ def test_load_any_jsonl_and_gz(spark, tmp_path):
         fh.write("a,b\n1,x\n2,y\n")
     out3 = load_any(spark, str(csv_gz))
     assert out3.count() == 2 and set(out3.columns) == {"a", "b"}
-
-
-def test_write_sized_targets_file_count(spark, sf_dir, tmp_path):
-    """write_sized picks file count from the size estimate: a small table
-    lands in few files (not one per shuffle partition), a tiny target_mb
-    forces more, and the data round-trips intact."""
-    import os
-
-    from analyst_toolkit_spark.sources.io import write_sized
-
-    df = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).repartition(16)
-    out1 = str(tmp_path / "big_target")
-    n1 = write_sized(df, out1, target_mb=1024)
-    files1 = [f for f in os.listdir(out1) if f.startswith("part-")]
-    assert n1 == len(files1) == 1  # whole table well under 1 GiB
-
-    out2 = str(tmp_path / "small_target")
-    # force a sub-MB target via a raw byte computation: target_mb must be >=1,
-    # so shrink by comparing against the 1 MB target instead
-    n2 = write_sized(df, out2, target_mb=1)
-    files2 = [f for f in os.listdir(out2) if f.startswith("part-")]
-    assert n2 == len(files2) >= 1
-    back = spark.read.parquet(out2)
-    assert back.count() == df.count()
-
-    # unknown estimate: falls back to defaultParallelism, never 1 giant file
-    import analyst_toolkit_spark.functions.stats as S
-
-    orig = S.plan_size_bytes
-    try:
-        S.plan_size_bytes = lambda d: -1
-        out3 = str(tmp_path / "unknown")
-        n3 = write_sized(df, out3, target_mb=1024)
-    finally:
-        S.plan_size_bytes = orig
-    assert n3 == spark.sparkContext.defaultParallelism

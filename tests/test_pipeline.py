@@ -210,3 +210,18 @@ def test_pipeline_jobs_stay_in_callers_job_group(spark, dirty):
     bus.waitUntilEmpty()
     assert tracker.getJobIdsForGroup("pipeline-run")
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
+def test_pipeline_checkpoint_dir_durable_and_identical(spark, dirty, tmp_path):
+    # checkpoint_dir turns the cuts after normalization, duplicate removal
+    # and outlier handling into parquet cuts: same run, severed lineage
+    local = run_pipeline(spark, C.pipeline_config(MASTER), dirty)
+    ckpt = str(tmp_path / "pipe_ckpt")
+    durable = run_pipeline(spark, C.pipeline_config({**MASTER, "checkpoint_dir": ckpt}), dirty)
+    assert durable.history == local.history
+    assert durable.health == local.health
+    assert sorted(durable.df.collect(), key=repr) == sorted(local.df.collect(), key=repr)
+    for module in ("normalization", "duplicates", "outlier_handling"):
+        assert (tmp_path / "pipe_ckpt" / f"test_run_{module}.parquet").is_dir()
+    files = durable.df.inputFiles()
+    assert files and all("pipe_ckpt" in f for f in files)
