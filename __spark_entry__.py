@@ -2303,7 +2303,8 @@ def q_dsir_weights_docs(spark, sf):
     (alpha*B = 512 pseudo-counts vs ~9k real target tokens) drowns the
     signal and selects almost nothing; 0.1 exercises both outcomes
     (96/500 selected at sf0.01). The raw corpus is tokenized ONCE: the
-    (doc, bucket) aggregate is cut with a lazy localCheckpoint and all
+    (doc, bucket) aggregate is cut with ``localCheckpoint(eager=False)``
+    (not lazy: the call runs the tokenize and shuffle-map stages) and all
     three consumers derive from it (plan-asserted: the only visible
     parquet scan is the doc_id spine)."""
     docs = load_table(spark, sf, "documents")

@@ -17,7 +17,9 @@ Design for 100 TB:
   same engine-portable arithmetic as :func:`~analyst_toolkit_spark.llm.
   text.hash_split`, so every weight reproduces bit-for-bit in DuckDB SQL.
 - ONE tokenize pass over the corpus: the (doc, bucket, n) aggregate is cut
-  with a LAZY ``localCheckpoint`` before fanning out to its three consumers
+  with ``localCheckpoint(eager=False)`` before fanning out to its three
+  consumers; the call is not lazy (it runs the tokenize and shuffle-map
+  stages before it returns, and the first action stores the cut)
   (the raw bucket distribution, the raw total, and the per-doc scoring
   join). Without the cut, Catalyst's per-branch column pruning makes the
   three aggregate subtrees canonically unequal, so neither static
@@ -87,9 +89,10 @@ def dsir_logweights(
         .withColumn("bucket", hash_bucket("token", b))
         .groupBy(id_col, "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
-        # lazy cut: materialized by the query's own action, then shared by
-        # all three consumers — the single-tokenize-pass guarantee (see
-        # module docstring; plan-asserted in tests/test_plans.py)
+        # cut: the call runs the tokenize and shuffle-map stages, the
+        # query's first action stores the aggregate, and all three consumers
+        # share it — the single-tokenize-pass guarantee (see module
+        # docstring; plan-asserted in tests/test_plans.py)
         .localCheckpoint(eager=False)
     )
     raw_b = doc_b.groupBy("bucket").agg(F.sum("n").alias("rn"))
@@ -98,9 +101,9 @@ def dsir_logweights(
         .withColumn("bucket", hash_bucket("token", b))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("tn"))
-        # second lazy cut: the target bucket table (<= B rows) feeds both
-        # the weight join and the T total; without it the T branch would
-        # re-tokenize the target slice
+        # second cut (its shuffle-map stage runs here): the target bucket
+        # table (<= B rows) feeds both the weight join and the T total;
+        # without it the T branch would re-tokenize the target slice
         .localCheckpoint(eager=False)
     )
     # groupless totals over the cuts: 1-row frames, structurally bounded —

@@ -1648,7 +1648,8 @@ def rrf_fuse(
     frames, so the single-partition rank window is bounded by the caller's
     own k. ``max_list_rows`` (default 10k) is the census gate matching the
     package's refuse-quadratic-work discipline: each list is lineage-cut
-    (lazy localCheckpoint) and counted through a ``limit(cap+1)`` probe
+    (``localCheckpoint(eager=False)``, whose call runs the list's shuffle
+    stages) and counted through a ``limit(cap+1)`` probe
     BEFORE the window — a corpus-scale score frame raises with the
     actionable fix (fuse corpus-scale scores by JOINING the score columns;
     this operator exists for the retrieval path) instead of melting down in

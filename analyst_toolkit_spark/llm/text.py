@@ -1785,7 +1785,8 @@ def tfidf_cosine_pairs(
     the join, yet still contributes its (tiny) exact share to the cosine.
 
     Plan at 100 TB: tokenize ONCE (the tf aggregate and downstream streams
-    are cut with lazy localCheckpoints — the dsir single-tokenize-pass
+    are cut with ``localCheckpoint(eager=False)``, which runs the subtree's
+    shuffle stages during the call — the dsir single-tokenize-pass
     discipline). All shuffles key on xxhash64(term) or the id pair, never
     term text; the prefix ranking window is DOC-keyed (per-doc vocab
     state, never global). A Σ prefix_count(t)·(df(t)−1) candidate census

@@ -57,12 +57,14 @@ def cut(df: DataFrame, *, durable_dir: str | None = None, name: str) -> DataFram
     returns, and the caller's next action runs the final stage. With
     ``durable_dir`` it is a parquet write to ``{durable_dir}/{name}``
     (overwrite) that survives executor loss, and the returned read scans
-    only the written files. ``name`` is only used for the durable cut."""
+    only the written files; it reads with ``df``'s schema, so it runs no
+    schema-inference job (Spark reads every file-source column as
+    nullable either way). ``name`` is only used for the durable cut."""
     if not durable_dir:
         return df.localCheckpoint(eager=False)
     path = f"{durable_dir.rstrip('/')}/{name}"
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def remove(spark: SparkSession, path: str) -> None:

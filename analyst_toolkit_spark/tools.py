@@ -151,7 +151,10 @@ class Toolkit:
                 "outlier_handling": {"run": True, "config": self._coerce_config(config)},
             }
         run = run_pipeline(self.spark, C.pipeline_config(master), src)
-        if session_id is not None:
+        # with neither df nor input_path, src is the session's stored frame:
+        # a module that returned it unchanged (diagnostics, flag-mode
+        # duplicates) has nothing to save
+        if session_id is not None and not (df is None and input_path is None and run.df is src):
             self.store.save(session_id, run.df)
         for h in run.history:
             self._record(h["module"], h["status"], h["summary"])

@@ -131,6 +131,136 @@ def test_session_store_legacy_layout_restores(spark, small, tmp_path):
     assert store.get("old").count() == 2
 
 
+def _session_files(tmp_path, sid):
+    return sorted(p.name for p in tmp_path.iterdir() if p.name.startswith(f"{sid}."))
+
+
+def test_session_store_metadata_and_configs_survive_eviction(spark, small, tmp_path):
+    store = SessionStore(spark, max_entries=1, persist_dir=str(tmp_path))
+    store.save("a", small, metadata={"source": "a.csv"})
+    store.save_config("a", "validation", "validation: {}")
+    store.save("b", small)  # evicts a: only its in-memory entry goes
+    assert {s["session_id"] for s in store.list_sessions()} == {"b"}
+    assert store.get_config("a", "validation") == "validation: {}"
+    assert store.get("a").count() == 2
+    assert store.list_sessions()[0]["metadata"] == {"source": "a.csv"}
+    store.save("a", small.limit(1))  # metadata=None keeps the session's metadata
+    fresh = SessionStore(spark, persist_dir=str(tmp_path))
+    assert fresh.get_config("a", "validation") == "validation: {}"
+    assert fresh.get("a").count() == 1
+    assert fresh.list_sessions()[0]["metadata"] == {"source": "a.csv"}
+
+
+def test_session_store_restored_schema_matches_parquet(spark, tmp_path):
+    import datetime
+    import decimal
+    import json
+
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from analyst_toolkit_spark.ingest import ROW_ID, with_row_id
+
+    schema = T.StructType([
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("amount", T.DecimalType(12, 3)),
+        T.StructField("tags", T.ArrayType(T.IntegerType(), containsNull=False)),
+        T.StructField("pt", T.StructType([T.StructField("x", T.LongType(), False), T.StructField("y", T.StringType())])),
+    ])
+    rows = [(datetime.datetime(2020, 1, 2, 3, 4, 5), decimal.Decimal("1.500"), [1, 2], (7, "q"))]
+    df = with_row_id(spark.createDataFrame(rows, schema))
+    assert not df.schema[ROW_ID].nullable
+    SessionStore(spark, persist_dir=str(tmp_path)).save("typed", df)
+    restored = SessionStore(spark, persist_dir=str(tmp_path)).get("typed")
+    version = json.loads((tmp_path / "typed.current").read_text())["version"]
+    assert restored.schema == spark.read.parquet(str(tmp_path / version)).schema
+    assert restored.drop(ROW_ID).collect() == df.drop(ROW_ID).collect()
+    assert restored.select(F.col("pt.x")).first()[0] == 7
+
+
+@pytest.mark.parametrize("how", ["delete", "ttl_in_memory", "ttl_after_eviction"])
+def test_session_store_delete_and_expiry_are_final(spark, small, tmp_path, how):
+    import time
+
+    store = SessionStore(spark, max_entries=1, ttl_sec=3600, persist_dir=str(tmp_path))
+    store.save("gone", small)
+    store.save("gone", small.limit(1))  # two versions on disk
+    if how == "ttl_after_eviction":
+        store.save("other", small)  # evicts "gone" to disk
+    assert "gone.current" in _session_files(tmp_path, "gone")
+    if how == "delete":
+        store.delete("gone")
+    else:
+        store.ttl_sec = 0.01
+        time.sleep(0.05)
+        with pytest.raises(KeyError, match="expired"):
+            store.get("gone")
+    assert _session_files(tmp_path, "gone") == []
+    with pytest.raises(KeyError):
+        store.get("gone")
+    with pytest.raises(KeyError):
+        SessionStore(spark, persist_dir=str(tmp_path)).get("gone")
+
+
+@pytest.mark.parametrize("pointer,jobs", [("manifest", 0), ("plain_text", 1)])
+def test_session_store_durable_restore_jobs(spark, small, tmp_path, pointer, jobs):
+    import json
+
+    from tests.test_lineage_cut import _jobs
+
+    SessionStore(spark, persist_dir=str(tmp_path)).save("j", small)
+    if pointer == "plain_text":  # the pointer layout before manifests
+        ptr = tmp_path / "j.current"
+        ptr.write_text(json.loads(ptr.read_text())["version"])
+    store = SessionStore(spark, persist_dir=str(tmp_path))
+    # the restore alone; collecting the frame then runs the scan
+    assert _jobs(spark, lambda: store.get("j")) == (jobs, 1)
+    assert sorted(map(tuple, store.get("j").collect())) == [(1, "x"), (2, "y")]
+
+
+def test_session_store_reads_extend_ttl_in_a_new_store(spark, small, tmp_path):
+    import time
+
+    store = SessionStore(spark, max_entries=1, ttl_sec=2.0, persist_dir=str(tmp_path))
+    store.save("read", small, metadata={"source": "r"})
+    for _ in range(2):  # last saved 2.4 s ago, last read just now
+        time.sleep(1.2)
+        store.get("read")
+    fresh = SessionStore(spark, ttl_sec=2.0, persist_dir=str(tmp_path))
+    assert fresh.get("read").count() == 2
+    assert fresh.list_sessions()[0]["metadata"] == {"source": "r"}
+
+
+@pytest.mark.parametrize("evicted", [False, True])
+def test_session_store_save_after_expiry_starts_fresh(spark, small, tmp_path, evicted):
+    import json
+    import time
+
+    store = SessionStore(spark, max_entries=1, ttl_sec=1.5, persist_dir=str(tmp_path))
+    store.save("exp", small, metadata={"source": "old"})
+    store.save_config("exp", "validation", "validation: {}")
+    if evicted:
+        store.save("other", small)
+    time.sleep(1.7)
+    store.save("exp", small.limit(1))  # onto the expired session
+    assert store.get("exp").count() == 1  # the new save itself has not expired
+    assert store.get_config("exp", "validation") is None
+    assert {s["session_id"]: s["metadata"] for s in store.list_sessions()} == {"exp": {}}
+    version = json.loads((tmp_path / "exp.current").read_text())["version"]
+    assert _session_files(tmp_path, "exp") == sorted(["exp.current", version])
+
+
+def test_session_store_caches_durable_and_in_memory_frames(spark, small, tmp_path):
+    durable = SessionStore(spark, max_entries=1, persist_dir=str(tmp_path))
+    durable.save("d", small)
+    assert durable.get("d").storageLevel.useMemory
+    durable.save("e", small)  # evicts d, whose restore is cached again
+    assert durable.get("d").storageLevel.useMemory
+    memory = SessionStore(spark)
+    memory.save("m", small)
+    assert memory.get("m").storageLevel.useMemory
+
+
 def test_load_table_restores_nanos_conf(spark):
     from analyst_toolkit_spark.ingest import load_table
 

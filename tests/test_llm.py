@@ -4140,7 +4140,8 @@ def test_rrf_fuse_grouped_matches_ungrouped(spark, sf_dir):
 
 
 def test_ivf_probe_join_nondeterministic_queries(spark, tmp_path):
-    """r14 ADVICE: the query frame is materialized ONCE (lazy localCheckpoint)
+    """r14 ADVICE: the query frame is materialized ONCE (``localCheckpoint(
+    eager=False)``, which runs the frame's shuffle stages during the call)
     before BOTH the probed-set collect and the join-side plan, so a
     nondeterministic caller frame (unordered limit over a shuffled source)
     cannot evaluate differently in the two jobs and silently drop results —

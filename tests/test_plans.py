@@ -485,7 +485,8 @@ def test_line_dedup_census_shuffle_is_labels_only(spark, sf_dir):
 
 def test_dsir_single_tokenize_pass(spark, sf_dir):
     """dsir_logweights must tokenize the raw corpus ONCE: the (doc, bucket)
-    aggregate is cut with a lazy localCheckpoint and its three consumers
+    aggregate is cut with ``localCheckpoint(eager=False)`` (the call runs
+    the tokenize and shuffle-map stages; it is not lazy) and its three consumers
     read the cut. Without it, per-branch column pruning defeats exchange
     reuse and the corpus is re-tokenized per branch (measured pre-fix:
     3 tokenize passes, 5x the runtime at sf0.1). The target bucket table is
@@ -494,7 +495,7 @@ def test_dsir_single_tokenize_pass(spark, sf_dir):
     cut materialization."""
     plan = _plan(QUERIES["dsir_weights_docs"](spark, sf_dir))
     assert plan.count("Scan parquet") == 1
-    assert "ExistingRDD" in plan, "lazy localCheckpoint cut missing"
+    assert "ExistingRDD" in plan, "localCheckpoint cut missing"
 
 
 def test_kmv_overlap_reads_only_the_cut(spark, sf_dir):

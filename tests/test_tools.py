@@ -136,3 +136,26 @@ def test_manage_session_and_dashboard(toolkit, spark):
     dash = toolkit.call("get_cockpit_dashboard")
     assert "diagnostics" in dash["latest_status_by_module"]
     assert 0 <= dash["health"]["overall_score"] <= 100
+
+
+def test_module_tools_keep_session_metadata(spark, csv_path, tmp_path):
+    tk = Toolkit(spark, persist_dir=str(tmp_path / "state"), max_entries=1)
+    tk.call("load_session", session_id="meta", input_path=csv_path)
+    tk.call("normalization", session_id="meta", config={"normalization": {"rules": {"standardize_text_columns": ["seg"]}}})
+    tk.call("load_session", session_id="other", input_path=csv_path)  # evicts "meta"
+    tk.call("imputation", session_id="meta", config="imputation:\n  rules:\n    strategies:\n      bal: mean\n")
+    meta = {s["session_id"]: s["metadata"] for s in tk.store.list_sessions()}
+    assert meta == {"meta": {"source": csv_path}}
+
+
+@pytest.mark.parametrize(
+    "module,config",
+    [("diagnostics", None), ("duplicates", {"duplicates": {"mode": "flag"}})],
+)
+def test_unchanged_frame_is_not_rewritten(spark, csv_path, tmp_path, module, config):
+    state = tmp_path / "state"
+    tk = Toolkit(spark, persist_dir=str(state))
+    tk.call("load_session", session_id="same", input_path=csv_path)
+    before = (state / "same.current").read_bytes(), sorted(p.name for p in state.iterdir())
+    assert tk.call(module, session_id="same", config=config)["status"] == "pass"
+    assert ((state / "same.current").read_bytes(), sorted(p.name for p in state.iterdir())) == before
