@@ -675,8 +675,10 @@ def q_top_supplier_revenue(spark, sf):
         l.groupBy(F.col("l_suppkey"))
         .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("total_rev"))
     )
-    # r16: lazy lineage cut so the fact subtree (quarter scan + suppkey
+    # r16: lineage cut so the fact subtree (quarter scan + suppkey
     # aggregate) evaluates ONCE — the scalar-max cross join read it twice.
+    # The call runs the scan and the aggregate's shuffle-map stage; the
+    # first action runs the final aggregate and stores the cut.
     # A cut, not a window: a global max window has no partition key and
     # would funnel every per-supplier row through one task at scale,
     # while the cut keeps both aggregates map-side partial and costs one
@@ -3635,10 +3637,11 @@ def q_ivf_recall_grid(spark, sf):  # NON-SQL (seeded driver k-means + on-disk IV
     # r15 optimization round: EAGER cut of the assignment — each of the
     # three tier writes (plus pq_train's sample collect) otherwise
     # re-evaluated the scan + centroid-literal assignment fold as its own
-    # job; one materialization feeds all of them. Eager (not lazy) because
-    # the writes then run CONCURRENTLY (guide §2.6 — independent jobs with
-    # disjoint output dirs back-fill each other's stage tails), and
-    # overlapped first-materialization of a lazy cut would race.
+    # job; one materialization feeds all of them. eager=True (not False)
+    # because the writes then run CONCURRENTLY (guide §2.6 — independent
+    # jobs with disjoint output dirs back-fill each other's stage tails),
+    # and with eager=False their overlapped first actions would race to
+    # store the cut.
     assigned = assigned.localCheckpoint(eager=True)
     base = _stream_tmpdir("ivf_recall_")
     tiers = ("raw", "sq8", "pq")

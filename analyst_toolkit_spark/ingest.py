@@ -28,29 +28,12 @@ ROW_ID = "_row_id"
 _NANOS_CONF_LOCK = threading.Lock()
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def with_row_id(df: DataFrame) -> DataFrame:
     """Mint the stable, order-preserving row id (no shuffle, no window)."""
     if ROW_ID in df.columns:
         return df
     return df.withColumn(ROW_ID, F.monotonically_increasing_id())
-
-
-def drop_row_id(df: DataFrame) -> DataFrame:
-    return df.drop(ROW_ID) if ROW_ID in df.columns else df
 
 
 def _nanos_timestamp_cols(path: str) -> list[str]:
@@ -118,8 +101,3 @@ def load_csv(spark: SparkSession, path: str, infer_schema: bool = True, row_id: 
     df = spark.read.option("header", "true").option("inferSchema", str(infer_schema).lower()).csv(path)
     return with_row_id(df) if row_id else df
 
-
-def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:
-    """Register every testdata table as a temp view for the SQL surface."""
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

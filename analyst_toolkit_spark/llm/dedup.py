@@ -293,8 +293,9 @@ def jaccard_verify(
         # r15 optimization round: the verify join below references sh for
         # BOTH pair sides, and each side otherwise re-evaluates the corpus
         # scan + candidate semi-join + shingle tokenization as its own
-        # subtree (plan-visible as two independent scans). One lazy cut
-        # halves that. This is NOT corpus-wide shingle materialization (the
+        # subtree (plan-visible as two independent scans). One cut halves
+        # that (the call runs the candidate-id broadcast; the first verify
+        # action runs the shingling and stores the cut). This is NOT corpus-wide shingle materialization (the
         # rule in minhash_dedup_pairs stands): sh is bounded by the
         # candidate-doc set — at scale a sliver of the corpus by the LSH
         # design, and exactly the frame both joins need.
@@ -568,9 +569,10 @@ def simhash_near_pairs(
     ``eager`` (default True) localCheckpoints the banded signatures at call
     time — both self-join sides share that subtree and the cut avoids
     computing the signature fold twice (measured ~2x at sf0.1). Pass
-    ``eager=False`` to stay fully lazy when composing a larger plan (matches
-    ``minhash_dedup_pairs``'s contract); the checkpoint then runs at the
-    first action instead.
+    ``eager=False`` when composing a larger plan (matches
+    ``minhash_dedup_pairs``'s contract): the call then runs only the
+    repartition shuffle ``ensure_parallelism`` may add, and the fold runs
+    and is stored at the first action.
     """
     from analyst_toolkit_spark.llm.scale import ensure_parallelism
 
@@ -1203,8 +1205,9 @@ def remove_repeated_spans(
 
     r15 optimization round: the detection gram stream and the token surgery
     previously each ran the regex tokenizer over the corpus; one (id, __toks)
-    frame — size-gated lazy cut, token arrays ≈ the text bytes again, the
-    same spill math as the gram-stream cut — now feeds both, so the corpus
+    frame — size-gated ``localCheckpoint(eager=False)`` cut, token arrays ≈
+    the text bytes again, the same spill math as the gram-stream cut — now
+    feeds both, so the corpus
     tokenizes ONCE below the gate (above it the recompute form stands).
     """
     from analyst_toolkit_spark.functions.stats import plan_size_bytes

@@ -108,12 +108,14 @@ def _banded_sigs(
     sh = ensure_parallelism(df).select(F.col(id_col), shingles(key, n_shingle).alias("sh"))
     raw = sh.select(F.col(id_col), minhash_signature(F.col("sh"), k).alias("sig"))
     if materialize:
-        # r15 optimization round: LAZY cut — the consumer's first action
-        # (the sigs write in dedup_index_write, the first probe join in
-        # near_probe) is what materializes the checkpoint, fusing the fold
-        # and that action into one job instead of running a dedicated
-        # materialization job first. Every later reference still reads the
-        # one persisted copy — the fold runs exactly once either way.
+        # r15 optimization round: a ``localCheckpoint(eager=False)`` cut. The
+        # call runs only the shuffle below it (the repartition
+        # ensure_parallelism may add); the fold is map-side above that, so
+        # the consumer's first action (the sigs write in dedup_index_write,
+        # the first probe join in near_probe) runs the fold and stores the
+        # cut in one job instead of a dedicated materialization job first.
+        # Every later reference reads the one stored copy — the fold runs
+        # exactly once either way.
         raw = raw.localCheckpoint(eager=False)
     sentinel = "array(" + ",".join([f"{(1 << 63) - 1}L"] * k) + ")"
     sigs = raw.filter(F.expr(f"sig != {sentinel}"))
@@ -196,7 +198,7 @@ def dedup_index_write(
             # fold's stage tail leaves idle, instead of serializing the two
             # layers. One extra thread only; the near writes stay sequential
             # (the bands write reads the sig checkpoint the sigs write
-            # materializes — overlapping THOSE would race the lazy cut).
+            # stores — overlapping THOSE would race to store the cut).
             from concurrent.futures import ThreadPoolExecutor
 
             pool = ThreadPoolExecutor(max_workers=1)
@@ -278,8 +280,10 @@ def exact_probe(
     # batch plan (possibly an expensive upstream chain) ran up to three
     # times, and a nondeterministic batch (sample()/limit()) could hand the
     # two collects different fingerprint sets than the join (the
-    # ivf_probe_join one-materialization rule). The cut is lazy: the tier
-    # collect is the materializing action; the row is 2 short hex strings +
+    # ivf_probe_join one-materialization rule). The call runs the shuffle
+    # stages of the caller's batch plan, if any; the fingerprint projection
+    # is map-side, and the tier collect is the action that stores the cut.
+    # The row is 2 short hex strings +
     # an id — smaller than the near layer's unconditional k-long signature
     # cut, so the same discipline applies at any batch size.
     fps = _fingerprints(batch, key, id_col, width).localCheckpoint(eager=False)
@@ -410,8 +414,10 @@ def near_probe(
         # r15 optimization round: the candidate frame feeds TWO subtrees —
         # the index-sig semi-join key set and the final verify join — so
         # without a cut the bands scan + candidate equi-join (the probe's
-        # only index-scale work) ran once per reference. Lazy: the first
-        # probe action materializes it; candidate pairs are id-pair-sized.
+        # only index-scale work) ran once per reference. The call runs the
+        # join's and the distinct's shuffle-map stages; the first probe
+        # action runs the final stage and stores the cut. Candidate pairs
+        # are id-pair-sized.
         .localCheckpoint(eager=False)
     )
     idx_sigs = (

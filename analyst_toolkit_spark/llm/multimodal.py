@@ -203,16 +203,6 @@ def extract_image_meta(df: DataFrame, blob_col: str = "content", deterministic_f
     return df.mapInPandas(mapper, schema=out_schema)
 
 
-def frame_sample_plan(df: DataFrame, ts_col: str = "ts", every_n_seconds: int = 10) -> DataFrame:
-    """Frame-sampling *plan* for video rows: emits (blob, sample_ts) pairs via
-    a generator column — the decode itself is the stubbed seam. Shows the
-    explode-side plumbing (one row per frame to extract) that a real pipeline
-    schedules across executors."""
-    duration = F.coalesce(F.col("duration_s"), F.lit(0))
-    sample_ts = F.sequence(F.lit(0), duration.cast("int"), F.lit(every_n_seconds))
-    return df.withColumn("sample_ts", F.explode(sample_ts))
-
-
 def _resize_png(b: bytes, max_side: int) -> bytes:
     """REAL resize for PNG blobs: stdlib decode -> nearest-neighbor sample ->
     re-encode. Blobs already within max_side pass through unchanged."""

@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from analyst_toolkit_spark.sources.io import hadoop_fs
+
 
 def lit_vec(vec: list[float]) -> Column:
     """Literal array<double> column built as ONE parsed SQL expression.
@@ -245,7 +247,7 @@ def lsh_multi_table_pairs(
     in every table.
 
     Plan shape at 100 TB: ONE pass computes all T bucket keys map-side
-    (T x n_planes dot products per row) behind a lazy lineage cut; each
+    (T x n_planes dot products per row) behind one lineage cut; each
     table self-joins LABELS ONLY (id, bucket) — the vectors never enter
     the candidate joins; the union dedups (a pair colliding in several
     tables verifies once); one final labels->vectors join scores the
@@ -770,15 +772,8 @@ def ivf_write(
     )
 
 
-def _hadoop_path_fs(spark, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return jpath, fs
-
-
 def _hadoop_write_text(spark, path: str, text: str) -> None:
-    jpath, fs = _hadoop_path_fs(spark, path)
+    fs, jpath = hadoop_fs(spark, path)
     out = fs.create(jpath, True)
     try:
         out.write(bytearray(text.encode("utf-8")))
@@ -787,7 +782,7 @@ def _hadoop_write_text(spark, path: str, text: str) -> None:
 
 
 def _hadoop_read_text(spark, path: str) -> str:
-    jpath, fs = _hadoop_path_fs(spark, path)
+    fs, jpath = hadoop_fs(spark, path)
     stream = fs.open(jpath)
     try:
         jvm = spark._jvm
@@ -1684,10 +1679,11 @@ def rrf_fuse(
         # r16 (r15 VERDICT #6): ONE guard job for ALL lists instead of one
         # limit(cap+1) count per list — the per-list probes are unioned into
         # a single bounded action (each arm still stops at cap+1 rows), which
-        # also materializes every list's lazy cut in the same job. Fail-loud
-        # BEFORE the single-partition rank window is preserved exactly: the
-        # guard still runs eagerly at call time, and the windows read the
-        # same materializations the guard counted.
+        # also stores every list's cut in the same job (each cut's call
+        # already ran that list's shuffle stages). Fail-loud BEFORE the
+        # single-partition rank window is preserved exactly: the guard still
+        # runs eagerly at call time, and the windows read the same
+        # materializations the guard counted.
         cuts = [df.localCheckpoint(eager=False) for df, _ in rankings]
         probes = None
         for li, df in enumerate(cuts):

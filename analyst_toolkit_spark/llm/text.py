@@ -178,7 +178,7 @@ def corpus_data_card(
     if components is not None:
         cols.append(F.col(id_col).alias("__dc_id"))
     # r15 optimization round: the multiplicity census and the per-doc
-    # metric projection both read the corpus — one narrow lazy cut (group,
+    # metric projection both read the corpus — one narrow cut (group,
     # md5, a few numerics — never the text bodies) feeds both, so the scan
     # + per-row md5 run once instead of twice. The boilerplate arm below
     # still reads the raw text separately (it needs the line split).
@@ -544,8 +544,9 @@ def cdc_chunk_dedup(
     census bytes, and md5 keeps every stage cross-engine replayable.
 
     Plan at 100 TB (the line_dedup discipline): the chunker is ONE
-    Arrow-batched map pass behind a lazy lineage cut (census + reassembly
-    read one materialization — the chunk scan never runs twice); the census
+    Arrow-batched map pass behind a ``localCheckpoint(eager=False)`` cut
+    (census + reassembly read one materialization — the chunk scan never
+    runs twice); the census
     shuffles only (md5, id) label pairs; the boilerplate hash set is
     output-bounded and joins back UNHINTED (AQE broadcasts it when small);
     the only body-bearing shuffle is the doc-keyed reassembly groupBy.
@@ -1227,7 +1228,7 @@ def bm25_scores(
 
     Plan at 100 TB: ONE tokenize pass — a single projection computes the
     doc length AND the hit tokens (array ``filter`` against the |terms|
-    literal, so hits are cut map-side BEFORE any shuffle) behind one lazy
+    literal, so hits are cut map-side BEFORE any shuffle) behind one
     lineage cut shared by every consumer; the only corpus-scale exchange
     is the (doc, term, tf) stream of actual hits; per-term df (<= |terms|
     rows) and the corpus stats (exactly 1 row: N, avgdl) ride broadcast
@@ -1238,7 +1239,7 @@ def bm25_scores(
     # r15 optimization round: ONE tokenize pass for the whole query. The
     # doc length and the query-term hits are both functions of the same
     # token array, so one projection computes size(toks) AND the
-    # isin-filtered hit tokens behind one lazy cut; lens/stats and the
+    # isin-filtered hit tokens behind one cut; lens/stats and the
     # tf/df branches then read that materialization instead of each
     # re-running regexp_extract_all over the corpus (the original shape
     # paid FOUR tokenize passes: lens twice, hits' explode twice). The cut
@@ -1334,9 +1335,10 @@ def bm25_scores_join(
     so the corpus-side work is paid ONCE for the whole workload:
 
     1. the query side explodes/lowercases/dedups to a (query, term) table
-       behind ONE lazy lineage cut (the ivf_probe_join one-materialization
-       rule: the distinct-term set and the per-query join must read the
-       same evaluation of a possibly-nondeterministic caller frame);
+       behind ONE lineage cut, whose call runs the dedup shuffle (the
+       ivf_probe_join one-materialization rule: the distinct-term set and
+       the per-query join must read the same evaluation of a
+       possibly-nondeterministic caller frame);
     2. the corpus token explode is filtered map-side by a LEFT-SEMI join
        against the distinct TERM set (size-gated broadcast — the workload-
        derived generalization of the single query's ``isin`` literal), so

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from analyst_toolkit_spark.functions.stats import (
+    _nan_as_null,
     any_horizontal,
     collect_stats,
     percentile_exact,
@@ -74,9 +75,11 @@ def compute_bounds(df: DataFrame, specs: list[OutlierSpec], exact: bool = True) 
     return bounds
 
 
-def flag_expr(column: str, lo: float, hi: float) -> Column:
-    """Outlier predicate with null→False parity (detect_outliers.py:74-76)."""
-    c = F.col(column)
+def flag_expr(df: DataFrame, column: str, lo: float, hi: float) -> Column:
+    """Outlier predicate with null→False parity (detect_outliers.py:74-76).
+    NaN counts as missing, as in pandas: Spark orders NaN above every value,
+    so ``NaN > hi`` would otherwise flag it."""
+    c = _nan_as_null(df, column)
     return F.coalesce((c < F.lit(lo)) | (c > F.lit(hi)), F.lit(False))
 
 
@@ -104,7 +107,7 @@ def detect_outliers(
     for s in specs:
         lo, hi = bounds[s.column]
         flag = f"{s.column}_{s.method}_outlier"
-        out = out.withColumn(flag, flag_expr(s.column, lo, hi))
+        out = out.withColumn(flag, flag_expr(df, s.column, lo, hi))
         results[s.column] = {"method": s.method, "lower": lo, "upper": hi, "flag_col": flag}
     return out, results
 
@@ -160,7 +163,7 @@ def handle_outliers(
     if strategy in ("mean", "median"):
         aggs = []
         for col, info in detection_results.items():
-            kept = F.when(~F.col(info["flag_col"]), F.col(col))
+            kept = F.when(~F.col(info["flag_col"]), _nan_as_null(df, col))
             if strategy == "mean":
                 aggs.append(F.avg(kept).alias(col))
             else:

@@ -6,7 +6,8 @@ replace the reference's joblib pickles (m00_utils/load_data.py:45-62 →
 mcp_server/io_storage.py:84-133) is a path-scheme concern: ``gs://``/``s3a://``
 URIs go straight to ``spark.read`` when the connector jar is on the cluster —
 the reference's manual blob-list-and-concat disappears because multi-file scan
-is native.
+is native — and artifact uploads (``storage.upload_artifact``) copy through the
+same Hadoop ``FileSystem`` (``hadoop_fs``).
 
 Report plane (S8/S9, m00_utils/export_utils.py:30-131): reports are SMALL
 collected aggregates by construction (profile rows, audit tables), so the
@@ -67,13 +68,19 @@ def cut(df: DataFrame, *, durable_dir: str | None = None, name: str) -> DataFram
     return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` — the Hadoop filesystem Spark itself
+    would use for that URI. Raises when no filesystem serves its scheme."""
+    hp = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hp.getFileSystem(spark._jsc.hadoopConfiguration()), hp
+
+
 def remove(spark: SparkSession, path: str) -> None:
     """Best-effort recursive delete of every path matching the Hadoop glob
     ``path``, on any filesystem Spark can write to. Never raises: callers
     use it for retention and cleanup, which must not fail the work."""
     try:
-        hp = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, hp = hadoop_fs(spark, path)
         for st in fs.globStatus(hp) or []:
             fs.delete(st.getPath(), True)
     except Exception:
@@ -145,20 +152,11 @@ def export_html_report(reports: dict[str, Any], path: str, title: str = "Report"
 
 
 def load_any(spark: SparkSession, path: str, fmt: str | None = None) -> DataFrame:
-    """Scheme- and format-dispatching reader (S1-S4): local or cloud URI,
-    csv/parquet/json by extension unless forced.
-
-    URIs whose scheme has a registered :class:`~analyst_toolkit_spark.sources.
-    storage.ObjectStore` (tests, fake schemes, SDK-backed stores) take the
-    staged list→cap→download→read path; everything else — local paths and
-    native Hadoop-connector schemes (``gs://``, ``s3a://``, …) — goes straight
-    to Spark's distributed reader.
+    """Format-dispatching reader (S1-S4): csv/parquet/json/orc by extension
+    unless forced. Every path or URI — a local file, a directory or prefix of
+    part files, ``gs://``/``s3a://``/``hdfs://`` with the connector on the
+    cluster — goes straight to Spark's distributed reader.
     """
-    if "://" in path:
-        from analyst_toolkit_spark.sources import storage
-
-        if storage.resolve_store(path) is not None:
-            return storage.load_uri(spark, path, fmt)
     if fmt is None:
         # compressed variants keep their logical format (Spark's text-based
         # readers decompress .gz/.bz2/... transparently, one file per task)

@@ -1,52 +1,30 @@
-"""Object-storage plane (S4 scan, S11 artifact upload).
+"""Artifact plane (S11): upload report artifacts to the configured bucket.
 
-Reference semantics (mcp_server/io_storage.py):
+Reference semantics (mcp_server/io_storage.py:280-329): ``upload_artifact``
+puts a blob at the retry-stable name ``prefix/path_root/module/filename``; a
+failed upload that nonetheless exists at the destination counts as success
+(idempotent retry); bucket/prefix come from the caller or
+``ANALYST_REPORT_BUCKET`` / ``ANALYST_REPORT_PREFIX``.
 
-- ``load_from_gcs`` (:84-133): a single-blob path downloads and reads one
-  file; a prefix path lists blobs, keeps ``.csv``/``.parquet``, enforces
-  object-count and byte limits while listing, downloads each and concats.
-- ``upload_artifact`` (:280-329): content-typed blob upload to a
-  retry-stable name ``prefix/path_root/module/filename``; a failed upload
-  that nonetheless exists at the destination counts as success (idempotent
-  retry); bucket/prefix come from config or ``ANALYST_REPORT_BUCKET`` /
-  ``ANALYST_REPORT_PREFIX``.
-
-Spark-first split of the same capability:
-
-- **Native path (the 100 TB data plane).** For schemes the cluster's Hadoop
-  connectors speak (``gs://``, ``s3a://``, ``abfss://``, ``hdfs://``),
-  ``spark.read.parquet("gs://bucket/prefix/")`` already does distributed
-  multi-file scan with footer pruning — the reference's list-download-concat
-  loop *is* Spark's native reader, so those URIs pass straight through
-  (``load_uri`` → ``io.load_any``). Nothing is staged on the driver.
-- **Store path (control plane / fake schemes / mixed prefixes).** An
-  :class:`ObjectStore` abstraction with local-directory and in-memory
-  implementations covers what the native reader can't: unit-testing the
-  prefix semantics without cloud credentials, artifact upload bookkeeping,
-  and prefixes mixing formats (native readers are single-format per scan).
-  Staged reads are limit-enforced like the reference and are NOT the big-data
-  path — the caps exist precisely so nobody ships a 100 TB prefix through
-  the driver.
+The copy goes through the destination's Hadoop ``FileSystem`` — the same
+connectors Spark reads and writes with — so any bucket URI the cluster can
+write (``file://``, ``hdfs://``, or ``gs://``/``s3a://`` with the connector
+jar) works. The blob's own content type is whatever the connector sets; the
+ledger records the type the reference would have sent. Cloud *scans* (S4) need
+nothing here: ``io.load_any`` hands every URI to Spark's reader.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import tempfile
+import posixpath
 import time
 from dataclasses import dataclass, field
-from typing import Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
-#: Listing caps for store-backed prefix reads (reference
-#: input/limits.py enforce_gcs_prefix_object_limit / input-bytes limit).
-MAX_PREFIX_OBJECTS = int(os.environ.get("SPARK_GRAFT_STORAGE_MAX_OBJECTS", "1024"))
-MAX_PREFIX_BYTES = int(os.environ.get("SPARK_GRAFT_STORAGE_MAX_BYTES", str(10 << 30)))
-
-#: Schemes Spark's Hadoop connectors read natively — never staged.
-NATIVE_SCHEMES = ("gs", "s3a", "s3", "abfss", "wasbs", "hdfs", "file")
+from analyst_toolkit_spark.sources.io import hadoop_fs
 
 _CONTENT_TYPES = {
     ".html": "text/html",
@@ -58,208 +36,6 @@ _CONTENT_TYPES = {
     ".txt": "text/plain",
     ".png": "image/png",
 }
-
-_DATA_EXTS = (".parquet", ".csv", ".json")
-
-
-class StorageError(RuntimeError):
-    pass
-
-
-class ObjectStore:
-    """Minimal blob-store contract: flat namespace of ``name → bytes``."""
-
-    def list(self, prefix: str) -> list[str]:  # names, lexicographic
-        raise NotImplementedError
-
-    def get_bytes(self, name: str) -> bytes:
-        raise NotImplementedError
-
-    def put_bytes(self, name: str, data: bytes, content_type: str | None = None) -> None:
-        raise NotImplementedError
-
-    def exists(self, name: str) -> bool:
-        raise NotImplementedError
-
-    def size(self, name: str) -> int:
-        return len(self.get_bytes(name))
-
-
-class LocalObjectStore(ObjectStore):
-    """Blob semantics over a local directory (one 'bucket' = one root dir)."""
-
-    def __init__(self, root: str):
-        self.root = root
-
-    def _path(self, name: str) -> str:
-        path = os.path.normpath(os.path.join(self.root, name))
-        if not path.startswith(os.path.normpath(self.root) + os.sep):
-            raise StorageError(f"object name escapes store root: {name!r}")
-        return path
-
-    def list(self, prefix: str) -> list[str]:
-        out = []
-        for dirpath, _dirs, files in os.walk(self.root):
-            for f in files:
-                rel = os.path.relpath(os.path.join(dirpath, f), self.root)
-                name = rel.replace(os.sep, "/")
-                if name.startswith(prefix):
-                    out.append(name)
-        return sorted(out)
-
-    def get_bytes(self, name: str) -> bytes:
-        with open(self._path(name), "rb") as fh:
-            return fh.read()
-
-    def put_bytes(self, name: str, data: bytes, content_type: str | None = None) -> None:
-        path = self._path(name)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp-{os.getpid()}"
-        with open(tmp, "wb") as fh:
-            fh.write(data)
-        os.replace(tmp, path)
-
-    def exists(self, name: str) -> bool:
-        return os.path.exists(self._path(name))
-
-    def size(self, name: str) -> int:
-        return os.path.getsize(self._path(name))
-
-
-class MemoryObjectStore(ObjectStore):
-    """In-memory blob store — lets tests drive the full non-local scheme
-    path (list → limit-enforce → stage → read) without cloud credentials."""
-
-    def __init__(self):
-        self.blobs: dict[str, bytes] = {}
-        self.content_types: dict[str, str] = {}
-        self.fail_next_put = 0  # test hook: raise on the next N puts
-
-    def list(self, prefix: str) -> list[str]:
-        return sorted(n for n in self.blobs if n.startswith(prefix))
-
-    def get_bytes(self, name: str) -> bytes:
-        if name not in self.blobs:
-            raise FileNotFoundError(name)
-        return self.blobs[name]
-
-    def put_bytes(self, name: str, data: bytes, content_type: str | None = None) -> None:
-        if self.fail_next_put > 0:
-            self.fail_next_put -= 1
-            # model the reference's retry-stable semantics: the write may have
-            # landed even though the call errored
-            self.blobs[name] = data
-            raise StorageError("injected put failure")
-        self.blobs[name] = data
-        if content_type:
-            self.content_types[name] = content_type
-
-    def exists(self, name: str) -> bool:
-        return name in self.blobs
-
-
-#: scheme → factory(bucket) registry for store-backed URIs.
-_STORES: dict[str, Callable[[str], ObjectStore]] = {}
-_STORE_CACHE: dict[tuple[str, str], ObjectStore] = {}
-
-
-def register_store(scheme: str, factory: Callable[[str], ObjectStore]) -> None:
-    _STORES[scheme] = factory
-    _STORE_CACHE.clear()
-
-
-def unregister_store(scheme: str) -> None:
-    _STORES.pop(scheme, None)
-    _STORE_CACHE.clear()
-
-
-def split_uri(uri: str) -> tuple[str, str, str]:
-    """``scheme://bucket/name`` → (scheme, bucket, name)."""
-    scheme, sep, rest = uri.partition("://")
-    if not sep:
-        return "", "", uri
-    bucket, _, name = rest.partition("/")
-    return scheme, bucket, name
-
-
-def resolve_store(uri: str) -> tuple[ObjectStore, str] | None:
-    """(store, object-name) for a registered scheme, else None (native)."""
-    scheme, bucket, name = split_uri(uri)
-    factory = _STORES.get(scheme)
-    if factory is None:
-        return None
-    key = (scheme, bucket)
-    if key not in _STORE_CACHE:
-        _STORE_CACHE[key] = factory(bucket)
-    return _STORE_CACHE[key], name
-
-
-def _stage_blobs(store: ObjectStore, names: Iterable[str], staging_dir: str) -> dict[str, list[str]]:
-    """Download blobs to local staging, grouped by extension (reference
-    io_storage.py:118-127 blob.download_to_filename loop)."""
-    groups: dict[str, list[str]] = {}
-    for name in names:
-        ext = os.path.splitext(name)[1]
-        local = os.path.join(staging_dir, name.replace("/", "_"))
-        with open(local, "wb") as fh:
-            fh.write(store.get_bytes(name))
-        groups.setdefault(ext, []).append(local)
-    return groups
-
-
-def load_uri(spark: SparkSession, uri: str, fmt: str | None = None) -> DataFrame:
-    """S4 scan: read a single object or a whole prefix from any URI.
-
-    Native schemes go straight to Spark's distributed reader (multi-file
-    prefix scan is native — the 100 TB path). Registered-store schemes get
-    the reference's semantics: single blob → stage + read; prefix → list,
-    keep data files, enforce object/byte caps, stage, read per-format and
-    union by name.
-    """
-    from analyst_toolkit_spark.sources.io import load_any
-
-    resolved = resolve_store(uri)
-    if resolved is None:
-        return load_any(spark, uri, fmt)
-    store, name = resolved
-
-    staging_root = tempfile.mkdtemp(prefix="spark_storage_stage_")
-    if name.endswith(_DATA_EXTS):  # single blob
-        if not store.exists(name):
-            raise FileNotFoundError(f"no object at {uri}")
-        groups = _stage_blobs(store, [name], staging_root)
-    else:  # prefix
-        prefix = f"{name.rstrip('/')}/" if name else ""
-        names, total = [], 0
-        for n in store.list(prefix):
-            if not n.endswith(_DATA_EXTS):
-                continue
-            names.append(n)
-            total += store.size(n)
-            if len(names) > MAX_PREFIX_OBJECTS:
-                raise StorageError(f"prefix {uri} exceeds {MAX_PREFIX_OBJECTS} objects")
-            if total > MAX_PREFIX_BYTES:
-                raise StorageError(f"prefix {uri} exceeds {MAX_PREFIX_BYTES} staged bytes")
-        if not names:
-            raise FileNotFoundError(f"no .parquet/.csv/.json objects under {uri}")
-        groups = _stage_blobs(store, names, staging_root)
-
-    frames = [_read_group(spark, ext, paths) for ext, paths in sorted(groups.items())]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return out
-
-
-def _read_group(spark: SparkSession, ext: str, paths: list[str]) -> DataFrame:
-    if ext == ".csv":
-        return spark.read.option("header", "true").option("inferSchema", "true").csv(paths)
-    if ext == ".json":
-        return spark.read.json(paths)
-    return spark.read.parquet(*paths)
-
-
-# -- artifact plane (S11) -----------------------------------------------------
 
 
 @dataclass
@@ -278,6 +54,7 @@ class ArtifactLedger:
 
 
 def upload_artifact(
+    spark: SparkSession,
     local_path: str,
     *,
     run_id: str,
@@ -287,35 +64,38 @@ def upload_artifact(
     session_id: str | None = None,
     ledger: ArtifactLedger | None = None,
 ) -> str:
-    """S11: upload a local artifact to ``prefix/<run_id|session>/module/name``
-    (reference io_storage.py:280-329). Returns the destination URI, or ""
-    when no bucket is configured / the source is missing — same soft-fail
-    contract as the reference. A failed put whose destination nonetheless
-    exists counts as success (retry-stable names make the upload idempotent).
+    """S11: copy a local artifact to ``bucket/prefix/<session_id|run_id>/
+    module/name`` (reference io_storage.py:280-329). Returns the destination
+    URI, or "" when no bucket is configured, the source is missing or no
+    ``FileSystem`` serves the bucket's scheme — the reference's soft-fail
+    contract. A failed copy whose destination nonetheless exists counts as
+    success (retry-stable names make the upload idempotent).
+
+    Raises ``ValueError`` before writing anything when the path root (it can
+    come from RPC arguments) would leave ``bucket/prefix``.
     """
     bucket_uri = (bucket_uri or os.environ.get("ANALYST_REPORT_BUCKET", "")).strip().rstrip("/")
     if not bucket_uri or not os.path.exists(local_path):
         return ""
     prefix = (prefix or os.environ.get("ANALYST_REPORT_PREFIX", "analyst_toolkit/reports")).strip("/")
 
-    resolved = resolve_store(bucket_uri if "://" in bucket_uri else f"{bucket_uri}/")
-    if resolved is None:
-        return ""  # no store for this scheme (cloud SDK absent) — soft fail
-    store, base = resolved
-
     fname = os.path.basename(local_path)
-    path_root = session_id or run_id
-    blob_name = "/".join(p for p in (base.strip("/"), prefix, path_root, module, fname) if p)
+    name = posixpath.normpath("/".join(p for p in (session_id or run_id, module, fname) if p))
+    if name.split("/")[0] == "..":
+        raise ValueError(f"artifact path escapes {bucket_uri}/{prefix}: {name!r}")
+    dest_uri = "/".join(p for p in (bucket_uri, prefix, name) if p)
     content_type = _CONTENT_TYPES.get(os.path.splitext(fname)[1].lower(), "application/octet-stream")
 
-    with open(local_path, "rb") as fh:
-        data = fh.read()
-    dest_uri = f"{split_uri(bucket_uri)[0]}://{split_uri(bucket_uri)[1]}/{blob_name}"
+    try:
+        fs, dest = hadoop_fs(spark, dest_uri)
+    except Exception:
+        return ""  # no FileSystem for this scheme (connector absent) — soft fail
     status = "uploaded"
     try:
-        store.put_bytes(blob_name, data, content_type)
+        src = spark._jvm.org.apache.hadoop.fs.Path(os.path.abspath(local_path))
+        fs.copyFromLocalFile(False, True, src, dest)
     except Exception:
-        if not store.exists(blob_name):
+        if not fs.exists(dest):
             return ""
         status = "retry-stable"
     if ledger is not None:
@@ -326,7 +106,7 @@ def upload_artifact(
                 "module": module,
                 "artifact": fname,
                 "uri": dest_uri,
-                "bytes": len(data),
+                "bytes": os.path.getsize(local_path),
                 "content_type": content_type,
                 "status": status,
             }

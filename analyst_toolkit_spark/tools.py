@@ -445,6 +445,7 @@ class Toolkit:
         from analyst_toolkit_spark.sources.storage import ArtifactLedger, upload_artifact
 
         uri = upload_artifact(
+            self.spark,
             path,
             run_id=run.run_id,
             module="export_dashboard",

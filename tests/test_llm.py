@@ -1779,7 +1779,8 @@ def test_near_dedup_components_detached_plan(spark):
     assert strat_lo == "bucket_components+star_verify"
     assert "band_hash" not in plan_lo
     # r15: the verify tail's one re-shingle of the raw corpus now sits
-    # behind a lazy lineage cut (verify_components' shared __sh frame), so
+    # behind a localCheckpoint(eager=False) cut (verify_components' shared
+    # __sh frame), so
     # the returned plan shows a LogicalRDD placeholder instead of inline
     # zip_with shingling — and therefore ZERO shingle/band expressions
     # anywhere. The original contract (never recompute the BANDING) is

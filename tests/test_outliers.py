@@ -1,3 +1,5 @@
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -36,6 +38,29 @@ def test_null_flags_false(spark):
     flagged, _ = detect_outliers(df, [OutlierSpec("val", "iqr", 1.5)])
     vals = {r["val"]: r["val_iqr_outlier"] for r in flagged.collect()}
     assert vals[None] is False and vals[100.0] is True
+
+
+def test_nan_is_not_an_outlier(spark, tmp_path):
+    """NaN is missing, as in pandas' ``(s < lo) | (s > hi)``: Spark orders NaN
+    above every value, so without the rule it is flagged above ``hi``, then
+    clipped to ``hi`` or dropped."""
+    path = str(tmp_path / "nan.parquet")
+    vals = [1.0, 2.0, 3.0, 4.0, 100.0, float("nan"), None]
+    spark.createDataFrame(list(enumerate(vals)), "i long, val double").write.parquet(path)
+    df = spark.read.parquet(path)
+    flagged, results = detect_outliers(df, [OutlierSpec("val", "iqr", 1.5)])
+    flags = {r["i"]: r["val_iqr_outlier"] for r in flagged.collect()}
+    assert flags == {0: False, 1: False, 2: False, 3: False, 4: True, 5: False, 6: False}
+
+    clipped = {r["i"]: r["val"] for r in handle_outliers(flagged, results, "clip").collect()}
+    assert math.isnan(clipped[5]) and clipped[6] is None
+    assert clipped[4] == pytest.approx(results["val"]["upper"])
+
+    kept = sorted(r["i"] for r in handle_outliers(flagged, results, "drop").collect())
+    assert kept == [0, 1, 2, 3, 5, 6]
+
+    means = {r["i"]: r["val"] for r in handle_outliers(flagged, results, "mean").collect()}
+    assert means[4] == pytest.approx(2.5) and math.isnan(means[5])  # NaN stays out of the mean
 
 
 def test_empty_df(spark):

@@ -320,7 +320,7 @@ _EXCHANGE_CEILINGS = {
     # phases — per-(group, partition-id) top-k agg + the k-per-partition
     # merge agg (measured 2; a third exchange means the funnel came back);
     # the prefix-filter cosine tail = candidate distinct + two vector-map
-    # joins over the lazy cuts (measured 3); containment subset policy /
+    # joins over the cuts (measured 3); containment subset policy /
     # curate-chain tails measured 3 each; the PCA semantic-dedup tail is
     # post-fixpoint map-only (measured 0).
     "quality_topk_per_source_docs": 3,
@@ -343,7 +343,7 @@ _EXCHANGE_CEILINGS = {
     "semantic_probe_stream": 1,
     # late-r12: shard manifest = the prefix-sum tail (range shuffle behind
     # the eager cut) + manifest agg (measured 2); index probe = bucketing
-    # behind the lazy cut + candidate-agg + flag join (measured 2, the
+    # behind the cut + candidate-agg + flag join (measured 2, the
     # pruned index scan joins without shuffling the batch twice).
     "training_shards_docs": 3,
     "semantic_index_probe": 3,
@@ -397,7 +397,7 @@ _EXCHANGE_CEILINGS = {
     # semi-join back over the cut (measured 1 + 1 broadcast)
     "curate_chunk_dedup_docs": 2,
     # late-r14 multi-table LSH: all candidate joins ride size-gated
-    # broadcasts behind the one lazy-cut pass that computes every table's
+    # broadcasts behind the one cut pass that computes every table's
     # bucket; the single counted exchange is the distinct-pair dedup
     # (measured 1 + 5 broadcasts; a second exchange means a labels join
     # started shuffling)
@@ -434,7 +434,7 @@ _EXCHANGE_CEILINGS = {
     # 3); per-doc metrics project BEFORE the join so text never shuffles
     "corpus_data_card_docs": 4,
     # late-r8 selection/sketch queries. dsir: (doc,bucket) agg is behind the
-    # lazy cut; visible = 2 bucket aggs + 2 bounded SinglePartition windows +
+    # cut; visible = 2 bucket aggs + 2 bounded SinglePartition windows +
     # scoring agg + final id join (measured 6). kmv_distinct: distinct +
     # two-stage bottom-k windows (measured 3). overlap: all post-cut stages
     # run over <= groups*k rows (measured 6, 0 parquet re-scans). semantic
@@ -450,7 +450,7 @@ _EXCHANGE_CEILINGS = {
     "line_dedup_docs": 3,
     # r12 (measured + 1 AQE headroom): the semantic-curate arms' tails are
     # the exact-dedup fingerprint semi-join + the semantic comps join over
-    # the lazy cuts (CC fixpoint eager at build; measured 2 each); the
+    # the cuts (CC fixpoint eager at build; measured 2 each); the
     # media card = header-parse mapInPandas + histogram agg + per-group
     # totals agg + share join (measured 4)
     "curate_semantic_docs": 3,
@@ -461,7 +461,7 @@ _EXCHANGE_CEILINGS = {
     # shuffle + 1-row regression agg (measured 2)
     "containment_pairs_docs": 5,
     "zipf_fit_docs": 3,
-    # late-r10: tf agg is behind the lazy cut; visible = norm agg, pair agg,
+    # late-r10: tf agg is behind the cut; visible = norm agg, pair agg,
     # plus one keyed join; candidate/idf sides broadcast at this scale
     # (measured 3)
     "lexical_cosine_pairs_docs": 4,

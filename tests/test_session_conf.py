@@ -14,13 +14,8 @@ import pytest
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "analyst_toolkit_spark"
 
-#: Deployment settings (cores, driver heap) and the storage cost guards.
-KEPT_SETTINGS = {
-    "SPARK_GRAFT_CPUS",
-    "SPARK_GRAFT_DRIVER_MEM",
-    "SPARK_GRAFT_STORAGE_MAX_OBJECTS",
-    "SPARK_GRAFT_STORAGE_MAX_BYTES",
-}
+#: Deployment settings: cores and driver heap.
+KEPT_SETTINGS = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
 
 SQL_DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",

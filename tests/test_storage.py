@@ -1,9 +1,8 @@
 """Object-storage plane tests (S4 scan, S11 artifact upload).
 
-Drives the reference semantics (mcp_server/io_storage.py:84-133 prefix
-list→limit→download→concat; :280-329 retry-stable artifact upload) through
-the store abstraction with a fake scheme — no cloud credentials needed —
-plus the native-scheme passthrough and the load_any dispatch seam.
+S4: every URI goes to Spark's reader through ``io.load_any``. S11: the
+reference's retry-stable artifact upload (mcp_server/io_storage.py:280-329)
+driven against a real ``file://`` bucket through Hadoop's FileSystem.
 """
 
 import json
@@ -11,119 +10,31 @@ import os
 
 import pytest
 from pyspark.sql import Row
+from pyspark.errors import AnalysisException
 
 from analyst_toolkit_spark.sources import io as M_io
 from analyst_toolkit_spark.sources import storage as S
 
 
 @pytest.fixture()
-def mem_store():
-    """A MemoryObjectStore registered under the fake scheme ``mem://``."""
-    store = S.MemoryObjectStore()
-    S.register_store("mem", lambda bucket: store)
-    yield store
-    S.unregister_store("mem")
+def bucket(tmp_path):
+    """A ``file://`` bucket URI and its local directory."""
+    root = tmp_path / "bucket"
+    return f"file://{root}", root
 
 
-def _parquet_bytes(rows) -> bytes:
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import io as _io
-
-    buf = _io.BytesIO()
-    pq.write_table(pa.Table.from_pandas(pd.DataFrame(rows)), buf)
-    return buf.getvalue()
+# -- S4: native scans ---------------------------------------------------------
 
 
-# -- URI plumbing -------------------------------------------------------------
+def test_single_blob_read(spark, tmp_path):
+    p = tmp_path / "one.parquet"
+    spark.createDataFrame([Row(a=1), Row(a=2)]).write.parquet(str(p))
+    assert M_io.load_any(spark, f"file://{p}").count() == 2
 
 
-def test_split_uri():
-    assert S.split_uri("gs://bkt/a/b.parquet") == ("gs", "bkt", "a/b.parquet")
-    assert S.split_uri("mem://bkt") == ("mem", "bkt", "")
-    assert S.split_uri("/local/path.csv") == ("", "", "/local/path.csv")
-
-
-def test_resolve_store_unregistered_is_native():
-    assert S.resolve_store("gs://bucket/prefix/") is None
-    assert S.resolve_store("/tmp/x.parquet") is None
-
-
-def test_resolve_store_caches_per_bucket():
-    calls = []
-
-    def factory(bucket):
-        calls.append(bucket)
-        return S.MemoryObjectStore()
-
-    S.register_store("memc", factory)
-    try:
-        a1, _ = S.resolve_store("memc://b1/x.parquet")
-        a2, _ = S.resolve_store("memc://b1/y.parquet")
-        assert a1 is a2
-        assert calls == ["b1"]  # factory invoked once; second hit served from cache
-    finally:
-        S.unregister_store("memc")
-
-
-# -- S4: staged prefix reads through the fake scheme --------------------------
-
-
-def test_single_blob_read(spark, mem_store):
-    mem_store.put_bytes("data/one.parquet", _parquet_bytes([{"a": 1}, {"a": 2}]))
-    df = S.load_uri(spark, "mem://bkt/data/one.parquet")
-    assert df.count() == 2
-
-
-def test_single_blob_missing_raises(spark, mem_store):
-    with pytest.raises(FileNotFoundError):
-        S.load_uri(spark, "mem://bkt/data/nope.parquet")
-
-
-def test_prefix_read_concats_and_skips_non_data(spark, mem_store):
-    mem_store.put_bytes("pfx/a.parquet", _parquet_bytes([{"a": 1}]))
-    mem_store.put_bytes("pfx/b.parquet", _parquet_bytes([{"a": 2}]))
-    mem_store.put_bytes("pfx/readme.txt", b"not data")  # io_storage.py:109 ext filter
-    mem_store.put_bytes("other/c.parquet", _parquet_bytes([{"a": 99}]))
-    df = S.load_uri(spark, "mem://bkt/pfx")
-    assert sorted(r.a for r in df.collect()) == [1, 2]
-
-
-def test_prefix_read_unions_mixed_formats_by_name(spark, mem_store):
-    mem_store.put_bytes("mix/a.parquet", _parquet_bytes([{"a": 1, "b": "x"}]))
-    mem_store.put_bytes("mix/b.csv", b"a,b\n2,y\n")
-    df = S.load_uri(spark, "mem://bkt/mix")
-    got = {(int(r.a), r.b) for r in df.collect()}
-    assert got == {(1, "x"), (2, "y")}
-
-
-def test_prefix_empty_raises(spark, mem_store):
-    mem_store.put_bytes("pfx/readme.txt", b"no data files")
-    with pytest.raises(FileNotFoundError):
-        S.load_uri(spark, "mem://bkt/pfx")
-
-
-def test_prefix_object_count_cap(spark, mem_store, monkeypatch):
-    monkeypatch.setattr(S, "MAX_PREFIX_OBJECTS", 2)
-    for i in range(3):
-        mem_store.put_bytes(f"cap/{i}.parquet", _parquet_bytes([{"a": i}]))
-    with pytest.raises(S.StorageError, match="objects"):
-        S.load_uri(spark, "mem://bkt/cap")
-
-
-def test_prefix_byte_cap(spark, mem_store, monkeypatch):
-    monkeypatch.setattr(S, "MAX_PREFIX_BYTES", 10)
-    mem_store.put_bytes("cap/a.parquet", _parquet_bytes([{"a": 1}]))
-    with pytest.raises(S.StorageError, match="bytes"):
-        S.load_uri(spark, "mem://bkt/cap")
-
-
-def test_load_any_dispatches_registered_scheme(spark, mem_store):
-    """The io.load_any seam routes registered schemes through the store."""
-    mem_store.put_bytes("d/one.parquet", _parquet_bytes([{"a": 7}]))
-    df = M_io.load_any(spark, "mem://bkt/d/one.parquet")
-    assert [r.a for r in df.collect()] == [7]
+def test_single_blob_missing_raises(spark, tmp_path):
+    with pytest.raises(AnalysisException):
+        M_io.load_any(spark, f"file://{tmp_path}/nope.parquet")
 
 
 def test_load_any_local_path_still_native(spark, tmp_path):
@@ -132,89 +43,111 @@ def test_load_any_local_path_still_native(spark, tmp_path):
     assert M_io.load_any(spark, p).count() == 1
 
 
-# -- LocalObjectStore ---------------------------------------------------------
-
-
-def test_local_store_roundtrip_and_list(tmp_path):
-    store = S.LocalObjectStore(str(tmp_path))
-    store.put_bytes("a/b/c.txt", b"hello")
-    store.put_bytes("a/d.txt", b"world")
-    assert store.get_bytes("a/b/c.txt") == b"hello"
-    assert store.exists("a/d.txt") and not store.exists("a/nope")
-    assert store.list("a/") == ["a/b/c.txt", "a/d.txt"]
-    assert store.size("a/d.txt") == 5
-
-
-def test_local_store_rejects_path_escape(tmp_path):
-    store = S.LocalObjectStore(str(tmp_path))
-    with pytest.raises(S.StorageError):
-        store.get_bytes("../outside.txt")
-
-
 # -- S11: artifact upload -----------------------------------------------------
 
 
-def test_upload_artifact_happy_path(tmp_path, mem_store):
+def test_upload_artifact_happy_path(spark, tmp_path, bucket):
+    uri_root, root = bucket
     art = tmp_path / "report.html"
     art.write_text("<html></html>")
     ledger = S.ArtifactLedger(path=str(tmp_path / "ledger.jsonl"))
     uri = S.upload_artifact(
+        spark,
         str(art),
         run_id="r1",
         module="profile",
-        bucket_uri="mem://reports",
+        bucket_uri=uri_root,
         prefix="toolkit/out",
         ledger=ledger,
     )
-    assert uri == "mem://reports/toolkit/out/r1/profile/report.html"
-    assert mem_store.blobs["toolkit/out/r1/profile/report.html"] == b"<html></html>"
-    assert mem_store.content_types["toolkit/out/r1/profile/report.html"] == "text/html"
+    assert uri == f"{uri_root}/toolkit/out/r1/profile/report.html"
+    assert (root / "toolkit/out/r1/profile/report.html").read_text() == "<html></html>"
     entry = ledger.entries[0]
     assert entry["status"] == "uploaded" and entry["module"] == "profile"
+    assert entry["content_type"] == "text/html" and entry["bytes"] == len("<html></html>")
     # JSONL mirror on disk
     with open(ledger.path) as fh:
         assert json.loads(fh.readline())["uri"] == uri
 
 
-def test_upload_artifact_session_id_wins_path_root(tmp_path, mem_store):
+def test_upload_artifact_session_id_wins_path_root(spark, tmp_path, bucket):
+    uri_root, root = bucket
     art = tmp_path / "a.csv"
     art.write_text("x\n1\n")
     uri = S.upload_artifact(
-        str(art), run_id="r1", module="m", bucket_uri="mem://b", prefix="p", session_id="sess9"
+        spark, str(art), run_id="r1", module="m", bucket_uri=uri_root, prefix="p", session_id="sess9"
     )
     assert "/sess9/m/a.csv" in uri and "/r1/" not in uri
+    assert (root / "p/sess9/m/a.csv").exists()
 
 
-def test_upload_artifact_retry_stable(tmp_path, mem_store):
-    """A failed put whose destination exists counts as success
+def test_upload_artifact_retry_stable(spark, tmp_path, bucket, monkeypatch):
+    """A failed copy whose destination exists counts as success
     (io_storage.py:318-325 idempotent-retry contract)."""
+    uri_root, root = bucket
     art = tmp_path / "a.json"
     art.write_text("{}")
-    mem_store.fail_next_put = 1
+
+    class LandsThenRaises:
+        """The real filesystem, but the copy errors after it landed."""
+
+        def __init__(self, fs):
+            self.fs = fs
+
+        def copyFromLocalFile(self, *args):
+            self.fs.copyFromLocalFile(*args)
+            raise OSError("connection reset after upload")
+
+        def exists(self, path):
+            return self.fs.exists(path)
+
+    real = S.hadoop_fs
+
+    def flaky(sp, path):
+        fs, hp = real(sp, path)
+        return LandsThenRaises(fs), hp
+
+    monkeypatch.setattr(S, "hadoop_fs", flaky)
     ledger = S.ArtifactLedger()
-    uri = S.upload_artifact(
-        str(art), run_id="r", module="m", bucket_uri="mem://b", prefix="p", ledger=ledger
-    )
-    assert uri  # landed despite the raised put
+    uri = S.upload_artifact(spark, str(art), run_id="r", module="m", bucket_uri=uri_root, prefix="p", ledger=ledger)
+    assert uri == f"{uri_root}/p/r/m/a.json"
     assert ledger.entries[0]["status"] == "retry-stable"
 
 
-def test_upload_artifact_soft_fails(tmp_path, mem_store, monkeypatch):
+def test_upload_artifact_soft_fails(spark, tmp_path, bucket, monkeypatch):
+    uri_root, root = bucket
     art = tmp_path / "a.txt"
     art.write_text("x")
     monkeypatch.delenv("ANALYST_REPORT_BUCKET", raising=False)
     # no bucket configured
-    assert S.upload_artifact(str(art), run_id="r", module="m") == ""
+    assert S.upload_artifact(spark, str(art), run_id="r", module="m") == ""
     # missing source file
-    assert S.upload_artifact(str(tmp_path / "nope.txt"), run_id="r", module="m", bucket_uri="mem://b") == ""
-    # scheme without a registered store (no cloud SDK in env)
-    assert S.upload_artifact(str(art), run_id="r", module="m", bucket_uri="zz://b") == ""
+    assert S.upload_artifact(spark, str(tmp_path / "nope.txt"), run_id="r", module="m", bucket_uri=uri_root) == ""
+    # scheme with no Hadoop FileSystem (connector absent)
+    assert S.upload_artifact(spark, str(art), run_id="r", module="m", bucket_uri="zz://b") == ""
+    assert not root.exists()
 
 
-def test_upload_artifact_env_bucket(tmp_path, mem_store, monkeypatch):
+def test_upload_artifact_env_bucket(spark, tmp_path, bucket, monkeypatch):
+    uri_root, root = bucket
     art = tmp_path / "a.txt"
     art.write_text("x")
-    monkeypatch.setenv("ANALYST_REPORT_BUCKET", "mem://envbkt")
+    monkeypatch.setenv("ANALYST_REPORT_BUCKET", uri_root)
     monkeypatch.setenv("ANALYST_REPORT_PREFIX", "envpfx")
-    uri = S.upload_artifact(str(art), run_id="r7", module="m")
-    assert uri == "mem://envbkt/envpfx/r7/m/a.txt"
+    uri = S.upload_artifact(spark, str(art), run_id="r7", module="m")
+    assert uri == f"{uri_root}/envpfx/r7/m/a.txt"
+    assert (root / "envpfx/r7/m/a.txt").read_text() == "x"
+
+
+def test_upload_artifact_rejects_path_escape(spark, tmp_path, bucket):
+    """``run_id`` arrives from RPC arguments: a root that leaves
+    ``bucket/prefix`` raises before anything is written."""
+    uri_root, root = bucket
+    art = tmp_path / "a.txt"
+    art.write_text("x")
+    before = sorted(os.listdir(tmp_path))
+    for run_id in ("../../x", "../x", "ok/../../x"):
+        with pytest.raises(ValueError, match="escapes"):
+            S.upload_artifact(spark, str(art), run_id=run_id, module="m", bucket_uri=uri_root, prefix="p")
+    assert sorted(os.listdir(tmp_path)) == before
+    assert not root.exists()

@@ -159,3 +159,15 @@ def test_unchanged_frame_is_not_rewritten(spark, csv_path, tmp_path, module, con
     before = (state / "same.current").read_bytes(), sorted(p.name for p in state.iterdir())
     assert tk.call(module, session_id="same", config=config)["status"] == "pass"
     assert ((state / "same.current").read_bytes(), sorted(p.name for p in state.iterdir())) == before
+
+
+def test_export_dashboard_uploads_to_report_bucket(toolkit, tmp_path, monkeypatch):
+    bucket = tmp_path / "bucket"
+    monkeypatch.setenv("ANALYST_REPORT_BUCKET", f"file://{bucket}")
+    monkeypatch.setenv("ANALYST_REPORT_PREFIX", "reports")
+    res = toolkit.call("export_dashboard", output_path=str(tmp_path / "dash.html"), run_id="run1")
+    assert res["artifact_uri"] == f"file://{bucket}/reports/run1/export_dashboard/dash.html"
+    assert (bucket / "reports/run1/export_dashboard/dash.html").read_text() == open(res["path"]).read()
+    lines = [json.loads(l) for l in open(toolkit.ledger_path)]
+    artifact = [l for l in lines if l.get("uri") == res["artifact_uri"]]
+    assert artifact and artifact[0]["status"] == "uploaded" and artifact[0]["module"] == "export_dashboard"
