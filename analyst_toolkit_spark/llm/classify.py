@@ -27,8 +27,6 @@ Scoring splits in two on purpose:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -183,7 +181,3 @@ def classifier_accuracy(
         ).alias("acc")
     ).first()
     return float(row["acc"])
-
-
-def sigmoid(x: float) -> float:
-    return 1.0 / (1.0 + math.exp(-x))

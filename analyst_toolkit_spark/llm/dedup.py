@@ -1020,29 +1020,18 @@ def verify_components(
 
 
 def _positioned_ngrams_of(toks: Column, n: int) -> Column:
-    """Positioned n-grams from an ALREADY-TOKENIZED array column — the
-    shared slice/zip construction of :func:`positioned_ngrams`, split out so
-    the span operators can tokenize ONCE and derive both the gram stream and
-    the cut stage from the same token arrays (r15 optimization round)."""
+    """Word n-grams of an ALREADY-TOKENIZED array column, indexed by their
+    token start position (``grams[i]`` starts at token i): the shifted
+    slices of :func:`shingles` WITHOUT ``array_distinct`` — span detection
+    needs every occurrence. The span operators tokenize ONCE and derive
+    both the gram stream and the cut stage from the same token arrays
+    (r15 optimization round)."""
     g = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
     parts = [F.slice(toks, i + 1, g) for i in range(n)]
     grams = parts[0]
     for p in parts[1:]:
         grams = F.zip_with(grams, p, lambda a, b: F.concat(a, F.lit(" "), b))
     return grams
-
-
-def positioned_ngrams(col: str | Column, n: int) -> Column:
-    """Word n-grams WITH their 0-based token start positions, as an
-    ``array<string>`` indexed by position (``grams[i]`` starts at token i).
-
-    Same shifted-slices construction as :func:`shingles` (O(n) array ops per
-    row, bit-identical gram strings) but WITHOUT ``array_distinct`` — span
-    detection needs every occurrence, positioned. Pair with ``posexplode``.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    toks = F.regexp_extract_all(F.lower(c), F.lit(r"[a-z0-9']+"), F.lit(0))
-    return _positioned_ngrams_of(toks, n)
 
 
 def _tokens_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -1260,36 +1249,18 @@ def _cut_spans_from_tokens(
     )
 
 
-def contaminated_spans(
-    df: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_key: str = "text",
-    n: int = 8,
-) -> DataFrame:
-    """SPAN-LEVEL decontamination, detection half: the maximal token spans
-    of each document covered by n-grams that appear ANYWHERE in the
-    benchmark set. ``text.decontaminate`` answers "is this doc
-    contaminated" (and pipelines then drop the whole doc); this localizes
-    the overlap so :func:`remove_contaminated_spans` can salvage the rest
-    of the document — the span-surgery decontamination mode (GPT-3
-    appendix-C style masking, at token granularity).
-
-    Plan: benchmark grams hash to a 64-bit key set built once
-    (benchmark-sized); the doc side is the same positioned-gram stream as
-    :func:`repeated_spans`, semi-joined against the key set (AQE
-    broadcasts a small benchmark, falls back to a keyed shuffle for a huge
-    one — no hint), then the shared islands merge fuses hits into maximal
-    spans per doc. Returns (id, start_tok, end_tok, span_tokens)."""
-    tdf = _tokens_frame(df, id_col, text_col)
-    return _contaminated_spans_from_tokens(tdf, benchmark, id_col, bench_key, n)
-
-
 def _contaminated_spans_from_tokens(
     tdf: DataFrame, benchmark: DataFrame, id_col: str, bench_key: str, n: int
 ) -> DataFrame:
-    """:func:`contaminated_spans` over a pre-built (id, __toks) frame."""
+    """SPAN-LEVEL decontamination, detection half: the maximal token spans
+    of each document in a pre-built (id, __toks) frame covered by n-grams
+    that appear ANYWHERE in the benchmark set. Benchmark grams hash to a
+    64-bit key set built once (benchmark-sized); the doc side is the same
+    positioned-gram stream as :func:`repeated_spans`, semi-joined against
+    the key set (AQE broadcasts a small benchmark, falls back to a keyed
+    shuffle for a huge one — no hint), then the shared islands merge fuses
+    hits into maximal spans per doc. Returns (id, start_tok, end_tok,
+    span_tokens)."""
     bench_grams = (
         benchmark.select(F.explode(shingles(bench_key, n)).alias("__g"))
         .select(F.xxhash64("__g").alias("__gh"))
@@ -1309,11 +1280,13 @@ def remove_contaminated_spans(
     n: int = 8,
 ) -> DataFrame:
     """The removal half of span-level decontamination: cut every
-    benchmark-overlapping span (:func:`contaminated_spans`) out of every
-    document, keeping the untainted remainder — doc-level dropping throws
-    away a whole document for one quoted benchmark passage; this keeps the
-    other 99%. Same output contract as :func:`remove_repeated_spans`:
-    (id, clean_text, kept_tokens, removed_tokens), token-level surgery.
+    benchmark-overlapping span (:func:`_contaminated_spans_from_tokens`)
+    out of every document, keeping the untainted remainder — doc-level
+    dropping throws away a whole document for one quoted benchmark passage
+    (``text.decontaminate``'s answer); this keeps the other 99%, GPT-3
+    appendix-C style masking at token granularity. Same output contract as
+    :func:`remove_repeated_spans`: (id, clean_text, kept_tokens,
+    removed_tokens), token-level surgery.
 
     r15 optimization round: one size-gated (id, __toks) cut feeds both the
     detection gram stream and the token surgery — the corpus tokenizes once
@@ -1351,44 +1324,6 @@ def dedup_representatives(
 #: sweep measured 159.6 s for ~25M pairs on a 500k-doc corpus) for the
 #: linear bucket-components + star-verify path (63.7 s on the same corpus).
 NEARDUP_PAIR_CAP = 5_000_000
-
-
-def candidate_pair_census(
-    df: DataFrame | None,
-    key: str = "text",
-    id_col: str = "doc_id",
-    n_shingle: int = 3,
-    k: int = 64,
-    bands: int = 16,
-    method: str = "xxhash",
-    banded: DataFrame | None = None,
-) -> int:
-    """UPPER-BOUND estimate of the LSH candidate-pair volume the pair path
-    would materialize: Σ over ≥2-member buckets of C(m, 2), mirroring
-    ``minhash_candidates``'s bucket construction including its ``MAX_BUCKET``
-    drop (oversized degenerate buckets contribute nothing there, so none
-    here; one shared constant so a retune cannot desynchronize the two — r7
-    ADVICE). An upper bound because the pair path's cross-band ``distinct()``
-    collapses pairs colliding in several bands; the census counts each band.
-
-    One bounded agg over the banded stream — and with ``banded`` (the
-    band-once seam, r7 VERDICT #3) not even its own banding pass: the caller
-    materializes (id, band, band_hash) ONCE and both the census and the
-    chosen dedup path read that cut. Without it, linear in docs × bands, the
-    same trust-nothing pattern as ``llm/scale.pair_strategy``: a cheap scan
-    that decides before the engine commits to quadratic-output work."""
-    if banded is None:
-        banded = _band_stream(df, key, id_col, n_shingle, k, bands, method=method)
-    sizes = (
-        banded.groupBy("band", "band_hash")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter((F.col("__n") > 1) & (F.col("__n") <= MAX_BUCKET))
-    )
-    row = (
-        sizes.agg(F.sum((F.col("__n") * (F.col("__n") - 1) / 2).cast("long")).alias("c"))
-        .first()
-    )
-    return int(row["c"] or 0)
 
 
 def near_dedup_components(

@@ -136,12 +136,6 @@ def _banded_sigs(
     return sigs, banded
 
 
-def sig_jaccard_estimate(a, b, k: int):
-    """MinHash Jaccard estimate: fraction of equal signature positions."""
-    eq = F.zip_with(a, b, lambda x, y: (x == y).cast("int"))
-    return F.aggregate(eq, F.lit(0), lambda acc, v: acc + v) / F.lit(float(k))
-
-
 def dedup_index_write(
     df: DataFrame,
     path: str,
@@ -428,10 +422,13 @@ def near_probe(
         .agg(F.first("index_sig").alias("index_sig"))  # appends may duplicate rows
     )
     b_named = b_sigs.withColumnsRenamed({id_col: "batch_id", "sig": "batch_sig"})
+    # MinHash Jaccard estimate: fraction of equal signature positions
+    eq = F.zip_with("batch_sig", "index_sig", lambda x, y: (x == y).cast("int"))
+    est = F.aggregate(eq, F.lit(0), lambda acc, v: acc + v) / F.lit(float(k))
     return (
         cands.join(b_named, "batch_id")
         .join(idx_sigs, "index_id")
-        .withColumn("est_jaccard", F.round(sig_jaccard_estimate(F.col("batch_sig"), F.col("index_sig"), k), 6))
+        .withColumn("est_jaccard", F.round(est, 6))
         .filter(F.col("est_jaccard") >= threshold)
         .select("batch_id", "index_id", "est_jaccard")
     )

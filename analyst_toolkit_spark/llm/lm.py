@@ -69,16 +69,6 @@ def _ngrams_of_chars(ch: Column, n: int) -> Column:
     )
 
 
-def char_ngrams(col: str | Column, n: int = 3) -> Column:
-    """Character n-grams (every position, in order) over the canonical text
-    form, as ``array<string>``. One ``transform(sequence(...))`` — O(len)
-    JVM work per row, no shuffle, no UDF. NOTE: for hot paths prefer
-    projecting ``split(normalize_text(col), '')`` first and gramming the
-    projected column (see :func:`_ngrams_of_chars`); this convenience form
-    inlines the normalization into the per-element lambda."""
-    return _ngrams_of(normalize_text(col), n)
-
-
 def train_char_lm(df: DataFrame, key: str = "text", n: int = 3) -> DataFrame:
     """MLE conditional model over a training corpus: one row per distinct
     gram with ``prob`` = P(last char | first n-1 chars) = count(gram) /

@@ -1,10 +1,15 @@
 """Multimodal column plumbing: image/audio/video as opaque binary + metadata.
 
-The Spark-side machinery here is REAL and tested: schema contracts, Arrow-
-batched ``mapInPandas`` pipelines, partition sizing for large blobs. The codec
-step itself (PIL/librosa/ffmpeg) is NOT available in this environment, so the
-decoders are stubbed behind ``DecoderUnavailable`` with a deterministic fake
-for tests — swap ``_decode_image_impl`` for a real decoder in production.
+The Spark-side machinery is Arrow-batched ``mapInPandas`` pipelines over
+binary columns. Native codecs (PIL/librosa/ffmpeg) are not dependencies, so
+the real decoders here are pure stdlib: PNG (``decode_png``/``encode_png``,
+which ``resize_images`` and the perceptual hashes use) and PCM WAV
+(``decode_wav``, behind ``extract_audio_features``). ``image_header_meta`` and
+``audio_header_meta`` read dimensions and durations from container headers
+without decoding. A payload no decoder here can read raises
+``DecoderUnavailable`` inside the decoder; the column operators turn that
+into nulls (``resize_images`` passes the blob through unchanged), never into
+a made-up value.
 
 Design rules for 100 TB of blobs:
 - blobs ride as ``binary`` columns; metadata (width/height/duration/codec) as
@@ -153,56 +158,6 @@ def encode_png(width: int, height: int, channels: int, pixels: bytes) -> bytes:
     )
 
 
-def _decode_image_impl(content: bytes) -> tuple[int, int]:
-    """(width, height) from the blob. Valid PNGs take the REAL stdlib decode
-    path (full inflate + unfilter). Other formats — and corrupt/unsupported
-    PNG shapes, which must not kill a 100 TB scan — fall back to a
-    deterministic crc32 fake: crc32, NOT Python ``hash()``, which is salted
-    per process and would differ between executors, so tests exercise the
-    full Arrow pipeline without a native codec. Swap the fallback for
-    PIL/turbojpeg in production."""
-    import zlib
-
-    if content is None:
-        raise DecoderUnavailable("no content")
-    b = bytes(content)
-    if b[:8] == _PNG_MAGIC:
-        try:
-            w, h, _ch, _px = decode_png(b)
-            return w, h
-        except DecoderUnavailable:
-            pass  # corrupt or exotic PNG shape: deterministic fallback below
-    h = zlib.crc32(b) & 0xFFFFFFFF
-    return (h % 1920) + 1, (h // 1920 % 1080) + 1
-
-
-def extract_image_meta(df: DataFrame, blob_col: str = "content", deterministic_fake: bool = True) -> DataFrame:
-    """Decode-and-measure over Arrow batches. Appends width/height columns.
-
-    ``deterministic_fake=False`` raises DecoderUnavailable — the marked seam
-    where a real codec plugs in."""
-    if not deterministic_fake:
-        raise DecoderUnavailable("image codecs not installed in this environment")
-
-    out_schema = T.StructType(df.schema.fields + [
-        T.StructField("img_width", T.IntegerType(), True),
-        T.StructField("img_height", T.IntegerType(), True),
-    ])
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dims = [
-                _decode_image_impl(b) if b is not None else (None, None)
-                for b in pdf[blob_col]
-            ]
-            pdf = pdf.copy()
-            pdf["img_width"] = [d[0] for d in dims]
-            pdf["img_height"] = [d[1] for d in dims]
-            yield pdf
-
-    return df.mapInPandas(mapper, schema=out_schema)
-
-
 def _resize_png(b: bytes, max_side: int) -> bytes:
     """REAL resize for PNG blobs: stdlib decode -> nearest-neighbor sample ->
     re-encode. Blobs already within max_side pass through unchanged."""
@@ -291,14 +246,12 @@ def decode_wav(content: bytes) -> tuple[int, int, int, list[float]]:
     return rate, ch, bits, samples
 
 
-def extract_audio_features(df: DataFrame, blob_col: str = "content", deterministic_fake: bool = True) -> DataFrame:
-    """Duration + RMS energy over Arrow batches. PCM WAV blobs take the REAL
-    stdlib decode path (RMS computed from actual samples); other formats
-    fall back to a deterministic crc32 fake (mp3/ogg codecs genuinely need
-    native libraries — the documented seam). ``deterministic_fake=False``
-    disables the fallback and raises for non-WAV payloads."""
+def extract_audio_features(df: DataFrame, blob_col: str = "content") -> DataFrame:
+    """Duration + RMS energy over Arrow batches, computed from the samples
+    that the stdlib PCM WAV decoder (:func:`decode_wav`) reads. A payload it
+    cannot read (mp3/ogg, compressed or corrupt WAV) yields nulls, the same
+    as a null blob."""
     import math
-    import zlib
 
     out_schema = T.StructType(df.schema.fields + [
         T.StructField("audio_seconds", T.DoubleType(), True),
@@ -308,21 +261,15 @@ def extract_audio_features(df: DataFrame, blob_col: str = "content", determinist
     def _features(b) -> tuple[float | None, float | None]:
         if b is None:
             return (None, None)
-        raw = bytes(b)
-        if raw[:4] == b"RIFF":
-            try:
-                rate, ch, _bits, samples = decode_wav(raw)
-                if not samples:
-                    return (0.0, 0.0)
-                secs = len(samples) / float(rate * ch)
-                rms = math.sqrt(sum(x * x for x in samples) / len(samples))
-                return (round(secs, 6), round(rms, 6))
-            except DecoderUnavailable:
-                pass  # compressed/corrupt RIFF: deterministic fallback below
-        if not deterministic_fake:
-            raise DecoderUnavailable("audio codecs not installed in this environment")
-        h = zlib.crc32(raw)
-        return ((h % 6000) / 10.0, ((h >> 8) % 1000) / 1000.0)
+        try:
+            rate, ch, _bits, samples = decode_wav(bytes(b))
+        except DecoderUnavailable:
+            return (None, None)
+        if not samples:
+            return (0.0, 0.0)
+        secs = len(samples) / float(rate * ch)
+        rms = math.sqrt(sum(x * x for x in samples) / len(samples))
+        return (round(secs, 6), round(rms, 6))
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -509,8 +456,7 @@ def audio_header_meta(df: DataFrame, blob_col: str = "content") -> DataFrame:
     audio_seconds parsed from the chunk list over Arrow batches. Map-only;
     the metadata-before-decode posture for audio — a filter like
     ``audio_seconds >= 1`` prunes blobs without ffmpeg anywhere in the
-    plan. Non-WAV formats fall through to nulls (the codec-backed
-    ``extract_audio_features`` seam covers them in production)."""
+    plan. Non-WAV formats fall through to nulls."""
     out_schema = T.StructType(
         df.schema.fields
         + [
@@ -704,8 +650,7 @@ def image_perceptual_hash(
     blobs the stdlib decoder cannot read — JPEG/video stay behind the
     documented DecoderUnavailable seam). Arrow-batched ``mapInPandas``: one
     Python worker per core, blobs never leave their partition, no per-row
-    overhead — the multimodal decode seam, same contract as
-    ``extract_image_meta``."""
+    overhead."""
     fn = {"dhash": dhash64, "ahash": ahash64}.get(method)
     if fn is None:
         raise ValueError(f"unknown perceptual hash method: {method!r}")

@@ -485,17 +485,6 @@ def quantize_embeddings(
     return out.withColumn(q_col, q)
 
 
-def quantized_dot(qa: Column, scale_a: Column, qb: Column, scale_b: Column) -> Column:
-    """Dequantized dot product: integer accumulate (exact in int64 for
-    |q| <= 127 up to ~5.6e14 dims), two scale multiplies at the end."""
-    idot = F.aggregate(
-        F.zip_with(qa, qb, lambda x, y: (x * y).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    return idot.cast("double") * scale_a * scale_b
-
-
 def quantized_cosine(qa: Column, qb: Column) -> Column:
     """Approximate cosine from int8 codes alone — the per-vector scales
     cancel, so this is pure integer arithmetic until the final divide."""

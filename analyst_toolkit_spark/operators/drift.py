@@ -25,149 +25,6 @@ def schema_drift(base: DataFrame, target: DataFrame) -> dict:
     }
 
 
-def psi(
-    base: DataFrame,
-    target: DataFrame,
-    column: str,
-    bins: int = 10,
-    min_fraction: float = 1e-4,
-) -> float:
-    """Population Stability Index — distribution-level drift the reference's
-    mean-only check misses (extension beyond drift.py:57-81).
-
-    Bins come from the BASE distribution's equal-width range; both sides are
-    bucketed with the same edges (one small agg per side), then
-    PSI = Σ (p_t − p_b)·ln(p_t / p_b) with fractions floored at
-    ``min_fraction`` so empty bins don't produce infinities.
-    Rule of thumb: <0.1 stable, 0.1-0.25 moderate shift, >0.25 major shift.
-    """
-    import math
-
-    mm = base.agg(F.min(column).alias("lo"), F.max(column).alias("hi")).first()
-    if mm["lo"] is None:
-        return 0.0
-    lo, hi = float(mm["lo"]), float(mm["hi"])
-    if lo == hi:
-        hi = lo + 1.0
-    width = (hi - lo) / bins
-    bucket = F.least(
-        F.greatest(F.floor((F.col(column) - F.lit(lo)) / F.lit(width)).cast("int"), F.lit(0)),
-        F.lit(bins - 1),
-    )
-
-    def fractions(df: DataFrame) -> dict[int, float]:
-        rows = (
-            df.filter(F.col(column).isNotNull())
-            .groupBy(bucket.alias("b"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        total = sum(r["n"] for r in rows) or 1
-        return {int(r["b"]): r["n"] / total for r in rows}
-
-    fb, ft = fractions(base), fractions(target)
-    out = 0.0
-    for b in range(bins):
-        pb = max(fb.get(b, 0.0), min_fraction)
-        pt = max(ft.get(b, 0.0), min_fraction)
-        out += (pt - pb) * math.log(pt / pb)
-    return out
-
-
-def psi_report(
-    base: DataFrame,
-    target: DataFrame,
-    columns: list[str] | None = None,
-    bins: int = 10,
-    min_fraction: float = 1e-4,
-) -> DataFrame:
-    """PSI per numeric column: column, psi, severity.
-
-    r15 optimization round (guide §1.2, §5 — no driver loops in query
-    paths): the per-column loop ran THREE corpus-scale actions per column
-    (base min/max, then one bucket-count collect per side). Batched: ONE
-    min/max aggregation over every column, then ONE bucket-count pass per
-    side (each row explodes to its per-column bucket labels — the combined
-    stream aggregates map-side exactly like the per-column form), and the
-    same driver-side PSI arithmetic over the collected bins×columns rows.
-    3 actions total instead of 3×columns; values bit-identical (same
-    counts, same floats, same ``min_fraction`` floor)."""
-    import math
-
-    cols = columns or [c for c in numeric_columns(base) if c in set(numeric_columns(target))]
-    if not cols:
-        return base.sparkSession.createDataFrame(
-            [], "column string, psi double, severity string"
-        )
-    mm = base.agg(
-        *[F.min(c).alias(f"__lo_{i}") for i, c in enumerate(cols)],
-        *[F.max(c).alias(f"__hi_{i}") for i, c in enumerate(cols)],
-    ).first()
-    edges: dict[str, tuple[float, float]] = {}
-    for i, c in enumerate(cols):
-        lo = mm[f"__lo_{i}"]
-        if lo is None:
-            continue  # all-null column: PSI 0.0 by contract, no bucket pass
-        lo, hi = float(lo), float(mm[f"__hi_{i}"])
-        if lo == hi:
-            hi = lo + 1.0
-        edges[c] = (lo, (hi - lo) / bins)
-
-    def fractions(df: DataFrame) -> dict[str, dict[int, float]]:
-        structs = [
-            F.when(
-                F.col(c).isNotNull(),
-                F.struct(
-                    F.lit(c).alias("column"),
-                    F.least(
-                        F.greatest(
-                            F.floor(
-                                (F.col(c) - F.lit(edges[c][0])) / F.lit(edges[c][1])
-                            ).cast("int"),
-                            F.lit(0),
-                        ),
-                        F.lit(bins - 1),
-                    ).alias("b"),
-                ),
-            )
-            for c in edges
-        ]
-        rows = (
-            df.select(F.explode(F.array(*structs)).alias("s"))
-            .filter(F.col("s").isNotNull())
-            .select("s.*")
-            .groupBy("column", "b")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        per_col: dict[str, dict[int, float]] = {c: {} for c in edges}
-        for r in rows:
-            per_col[r["column"]][int(r["b"])] = r["n"]
-        out: dict[str, dict[int, float]] = {}
-        for c, counts in per_col.items():
-            total = sum(counts.values()) or 1
-            out[c] = {b: n / total for b, n in counts.items()}
-        return out
-
-    fb = fractions(base) if edges else {}
-    ft = fractions(target) if edges else {}
-    result = []
-    for c in cols:
-        if c not in edges:
-            v = 0.0
-        else:
-            v = 0.0
-            for b in range(bins):
-                pb = max(fb[c].get(b, 0.0), min_fraction)
-                pt = max(ft[c].get(b, 0.0), min_fraction)
-                v += (pt - pb) * math.log(pt / pb)
-        sev = "stable" if v < 0.1 else "moderate" if v < 0.25 else "major"
-        result.append({"column": c, "psi": round(v, 6), "severity": sev})
-    return base.sparkSession.createDataFrame(
-        result, "column string, psi double, severity string"
-    )
-
-
 def numeric_drift(base: DataFrame, target: DataFrame, threshold: float = 0.1) -> DataFrame:
     """Long report: column, base_mean, target_mean, rel_diff, drifted."""
     cols = [c for c in numeric_columns(base) if c in set(numeric_columns(target))]

@@ -3,7 +3,8 @@
 Reference semantics (m07_imputation/impute_data.py:19-77):
 - mean / median (exact, linear interpolation) / mode (tie → smallest value) /
   constant; datetime constants parsed to timestamps.
-- Only nulls are touched.
+- Only missing cells are touched: nulls, and NaN in float/double columns
+  (pandas ``fillna`` fills both, and ``mean``/``median``/``mode`` skip NaN).
 
 Spark design: ALL statistic-based fill values are computed in ONE agg pass
 (mode via ``max_by(struct)`` trick below — no per-column groupBy jobs), then
@@ -19,7 +20,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from analyst_toolkit_spark.functions.stats import collect_stats, quantile_stats
+from analyst_toolkit_spark.functions.stats import _nan_as_null, collect_stats, quantile_stats
 
 
 @dataclass
@@ -56,7 +57,7 @@ def mode_values(df: DataFrame, columns: list[str]) -> dict[str, Any]:
                 *[
                     F.struct(
                         F.lit(c).alias("col"),
-                        F.col(c).cast("string").alias("value"),
+                        _nan_as_null(df, c).cast("string").alias("value"),
                         _num_key(c).alias("num_key"),
                     )
                     for c in columns
@@ -103,7 +104,7 @@ def impute(df: DataFrame, specs: list[ImputeSpec], exact: bool = True):
     mode_cols = [s.column for s in specs if s.strategy == "mode"]
 
     qstats = quantile_stats(df, {c: [0.5] for c in median_cols}, exact)
-    row = collect_stats(df, qstats, *[F.avg(F.col(c)).alias(f"mean::{c}") for c in mean_cols])
+    row = collect_stats(df, qstats, *[F.avg(_nan_as_null(df, c)).alias(f"mean::{c}") for c in mean_cols])
     fills: dict[str, Any] = {c: row[f"mean::{c}"] for c in mean_cols}
     for c in median_cols:
         q = row[f"q::{c}"]
@@ -131,5 +132,5 @@ def impute(df: DataFrame, specs: list[ImputeSpec], exact: bool = True):
         lit = F.lit(v)
         if target_type.startswith("timestamp") and isinstance(v, str):
             lit = F.to_timestamp(F.lit(v))
-        out = out.withColumn(s.column, F.coalesce(F.col(s.column), lit.cast(target_type)))
+        out = out.withColumn(s.column, F.coalesce(_nan_as_null(df, s.column), lit.cast(target_type)))
     return out, fills

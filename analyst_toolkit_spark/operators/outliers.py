@@ -44,11 +44,12 @@ def compute_bounds(df: DataFrame, specs: list[OutlierSpec], exact: bool = True) 
 
     IQR quartiles come from ``functions.stats.quantile_stats``, whose tier
     follows the input size (every exact tier gives the same values);
-    mean/stddev for z-score specs ride the same agg.
+    mean/stddev for z-score specs ride the same agg. NaN in float/double
+    columns is missing on both, as in pandas.
     """
     aggs = []
     for s in specs:
-        c = F.col(s.column)
+        c = _nan_as_null(df, s.column)
         if s.method == "zscore":
             aggs.append(F.avg(c).alias(f"{s.column}__mean"))
             aggs.append(F.stddev_samp(c).alias(f"{s.column}__std"))

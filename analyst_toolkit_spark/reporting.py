@@ -344,23 +344,6 @@ def certification_section(result: Mapping[str, Any], gate_name: str = "Validatio
     return "".join(out)
 
 
-def render_certification_dashboard(
-    result: Mapping[str, Any], run_id: str = "", title: str = "Certification"
-) -> str:
-    """Standalone certification page (reference render_validation_dashboard /
-    final-audit view) — the embeddable section plus page chrome."""
-    return "\n".join(
-        [
-            "<!DOCTYPE html><html><head><meta charset='utf-8'>",
-            f"<title>{_esc(title)}</title><style>{_CSS}</style></head><body><div class='wrap'>",
-            f"<h1>{_esc(title)}</h1>",
-            f"<p class='subtle'>run_id: {_esc(run_id)}</p>",
-            certification_section(result),
-            "</div></body></html>",
-        ]
-    )
-
-
 # -- pipeline dashboard ------------------------------------------------------
 
 _MODULE_REPORT_KEYS = {

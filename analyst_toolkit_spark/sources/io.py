@@ -12,12 +12,12 @@ same Hadoop ``FileSystem`` (``hadoop_fs``).
 Report plane (S8/S9, m00_utils/export_utils.py:30-131): reports are SMALL
 collected aggregates by construction (profile rows, audit tables), so the
 driver-side render is not a scale concern. Excel needs openpyxl — gated behind
-an import-try; CSV + self-contained HTML always work.
+an import-try; CSV always works. The HTML dashboard sink is
+``reporting.export_pipeline_dashboard``.
 """
 
 from __future__ import annotations
 
-import html
 import os
 from typing import Any
 
@@ -130,27 +130,6 @@ def export_report(reports: dict[str, Any], out_dir: str, formats: tuple[str, ...
     return written
 
 
-def export_html_report(reports: dict[str, Any], path: str, title: str = "Report") -> str:
-    """S9 self-contained HTML dashboard (driver-side render over collected
-    aggregates — plots/tables must never pull the full distributed table)."""
-    parts = [
-        "<!DOCTYPE html><html><head><meta charset='utf-8'>",
-        f"<title>{html.escape(title)}</title>",
-        "<style>body{font-family:sans-serif;margin:2em}table{border-collapse:collapse;margin:1em 0}"
-        "td,th{border:1px solid #999;padding:4px 8px;text-align:left}th{background:#eee}</style>",
-        f"</head><body><h1>{html.escape(title)}</h1>",
-    ]
-    for name, tbl in reports.items():
-        pdf = _to_pandas(tbl)
-        parts.append(f"<h2>{html.escape(str(name))}</h2>")
-        parts.append(pdf.to_html(index=False, border=0))
-    parts.append("</body></html>")
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as fh:
-        fh.write("\n".join(parts))
-    return path
-
-
 def load_any(spark: SparkSession, path: str, fmt: str | None = None) -> DataFrame:
     """Format-dispatching reader (S1-S4): csv/parquet/json/orc by extension
     unless forced. Every path or URI — a local file, a directory or prefix of
@@ -175,13 +154,13 @@ def load_any(spark: SparkSession, path: str, fmt: str | None = None) -> DataFram
             fmt = "parquet"
         elif stem.endswith(".orc"):
             fmt = "orc"
-        elif os.path.isdir(path):
-            # distributed writers emit extension-less directories: sniff the
-            # part files
-            exts = {os.path.splitext(f)[1] for f in os.listdir(path) if f.startswith("part-")}
-            fmt = "csv" if ".csv" in exts else "json" if ".json" in exts else "orc" if ".orc" in exts else "parquet"
         else:
-            fmt = "parquet"
+            # distributed writers emit extension-less directories: sniff the
+            # part files through the filesystem Spark reads the path with,
+            # so a URI names a directory the same way a local path does
+            fs, parts = hadoop_fs(spark, path.rstrip("/") + "/part-*")
+            exts = {os.path.splitext(st.getPath().getName())[1] for st in fs.globStatus(parts) or []}
+            fmt = "csv" if ".csv" in exts else "json" if ".json" in exts else "orc" if ".orc" in exts else "parquet"
     if fmt == "csv":
         return spark.read.option("header", "true").option("inferSchema", "true").csv(path)
     if fmt == "json":

@@ -105,93 +105,3 @@ def stateful_running_stats(
             update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
         )
     )
-
-
-def stateful_profile_v2(
-    stream_df: DataFrame,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    value_col: str = "value",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-key running profile on Spark 4's NEW arbitrary-state API
-    (``transformWithStateInPandas`` — the StateStore-v2 successor to
-    ``applyInPandasWithState``): TWO typed state variables per key — a
-    ValueState (count, sum, max) and a MapState of distinct ``type_col``
-    values seen — something the single-tuple GroupState cannot hold without
-    serializing an unbounded set into one value. The MapState is the point:
-    per-entry updates write only the touched entries to the state store
-    (RocksDB-backed at scale), while the old API rewrote the whole blob
-    per batch.
-
-    Emits one row per key per batch that touched it: (key, events_total,
-    value_sum, value_max, n_types). ``events_total`` is strictly
-    increasing per key, so the FINAL emission (window argmax downstream)
-    is the batch-split-invariant compare surface and equals the plain
-    batch aggregate count/sum/max/countDistinct — the same determinism
-    contract as :func:`stateful_running_stats`. timeMode='None': no
-    timers, no late-filtering — emission depends only on the row multiset,
-    not the split.
-
-    ENV GATE: transformWithState's Python state-server protocol needs
-    ``google.protobuf`` (pyspark imports StateMessage_pb2 at runtime);
-    without it the JVM reports only "driver worker exited unexpectedly",
-    so this raises the actionable error up front instead. The operator
-    logic below is complete and runs wherever protobuf is installed —
-    the same record-and-carry contract as the multimodal codec seam."""
-    import pandas as pd
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:
-        raise ImportError(
-            "stateful_profile_v2 needs the 'protobuf' package (pyspark's "
-            "transformWithState state-server protocol imports "
-            "google.protobuf at runtime); install protobuf or use "
-            "stateful_running_stats (applyInPandasWithState) instead"
-        ) from exc
-
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    out_schema = (
-        f"{key_col} long, events_total long, value_sum double, "
-        "value_max double, n_types long"
-    )
-
-    class _Profile(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", "cnt long, vsum double, vmax double")
-            self._types = handle.getMapState("types", "t string", "one smallint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            got = self._agg.get()
-            cnt, vsum, vmax = got if got is not None else (0, 0.0, float("-inf"))
-            for pdf in rows:
-                vals = pdf[value_col].dropna()
-                cnt += len(pdf)
-                vsum += float(vals.sum()) if len(vals) else 0.0
-                vmax = max(vmax, float(vals.max())) if len(vals) else vmax
-                for t in pdf[type_col].dropna().unique():
-                    self._types.updateValue((str(t),), (1,))
-            self._agg.update((cnt, vsum, vmax))
-            n_types = sum(1 for _ in self._types.keys())
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "events_total": [cnt],
-                    "value_sum": [vsum],
-                    "value_max": [None if vmax == float("-inf") else vmax],
-                    "n_types": [n_types],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        ensure_event_time(stream_df, ts_col)
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            _Profile(), out_schema, outputMode="update", timeMode="None"
-        )
-    )

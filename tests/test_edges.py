@@ -100,46 +100,3 @@ def test_visuals_final_audit_edges(fixture, request):
 def test_drift_empty_target(spark, empty, one):
     res = M_drift.numeric_drift(one, empty).collect()
     assert all(r["target_mean"] is None for r in res)
-
-
-def test_psi_drift(spark):
-    from analyst_toolkit_spark.operators.drift import psi, psi_report
-
-    base = spark.range(0, 10000).selectExpr("CAST(id % 100 AS DOUBLE) AS v")
-    same = spark.range(0, 10000).selectExpr("CAST((id + 7) % 100 AS DOUBLE) AS v")
-    shifted = spark.range(0, 10000).selectExpr("CAST((id % 100) * 3 + 200 AS DOUBLE) AS v")
-
-    assert psi(base, same, "v") < 0.01  # identical distribution
-    assert psi(base, shifted, "v") > 0.25  # mass moved out of base's range
-
-    rep = {r["column"]: r["severity"] for r in psi_report(base, shifted).collect()}
-    assert rep["v"] == "major"
-
-
-def test_psi_report_batched_matches_per_column(spark):
-    """r15 optimization round: psi_report runs 3 actions TOTAL (one min/max
-    agg + one batched bucket-count pass per side) instead of 3 per column;
-    values must equal the per-column psi() exactly — including an all-null
-    column (PSI 0.0 by contract), a constant column (lo==hi widening), and
-    a column null on one side only."""
-    from pyspark.sql import functions as F
-
-    from analyst_toolkit_spark.operators.drift import psi, psi_report
-
-    base = spark.range(0, 2000).select(
-        (F.col("id") % 50).cast("double").alias("a"),
-        F.lit(7.0).alias("const"),
-        F.lit(None).cast("double").alias("allnull"),
-        F.when(F.col("id") % 3 == 0, F.col("id").cast("double")).alias("sparse"),
-    )
-    target = spark.range(0, 3000).select(
-        ((F.col("id") % 50) * 2).cast("double").alias("a"),
-        F.lit(9.0).alias("const"),
-        F.col("id").cast("double").alias("allnull"),  # null on BASE side only
-        F.lit(None).cast("double").alias("sparse"),   # null on TARGET side only
-    )
-    rep = {r["column"]: r["psi"] for r in psi_report(base, target).collect()}
-    assert set(rep) == {"a", "const", "allnull", "sparse"}
-    for c in ("a", "const", "sparse"):
-        assert rep[c] == round(psi(base, target, c), 6), c
-    assert rep["allnull"] == 0.0  # base all-null -> PSI 0.0 by contract

@@ -30,6 +30,22 @@ def test_impute_basic(spark):
     assert out.filter("num_mean IS NULL OR num_median IS NULL OR cat_mode IS NULL").count() == 0
 
 
+@pytest.mark.parametrize("strategy", ["mean", "median", "mode"])
+def test_impute_reads_nan_as_missing(spark, tmp_path, strategy):
+    """NaN in a double column is missing, as pandas reads it: the statistic
+    skips it and the fill replaces it like a null. Oracle: pandas
+    ``s.fillna(s.<strategy>())`` on the same parquet column."""
+    path = str(tmp_path / "nan.parquet")
+    vals = [1.0, 2.0, float("nan"), None, 6.0, 2.0, float("nan")]
+    spark.createDataFrame(list(enumerate(vals)), "i long, x double").write.parquet(path)
+    df = spark.read.parquet(path)
+    s = df.orderBy("i").toPandas()["x"]
+    want = s.fillna({"mean": s.mean(), "median": s.median(), "mode": s.mode()[0]}[strategy])
+    out, fills = impute(df, [ImputeSpec("x", strategy)])
+    got = [r["x"] for r in out.orderBy("i").collect()]
+    assert got == pytest.approx(want.tolist())
+
+
 def test_mode_tie_break_smallest(spark):
     # pandas mode()[0] on tie = smallest value (impute_data.py:53-56)
     df = spark.createDataFrame([("b",), ("a",), ("b",), ("a",), ("c",)], ["x"])

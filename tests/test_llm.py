@@ -133,12 +133,9 @@ def test_multimodal_plumbing(spark):
     stats = {r["id"]: (r["blob_bytes"], r["blob_format"]) for r in MM.binary_stats(df).collect()}
     assert stats[1][1] == "jpeg" and stats[2][1] == "png" and stats[3] == (None, "unknown")
 
-    meta = {r["id"]: (r["img_width"], r["img_height"]) for r in MM.extract_image_meta(df).collect()}
-    assert meta[3] == (None, None)
-    assert meta[1][0] is not None and 1 <= meta[1][0] <= 1920
-
-    with pytest.raises(MM.DecoderUnavailable):
-        MM.extract_image_meta(df, deterministic_fake=False)
+    # truncated headers carry no dimensions: null, never a made-up value
+    meta = {r["id"]: (r["img_width"], r["img_height"]) for r in MM.image_header_meta(df).collect()}
+    assert meta == {1: (None, None), 2: (None, None), 3: (None, None)}
 
 
 def test_ivf_topk_recall(spark, oracle_sf_dir):
@@ -168,25 +165,19 @@ def test_multimodal_resize_and_audio_seams(spark):
     from analyst_toolkit_spark.llm import multimodal as MM
 
     df = spark.createDataFrame(
-        [Row(id=1, content=bytes([0xFF, 0xD8, 1, 2, 3])), Row(id=2, content=None)]
+        [
+            Row(id=1, content=bytes([0xFF, 0xD8, 1, 2, 3])),
+            Row(id=2, content=None),
+            Row(id=3, content=b"RIFF\x04\x00\x00\x00WAVE"),  # no fmt/data chunk
+        ]
     )
-    resized = MM.resize_images(df).collect()
+    resized = MM.resize_images(df).orderBy("id").collect()
     assert all(r["resized_max_side"] == 512 for r in resized)
-    assert resized[0]["resized"] == bytes([0xFF, 0xD8, 1, 2, 3])  # stub passthrough
+    assert resized[0]["resized"] == bytes([0xFF, 0xD8, 1, 2, 3])  # non-PNG passthrough
 
+    # a payload decode_wav cannot read yields nulls, the same as a null blob
     audio = {r["id"]: (r["audio_seconds"], r["audio_rms"]) for r in MM.extract_audio_features(df).collect()}
-    assert audio[1][0] is not None and 0 <= audio[1][1] <= 1
-    assert audio[2] == (None, None)
-    # determinism across invocations (crc32, not salted hash)
-    again = {r["id"]: (r["audio_seconds"], r["audio_rms"]) for r in MM.extract_audio_features(df).collect()}
-    assert again == audio
-
-    import pytest as _pytest
-
-    # fake disabled: non-WAV payloads raise through the Arrow worker at
-    # execution (WAV itself now has a real stdlib decode path)
-    with _pytest.raises(Exception, match="DecoderUnavailable|audio codecs"):
-        MM.extract_audio_features(df, deterministic_fake=False).collect()
+    assert audio == {1: (None, None), 2: (None, None), 3: (None, None)}
 
 
 def test_stopword_ratio_and_vocabulary(spark):
@@ -820,9 +811,8 @@ def test_quantize_embeddings_roundtrip_bound(spark, sf_dir):
     assert z["q_vec"] == [0, 0, 0, 0]
 
 
-def test_quantized_dot_and_cosine_fidelity(spark, sf_dir):
-    """Dequantized dot tracks the exact dot within SQ8 tolerance and the
-    scale-free quantized cosine stays within ~1e-2 of exact cosine."""
+def test_quantized_cosine_fidelity(spark, sf_dir):
+    """The scale-free quantized cosine stays within ~1e-2 of exact cosine."""
     from analyst_toolkit_spark.ingest import load_table
 
     df = load_table(spark, sf_dir, "embeddings")
@@ -830,21 +820,13 @@ def test_quantized_dot_and_cosine_fidelity(spark, sf_dir):
     qrow = S.quantize_embeddings(df.filter(F.col("vec_id") == 0)).select(
         F.col("embedding").alias("q_emb"),
         F.col("q_vec").alias("qq"),
-        F.col("q_scale").alias("qs"),
     )
     j = base.crossJoin(F.broadcast(qrow))
     exact_dot = S.dot_cols(F.col("embedding"), F.col("q_emb"))
-    approx_dot = S.quantized_dot(F.col("q_vec"), F.col("q_scale"), F.col("qq"), F.col("qs"))
     exact_cos = exact_dot / (S.norm(F.col("embedding")) * S.norm(F.col("q_emb")))
     approx_cos = S.quantized_cosine(F.col("q_vec"), F.col("qq"))
-    stats = j.agg(
-        F.max(F.abs(approx_cos - exact_cos)).alias("cos_err"),
-        F.max(F.abs(approx_dot - exact_dot) / F.greatest(F.abs(exact_dot), F.lit(1e-9))).alias("dot_rel"),
-    ).first()
+    stats = j.agg(F.max(F.abs(approx_cos - exact_cos)).alias("cos_err")).first()
     assert stats["cos_err"] < 0.02
-    # dot relative error blows up near zero dots; the absolute-cos bound is
-    # the meaningful fidelity metric, rel-dot just needs to be sane overall
-    assert stats["dot_rel"] < 5.0
 
 
 def test_weighted_sample_deterministic_and_monotone(spark, sf_dir):
@@ -1025,8 +1007,8 @@ def test_png_codec_roundtrip_and_filters(spark):
 
 
 def test_png_real_decode_through_spark(spark):
-    """extract_image_meta returns TRUE dimensions for PNG blobs (not the
-    fake), and resize_images really resizes: output is a valid PNG whose
+    """image_header_meta and decode_png read the TRUE dimensions of a PNG
+    blob, and resize_images really resizes: output is a valid PNG whose
     decoded size respects max_side and whose pixels are a nearest-neighbor
     sample of the source."""
     from analyst_toolkit_spark.llm import multimodal as MM
@@ -1036,8 +1018,9 @@ def test_png_real_decode_through_spark(spark):
     blob = MM.encode_png(w, h, ch, px)
     df = spark.createDataFrame([(1, bytearray(blob))], "id long, content binary")
 
-    meta = MM.extract_image_meta(df).first()
-    assert (meta["img_width"], meta["img_height"]) == (w, h)
+    meta = MM.image_header_meta(df).first()
+    assert (meta["img_format"], meta["img_width"], meta["img_height"]) == ("png", w, h)
+    assert MM.decode_png(blob)[:3] == (w, h, ch)
 
     out = MM.resize_images(df, max_side=16).first()
     rw, rh, rch, rpx = MM.decode_png(bytes(out["resized"]))
@@ -1210,7 +1193,7 @@ def test_wav_real_decode_features(spark):
     assert abs(rows[1][1] - 0.5 / math.sqrt(2)) < 0.01  # sine RMS = A/sqrt(2)
     assert rows[2][0] == 0.5
     assert abs(rows[2][1] - 0.5) < 0.01  # square RMS = |A|
-    assert rows[3][0] is not None  # non-audio: deterministic fake, not a crash
+    assert rows[3] == (None, None)  # non-audio: nulls, not a crash and not a made-up value
     # agreement with the header-only parser on duration
     rate, chn, bits, dur = MM._parse_wav_header(sine)
     assert (rate, chn, bits, dur) == (8000, 1, 16, 1.0)
@@ -1382,14 +1365,18 @@ def test_charlm_model_and_score(spark):
 
 def test_char_ngrams_short_and_normalized(spark):
     from analyst_toolkit_spark.llm import lm as L
+    from analyst_toolkit_spark.llm.text import normalize_text
 
     df = spark.createDataFrame(
         [(1, "ab"), (2, ""), (3, None), (4, "A,B!C")], ["doc_id", "text"]
     )
-    out = {r.doc_id: r.g for r in df.select("doc_id", L.char_ngrams("text").alias("g")).collect()}
-    assert out[1] == [] and out[2] == []          # shorter than n -> EMPTY, never descending
-    assert out[3] is None or out[3] == []         # null text stays harmless
-    assert out[4] == ["a b", " b ", "b c"]        # punctuation -> spaces, then grams
+    nrm = df.select("doc_id", normalize_text(F.col("text")).alias("t"))
+    nrm = nrm.select("doc_id", "t", F.split("t", "").alias("ch"))
+    for grams in (L._ngrams_of(F.col("t"), 3), L._ngrams_of_chars(F.col("ch"), 3)):
+        out = {r.doc_id: r.g for r in nrm.select("doc_id", grams.alias("g")).collect()}
+        assert out[1] == [] and out[2] == []          # shorter than n -> EMPTY, never descending
+        assert out[3] is None or out[3] == []         # null text stays harmless
+        assert out[4] == ["a b", " b ", "b c"]        # punctuation -> spaces, then grams
 
 
 def test_remove_repeated_spans_ground_truth(spark):
@@ -1503,6 +1490,8 @@ def test_gradient_df_matches_python_ground_truth(spark):
     iteration's gradient sums vs an independent Python computation — exact
     at w=0 (err = 0.5 - y, rational arithmetic), tolerance-checked at a
     non-zero weight vector (exp on the path)."""
+    import math
+
     from analyst_toolkit_spark.llm import classify as C
 
     rows = [
@@ -1515,7 +1504,7 @@ def test_gradient_df_matches_python_ground_truth(spark):
     def py_grad(w):
         gs = [0.0] * 3
         for _, x, y in rows:
-            err = C.sigmoid(sum(wi * xi for wi, xi in zip(w, x))) - y
+            err = 1.0 / (1.0 + math.exp(-sum(wi * xi for wi, xi in zip(w, x)))) - y
             for i in range(3):
                 gs[i] += err * x[i]
         return gs
@@ -1602,8 +1591,8 @@ def test_bucket_components_clusters_dups_and_refines(spark, docs):
 
 def test_contaminated_spans_surgery(spark):
     """Span-level decontamination (new r8): the quoted benchmark passage is
-    located exactly (hand-checked token offsets), cut out, and untainted
-    docs pass through bit-identical."""
+    cut out token-exactly (hand-checked token counts), and untainted docs
+    pass through bit-identical."""
     bench = spark.createDataFrame(
         [("the quick brown fox jumps over dogs",)], ["text"]
     )
@@ -1616,13 +1605,6 @@ def test_contaminated_spans_surgery(spark):
         ],
         ["doc_id", "text"],
     )
-    spans = {
-        r["doc_id"]: (r["start_tok"], r["end_tok"], r["span_tokens"])
-        for r in D.contaminated_spans(docs, bench, n=3).collect()
-    }
-    assert spans[1] == (3, 9, 7)
-    assert spans[3] == (0, 6, 7)
-    assert 2 not in spans
     out = {r["doc_id"]: r for r in D.remove_contaminated_spans(docs, bench, n=3).collect()}
     assert out[1]["clean_text"] == "intro words here tail words"
     assert out[1]["kept_tokens"] == 5 and out[1]["removed_tokens"] == 7
@@ -1688,11 +1670,6 @@ def test_near_dedup_auto_gate_flips_and_matches_pair_path(spark):
         for i in range(10)
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-
-    est = D.candidate_pair_census(df)
-    # 6 clusters x C(10,2) pairs x 16 bands = upper bound; at least one
-    # band's worth of every cluster's pairs must be counted
-    assert est >= 6 * 45
 
     pairs = D.minhash_dedup_pairs(df, threshold=0.8, eager=False)
     truth_kept = {r["doc_id"] for r in D.dedup_representatives(df, pairs).collect()}
@@ -1825,7 +1802,7 @@ def test_max_bucket_constant_shared(spark):
     import inspect
 
     assert D.MAX_BUCKET == 1000
-    for fn in (D.minhash_candidates, D.candidate_pair_census):
+    for fn in (D.minhash_candidates, D.near_dedup_components):
         src = inspect.getsource(fn)
         assert "MAX_BUCKET" in src and "= 1000" not in src, fn.__name__
 

@@ -63,6 +63,20 @@ def test_nan_is_not_an_outlier(spark, tmp_path):
     assert means[4] == pytest.approx(2.5) and math.isnan(means[5])  # NaN stays out of the mean
 
 
+def test_zscore_bounds_read_nan_as_missing(spark, tmp_path):
+    """z-score bounds come from the mean and sample stddev of the values
+    that are not missing, as pandas computes them; Spark's ``avg`` and
+    ``stddev_samp`` of a column holding NaN are NaN."""
+    path = str(tmp_path / "nan.parquet")
+    vals = [1.0, 2.0, float("nan"), None, 6.0, 2.0, float("nan")]
+    spark.createDataFrame([(v,) for v in vals], "val double").write.parquet(path)
+    df = spark.read.parquet(path)
+    s = df.toPandas()["val"]
+    lo, hi = compute_bounds(df, [OutlierSpec("val", "zscore", threshold=3.0)])["val"]
+    assert lo == pytest.approx(s.mean() - 3.0 * s.std())
+    assert hi == pytest.approx(s.mean() + 3.0 * s.std())
+
+
 def test_empty_df(spark):
     df = spark.createDataFrame([], "val double")
     flagged, _ = detect_outliers(df, [OutlierSpec("val", "iqr")])

@@ -111,7 +111,7 @@ def test_toolkit_export_dashboard_tool(spark, sf_dir, tmp_path):
 def test_certification_section_pass_and_fail(spark, sf_dir):
     from analyst_toolkit_spark.operators.validation import run_validation
     from analyst_toolkit_spark.plans.config import validation_config
-    from analyst_toolkit_spark.reporting import certification_section, render_certification_dashboard
+    from analyst_toolkit_spark.reporting import certification_section
 
     df = load_table(spark, sf_dir, "orders")
     ok_cfg, _ = validation_config(
@@ -138,8 +138,6 @@ def test_certification_section_pass_and_fail(spark, sf_dir):
     # issue units tile carries the range rule's violation count
     viol = int(res2["rules"]["range:o_totalprice"]["violations"])
     assert viol > 0 and f">{viol}<" in frag2
-    page = render_certification_dashboard(res2, run_id="r9")
-    assert page.startswith("<!DOCTYPE html>") and "r9" in page
 
 
 def test_final_audit_certification_in_pipeline_dashboard(spark, sf_dir):

@@ -3,16 +3,19 @@
 ``session.get_spark`` leaves AQE, partition sizing, parquet pushdown, the I/O
 codec and the streaming state-store provider on Spark's defaults. The first
 test pins the effective value of each, so a pyspark upgrade that moves one
-fails here instead of silently changing plans. The second keeps the set of
-``SPARK_GRAFT_*`` settings the engine reads from growing back.
+fails here instead of silently changing plans. The last two keep the set of
+``SPARK_GRAFT_*`` settings the engine reads from growing back, and README's
+Configuration table equal to the settings the engine reads.
 """
 
+import ast
 import pathlib
 import re
 
 import pytest
 
-PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "analyst_toolkit_spark"
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+PACKAGE = ROOT / "analyst_toolkit_spark"
 
 #: Deployment settings: cores and driver heap.
 KEPT_SETTINGS = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
@@ -62,3 +65,16 @@ def test_no_new_spark_graft_settings():
     assert set(found) - KEPT_SETTINGS == set(), {
         k: v for k, v in found.items() if k not in KEPT_SETTINGS
     }
+
+
+def test_readme_configuration_lists_every_setting():
+    setting = re.compile(r"(ANALYST|SPARK_GRAFT)_[A-Z0-9_]+")
+    read = set()
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str) and setting.fullmatch(node.value):
+                read.add(node.value)
+    readme = ROOT.joinpath("README.md").read_text()
+    section = readme.split("\n## Configuration\n", 1)[1].split("\n## ", 1)[0]
+    listed = set(re.findall(r"^\| `([A-Z0-9_]+)` \|", section, re.M))
+    assert listed == read, {"undocumented": read - listed, "not read": listed - read}

@@ -404,31 +404,6 @@ def test_interval_join_outer_key_never_null(spark):
                       right_ts="cts", how="cross")
 
 
-def test_stateful_profile_v2_env_gate(spark):
-    """transformWithStateInPandas (Spark 4 state-v2) needs google.protobuf
-    for its state-server protocol; this environment lacks it, so the
-    operator must raise the ACTIONABLE error up front (the JVM's own
-    failure is an opaque 'driver worker exited unexpectedly'). Where
-    protobuf exists, the operator runs instead — both paths covered."""
-    from analyst_toolkit_spark.streaming.sessions import stateful_profile_v2
-
-    df = spark.createDataFrame(
-        [(1, 10, "2024-01-01 10:00:00", "click", 1.0)],
-        "event_id long, user_id long, ts string, event_type string, value double",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    try:
-        import google.protobuf  # noqa: F401
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-    if has_protobuf:
-        out = stateful_profile_v2(df)  # lazy construction
-        assert "n_types" in out.columns
-    else:
-        with pytest.raises(ImportError, match="protobuf"):
-            stateful_profile_v2(df)
-
-
 def test_interval_join_checkpoint_recovery(spark):
     """r12 (r11 VERDICT #6, second seam): the stream-stream interval join's
     BUFFERED STATE survives a restart. Phase 1 runs to completion having
