@@ -90,14 +90,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, row_id: bool = False
             F.expr(f"timestampadd(MICROSECOND, `{c}` div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"),
         )
     return with_row_id(df) if row_id else df
-
-
-def load_csv(spark: SparkSession, path: str, infer_schema: bool = True, row_id: bool = False) -> DataFrame:
-    """CSV scan with header + dtype inference (reference m00_utils/load_data.py:27-37).
-
-    Production mode should pass an explicit schema instead; inference costs an
-    extra pass and is unsafe at 100 TB (Spark samples, pandas reads all).
-    """
-    df = spark.read.option("header", "true").option("inferSchema", str(infer_schema).lower()).csv(path)
-    return with_row_id(df) if row_id else df
-

@@ -21,7 +21,9 @@ Spark-first notes:
 Env knobs mirror the reference: $ANALYST_MCP_MAX_JOBS (default 512),
 $ANALYST_MCP_JOB_TTL_SEC (default 86400), $ANALYST_MCP_JOB_STATE_PATH
 (default: no persistence here — the store is per-Toolkit; pass a path to
-persist across restarts).
+persist across restarts). A restarted store loads every job the previous
+process left queued or running as ``failed`` with an ``Interrupted`` error:
+no thread runs it any more.
 """
 
 from __future__ import annotations
@@ -74,6 +76,19 @@ class JobStore:
                 self._jobs = loaded
         except Exception:
             self._jobs = {}
+        # no thread of this process runs a job a previous process left queued
+        # or running: end it, or it would read as live forever
+        now = time.time()
+        interrupted = [job for job in self._jobs.values() if job.get("state") not in _TERMINAL]
+        for job in interrupted:
+            job.update(
+                state="failed",
+                updated_at=now,
+                finished_at=now,
+                error={"error_type": "Interrupted", "message": "the server restarted before the job finished"},
+            )
+        if interrupted:
+            self._persist_unsafe()
 
     def _persist_unsafe(self) -> None:
         if not self._state_path:

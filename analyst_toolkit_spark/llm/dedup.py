@@ -21,6 +21,7 @@ import itertools
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from analyst_toolkit_spark.llm.scale import ensure_parallelism
 from analyst_toolkit_spark.llm.text import normalize_text
 from analyst_toolkit_spark.sources import io as S_io
 
@@ -411,9 +412,7 @@ def minhash_dedup_pairs(
     sessions via a global temp view and the checkpointed result (a plain
     LogicalRDD scan by then) is re-bound to the caller's session the same way.
     """
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    src = df.repartition(par) if df.rdd.getNumPartitions() < par else df
+    src = ensure_parallelism(df)
     if banded is not None:
         # band-once seam (r7 VERDICT #3): the signature fold — the stage the
         # scoped no-codegen session exists for — is already materialized by
@@ -574,8 +573,6 @@ def simhash_near_pairs(
     repartition shuffle ``ensure_parallelism`` may add, and the fold runs
     and is stored at the first action.
     """
-    from analyst_toolkit_spark.llm.scale import ensure_parallelism
-
     # the signature fold is compute-bound — don't inherit file-count
     # partitioning (same reasoning as minhash_dedup_pairs:184-186)
     sig_df = ensure_parallelism(df).select(
@@ -652,8 +649,6 @@ def simhash_dup_groups(
     df: DataFrame, key: str = "text", id_col: str = "doc_id", method: str = "xxhash"
 ) -> DataFrame:
     """Docs sharing an identical 64-bit SimHash (strong near-dup signal)."""
-    from analyst_toolkit_spark.llm.scale import ensure_parallelism
-
     return (
         ensure_parallelism(df).select(simhash64(F.col(key), method=method).alias("simhash"), F.col(id_col))
         .groupBy("simhash")
@@ -1375,8 +1370,7 @@ def near_dedup_components(
     cap = NEARDUP_PAIR_CAP if pair_cap is None else pair_cap
     id_integral = dict(df.dtypes)[id_col] in ("tinyint", "smallint", "int", "bigint")
     spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    src = df.repartition(par) if df.rdd.getNumPartitions() < par else df
+    src = ensure_parallelism(df)
 
     def _build(s):
         return _band_stream(s, key, id_col, n_shingle, k, bands, method=method)

@@ -29,16 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-IMAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("format", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-    ]
-)
-
-
 class DecoderUnavailable(NotImplementedError):
     """Raised when a real media codec is required but not installed."""
 

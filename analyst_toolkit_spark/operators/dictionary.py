@@ -7,12 +7,14 @@ Reference semantics (m00_utils/data_dictionary_builder.py:50-90):
   → categorical; date/time in name → datetime_like_text; else text.
 - example values F12: first ``limit`` DISTINCT non-null values in row order.
 
-Spark design: counts for ALL columns come from ONE aggregation pass. Examples
-for ALL columns come from ONE batched job: unpivot to (col, value, _row_id),
-group to (col, value, min_row_id), rank per col — first-occurrence order is
-exactly ``min(_row_id)``, reproducing pandas insertion order without a
-per-column job. Both scale: the grouped set is bounded by distinct values, not
-rows.
+Spark design: the counts come from ``operators.profile.column_stats``, the
+engine's one per-column count implementation (one bounded collect on the
+driver tier; a count and a distinct aggregate on the Spark tier; NaN is
+missing on both). Examples for ALL columns come from ONE batched job: unpivot
+to (col, value, _row_id), group to (col, value, min_row_id), rank per col —
+first-occurrence order is exactly ``min(_row_id)``, reproducing pandas
+insertion order without a per-column job. Both scale: the grouped set is
+bounded by distinct values, not rows.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from analyst_toolkit_spark.ingest import ROW_ID, with_row_id
+from analyst_toolkit_spark.operators.profile import column_stats
 
 _INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
 _FLOAT_TYPES = {"float", "double"} | {f"decimal({p},{s})" for p in range(39) for s in range(39)}
@@ -48,79 +51,6 @@ def semantic_type(name: str, dtype: str, n_nonnull: int, n_unique: int) -> str:
     if dtype == "string":
         return "text"
     return dtype
-
-
-def _column_stats_driver(df: DataFrame, cols: list[str]) -> list[dict] | None:
-    """column_stats' small-input execution shape (r15 optimization round —
-    the same tier :func:`operators.profile._profile_driver` rides): when the
-    optimizer knows the input is tiny, ONE bounded Arrow collect replaces the
-    null-count aggregation plus the count_distinct aggregation (whose EXPAND
-    rewrite multiplies every input row per distinct column). Identical values:
-    pandas ``isna``/``nunique`` match ``count(isNull)``/``count_distinct``
-    under the engine's driver-tier convention (NaN≡null, same as profile's).
-    Returns None (caller falls back to the distributed aggs) when the input
-    is not known-small, a column type is non-atomic, or the row cap trips."""
-    from pyspark.sql import types as T
-
-    from analyst_toolkit_spark.functions.stats import collect_driver_bounded
-
-    atomic = {f.name for f in df.schema.fields if isinstance(f.dataType, T.AtomicType)}
-    if any(c not in atomic for c in cols):
-        return None
-    pdf = collect_driver_bounded(df, cols)
-    if pdf is None:
-        return None
-    n = len(pdf)
-    dtypes = dict(df.dtypes)
-    out = []
-    for c in cols:
-        nulls = int(pdf[c].isna().sum())
-        out.append(
-            {
-                "column": c,
-                "dtype": dtypes[c],
-                "count": n,
-                "null_count": nulls,
-                "null_pct": round(nulls * 100.0 / n, 2) if n else 0.0,
-                "n_unique": int(pdf[c].nunique()),
-                "n_nonnull": n - nulls,
-            }
-        )
-    return out
-
-
-def column_stats(df: DataFrame, columns: list[str] | None = None) -> list[dict]:
-    """Per-column count / nulls / distinct. Tiny known inputs take the
-    one-collect driver tier (see :func:`_column_stats_driver`); above the
-    size gate, null counts in one agg; distinct counts in a second (keeping
-    count_distinct separate avoids Catalyst's EXPAND row-multiplication
-    hitting the other aggregates — see operators/profile.py)."""
-    cols = columns or [c for c in df.columns if c != ROW_ID]
-    driver = _column_stats_driver(df, cols)
-    if driver is not None:
-        return driver
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in cols:
-        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"nulls::{c}"))
-    dist_aggs = [F.count_distinct(F.col(c)).alias(f"uniq::{c}") for c in cols]
-    row = df.agg(*aggs).crossJoin(df.agg(*dist_aggs)).first()
-    n = row["__n"]
-    dtypes = dict(df.dtypes)
-    out = []
-    for c in cols:
-        nulls = int(row[f"nulls::{c}"] or 0)
-        out.append(
-            {
-                "column": c,
-                "dtype": dtypes[c],
-                "count": n,
-                "null_count": nulls,
-                "null_pct": round(nulls * 100.0 / n, 2) if n else 0.0,
-                "n_unique": int(row[f"uniq::{c}"] or 0),
-                "n_nonnull": n - nulls,
-            }
-        )
-    return out
 
 
 def example_values(df: DataFrame, columns: list[str], limit: int = 5) -> dict[str, list[str]]:
@@ -160,14 +90,15 @@ def data_dictionary(
     )
     rows = []
     for s in stats:
+        n_nonnull = s["count"] - s["nulls"]
         rows.append(
             {
                 "column": s["column"],
                 "dtype": s["dtype"],
-                "semantic_type": semantic_type(s["column"], s["dtype"], s["n_nonnull"], s["n_unique"]),
+                "semantic_type": semantic_type(s["column"], s["dtype"], n_nonnull, s["n_unique"]),
                 "count": s["count"],
-                "null_count": s["null_count"],
-                "null_pct": float(s["null_pct"]),
+                "null_count": s["nulls"],
+                "null_pct": round(s["nulls"] * 100.0 / s["count"], 2) if s["count"] else 0.0,
                 "n_unique": s["n_unique"],
                 "examples": ", ".join(examples.get(s["column"], [])) if include_examples else "Omitted",
             }

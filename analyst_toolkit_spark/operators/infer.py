@@ -7,8 +7,10 @@ concrete generator ships in an external deploy package, so the heuristics here
 are designed fresh against the module config template shapes the output must
 load into (config/*.yaml, plans/config.py parsers).
 
-Spark design: one column_stats pass + one min/max agg pass over a (sampled)
-DataFrame; all heuristics are driver-side over those small results.
+Spark design: one ``operators.profile.column_stats`` call (counts, distinct
+counts and numeric min/max; NaN is missing) plus the example-value job for
+categorical domains over a (sampled) DataFrame; all heuristics are
+driver-side over those small results.
 """
 
 from __future__ import annotations
@@ -21,7 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from analyst_toolkit_spark.ingest import ROW_ID
-from analyst_toolkit_spark.operators.dictionary import column_stats, example_values
+from analyst_toolkit_spark.operators.dictionary import example_values
+from analyst_toolkit_spark.operators.profile import column_stats
 
 _SPARK_TO_PANDAS = {
     "string": "object",
@@ -69,15 +72,6 @@ def infer_configs(
         if c not in id_like and 0 < stats[c]["n_unique"] <= max_unique
     ]
 
-    # one extra agg pass: numeric min/max (range rules) + categorical domains
-    range_bounds: dict[str, tuple] = {}
-    if numeric_cols:
-        aggs = []
-        for c in numeric_cols:
-            aggs.append(F.min(c).alias(f"min::{c}"))
-            aggs.append(F.max(c).alias(f"max::{c}"))
-        row = df.agg(*aggs).first()
-        range_bounds = {c: (row[f"min::{c}"], row[f"max::{c}"]) for c in numeric_cols}
     domains = example_values(df, categorical_cols, limit=max_unique) if categorical_cols else {}
 
     datetime_like = []
@@ -93,7 +87,9 @@ def infer_configs(
                 for c in candidates
             ]
             row = df.agg(*aggs).first()
-            datetime_like = [c for c in candidates if (row[c] or 0) == 0 and stats[c]["n_nonnull"] > 0]
+            datetime_like = [
+                c for c in candidates if (row[c] or 0) == 0 and stats[c]["nulls"] < stats[c]["count"]
+            ]
 
     configs: dict[str, str] = {}
 
@@ -105,9 +101,9 @@ def infer_configs(
         if domains:
             rules["categorical_values"] = {c: sorted(domains[c]) for c in categorical_cols if domains.get(c)}
         ranges = {
-            c: {"min": float(lo), "max": float(hi)}
-            for c, (lo, hi) in range_bounds.items()
-            if c not in id_like and lo is not None and hi is not None
+            c: {"min": stats[c]["min"], "max": stats[c]["max"]}
+            for c in numeric_cols
+            if c not in id_like and stats[c]["min"] is not None
         }
         if ranges:
             rules["numeric_ranges"] = ranges
@@ -150,7 +146,7 @@ def infer_configs(
     if "imputation" in wanted:
         strategies: dict = {}
         for c in df.columns:
-            if stats[c]["null_count"] == 0 or c in id_like:
+            if stats[c]["nulls"] == 0 or c in id_like:
                 continue
             t = dtypes[c]
             if t in ("double", "float"):
@@ -166,7 +162,7 @@ def infer_configs(
         )
 
     if "final_audit" in wanted:
-        no_null_cols = [c for c in df.columns if stats[c]["null_count"] == 0]
+        no_null_cols = [c for c in df.columns if stats[c]["nulls"] == 0]
         configs["final_audit"] = yaml.safe_dump(
             {
                 "final_audit": {

@@ -1,4 +1,5 @@
-"""M01 diagnostics → single-pass distributed profiler.
+"""M01 diagnostics → single-pass distributed profiler, and the engine's one
+implementation of per-column counts.
 
 The reference computes nulls, nunique, describe(), skew, kurt, duplicate counts
 with ~a dozen separate eager pandas calls over the whole table
@@ -8,22 +9,36 @@ dozen full scans of 100 TB. Here every requested metric compiles into ONE
 expressions, fused by whole-stage codegen into a single scan), plus one
 optional groupBy-all-columns pass for the duplicate-row count.
 
+:func:`column_stats` — row count, missing count, distinct count and, for
+numeric columns, min and max — is the only code that computes those numbers;
+``profile``, ``data_dictionary`` and ``infer_configs`` all read them from its
+two per-tier pieces. Tiny known inputs (the size gate of
+``functions.stats.collect_driver_bounded``) take the driver tier: one bounded
+Arrow collect, everything in pandas. Everything else takes the Spark tier: one
+count/min/max aggregate plus one distinct aggregate. NaN in float/double
+columns is missing on both tiers, as pandas reads it.
+
 Output is a *long* profile table (one row per column) — small, deterministic,
 oracle-checkable.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from analyst_toolkit_spark.functions.stats import (
+    _nan_as_null,
+    collect_driver_bounded,
     kurtosis_g2,
     percentile_exact,
     quantile_stats,
     skewness_g1,
 )
+from analyst_toolkit_spark.ingest import ROW_ID
 
 NUMERIC_TYPES = (
     T.ByteType,
@@ -46,6 +61,99 @@ def categorical_columns(df: DataFrame) -> list[str]:
     return [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
 
 
+def _driver_frame(df: DataFrame, cols: list[str]):
+    """The driver tier's pandas frame of ``cols``, or None for the Spark tier:
+    the input is not known-small, the row cap tripped, or a column is
+    non-atomic (pandas cannot hash the arrays an ``array`` column collects
+    to, so ``nunique`` would fail)."""
+    if any(not isinstance(df.schema[c].dataType, T.AtomicType) for c in cols):
+        return None
+    return collect_driver_bounded(df, cols)
+
+
+def _pandas_stats(pdf, c: str, numeric: bool):
+    """One column of the driver tier's frame: its :func:`column_stats`
+    fields, and for a numeric column its non-missing values as floats (empty
+    otherwise). pandas reads null and NaN alike as missing."""
+    import numpy as np
+
+    s = pdf[c].dropna()
+    vals = s.to_numpy(dtype=float) if numeric else np.empty(0)
+    stats = {
+        "count": len(pdf),
+        "nulls": len(pdf) - len(s),
+        "n_unique": int(s.nunique()),
+        "min": float(vals.min()) if vals.size else None,
+        "max": float(vals.max()) if vals.size else None,
+    }
+    return stats, vals
+
+
+def _spark_aggs(df: DataFrame, cols: list[str], num: set[str], approx_rsd: float | None):
+    """The Spark tier's :func:`column_stats` aggregates over the value Columns
+    of ``cols`` — each float/double column read through ``_nan_as_null`` here,
+    once. Distinct counts are exact, or HLL sketches of relative error
+    ``approx_rsd`` when one is given. Returns (the count/min/max aggregate,
+    the distinct aggregate, the value Columns for the caller's own
+    statistics).
+
+    Exact distinct counts go in a SEPARATE aggregation: mixing countDistinct
+    with TypedImperative aggs (percentile) triggers Catalyst's EXPAND
+    rewrite, which multiplies every input row per distinct column and makes
+    the percentile buffers chew N× the data (measured 13 s vs 3 s on a
+    6-column table). approx_count_distinct is a sketch — no EXPAND — so the
+    approx path stays single-pass."""
+    values = {c: _nan_as_null(df, c) for c in cols}
+    aggs: list = [F.count(F.lit(1)).alias("__rows")]
+    dist_aggs: list = []
+    for c, v in values.items():
+        aggs.append(F.count(v).alias(f"{c}__count"))
+        if approx_rsd is None:
+            dist_aggs.append(F.count_distinct(v).alias(f"{c}__nunique"))
+        else:
+            aggs.append(F.approx_count_distinct(v, approx_rsd).alias(f"{c}__nunique"))
+        if c in num:
+            aggs += [F.min(v).cast("double").alias(f"{c}__min"), F.max(v).cast("double").alias(f"{c}__max")]
+    return aggs, dist_aggs, values
+
+
+def _wide(df: DataFrame, aggs: list, dist_aggs: list) -> DataFrame:
+    """The one-row frame of both Spark-tier aggregates (a 1-row × 1-row join)."""
+    wide = df.agg(*aggs)
+    return wide.crossJoin(df.agg(*dist_aggs)) if dist_aggs else wide
+
+
+def column_stats(df: DataFrame, columns: list[str] | None = None) -> list[dict]:
+    """Per column (default: every column but the row id): ``column``,
+    ``dtype``, row ``count``, missing count ``nulls`` (null, and NaN in
+    float/double columns), distinct non-missing values ``n_unique``, and for
+    numeric columns ``min``/``max`` as floats (None otherwise, and for a
+    column with no value). The driver tier reads one bounded collect in
+    pandas; the Spark tier runs one count/min/max and one distinct
+    aggregate."""
+    cols = columns or [c for c in df.columns if c != ROW_ID]
+    num = set(numeric_columns(df))
+    dtypes = dict(df.dtypes)
+    pdf = _driver_frame(df, cols)
+    if pdf is not None:
+        stats = {c: _pandas_stats(pdf, c, c in num)[0] for c in cols}
+    else:
+        aggs, dist_aggs, _ = _spark_aggs(df, cols, num, None)
+        row = _wide(df, aggs, dist_aggs).first()
+        n = row["__rows"]
+        stats = {
+            c: {
+                "count": n,
+                "nulls": n - row[f"{c}__count"],
+                "n_unique": row[f"{c}__nunique"],
+                "min": row[f"{c}__min"] if c in num else None,
+                "max": row[f"{c}__max"] if c in num else None,
+            }
+            for c in cols
+        }
+    return [{"column": c, "dtype": dtypes[c], **stats[c]} for c in cols]
+
+
 def profile(
     df: DataFrame,
     columns: list[str] | None = None,
@@ -54,10 +162,11 @@ def profile(
 ) -> DataFrame:
     """Single-pass column profile.
 
-    Per column: row count, non-null count, null count, null %, distinct count;
-    numerics additionally get mean, stddev (ddof=1), min, max, q25/q50/q75
-    (exact linear interpolation), bias-corrected skewness and kurtosis —
-    pandas/DuckDB parity (see functions/stats.py).
+    Per column: the :func:`column_stats` counts (row count, missing count,
+    missing share, distinct count); numerics additionally get mean, stddev
+    (ddof=1), min, max, q25/q50/q75 (exact linear interpolation),
+    bias-corrected skewness and kurtosis — pandas/DuckDB parity (see
+    functions/stats.py), with NaN read as missing.
 
     ``exact=False`` switches distinct→approx_count_distinct and
     percentiles→approx_percentile: the 100 TB fast path (t-digest / HLL sketch,
@@ -75,44 +184,26 @@ def profile(
         # at all. 3-4x faster than the fused agg below at sub-128 MB scale
         # (the percentile aggregate's per-value hash-map update dominates),
         # and skew/kurt come from pandas itself — the exact reference
-        # semantics. None above the size gate or when the row cap trips.
-        out = _profile_driver(df, cols, num)
-        if out is not None:
-            return out
+        # semantics.
+        pdf = _driver_frame(df, cols)
+        if pdf is not None:
+            return _profile_pandas(df, pdf, cols, num)
     # Quartiles come from quantile_stats: aggregate Columns that join the
     # fused agg below, or (above the refine threshold) values from the
     # bounded-memory refine path that re-enter the agg as literals.
     qstats = quantile_stats(df, {c: [0.25, 0.5, 0.75] for c in cols if c in num}, exact)
-    aggs: list = [F.count(F.lit(1)).alias("__rows")]
+    aggs, dist_aggs, values = _spark_aggs(df, cols, num, None if exact else approx_rsd)
     for k, v in qstats.items():
         aggs.append((v if isinstance(v, Column) else F.array(*[F.lit(x).cast("double") for x in v])).alias(k))
-    # Exact distinct counts go in a SEPARATE aggregation: mixing countDistinct
-    # with TypedImperative aggs (percentile) triggers Catalyst's EXPAND
-    # rewrite, which multiplies every input row per distinct column and makes
-    # the percentile buffers chew N× the data (measured 13 s vs 3 s on a
-    # 6-column table). approx_count_distinct is a sketch — no EXPAND — so the
-    # approx path stays single-pass.
-    dist_aggs: list = []
-    for c in cols:
-        col = F.col(c)
-        aggs.append(F.count(col).alias(f"{c}__count"))
-        if exact:
-            dist_aggs.append(F.countDistinct(col).alias(f"{c}__nunique"))
-        else:
-            aggs.append(F.approx_count_distinct(col, approx_rsd).alias(f"{c}__nunique"))
+    for c, v in values.items():
         if c in num:
             aggs += [
-                F.avg(col).alias(f"{c}__mean"),
-                F.stddev_samp(col).alias(f"{c}__std"),
-                F.min(col).cast("double").alias(f"{c}__min"),
-                F.max(col).cast("double").alias(f"{c}__max"),
-                skewness_g1(col).alias(f"{c}__skew"),
-                kurtosis_g2(col).alias(f"{c}__kurt"),
+                F.avg(v).alias(f"{c}__mean"),
+                F.stddev_samp(v).alias(f"{c}__std"),
+                skewness_g1(v).alias(f"{c}__skew"),
+                kurtosis_g2(v).alias(f"{c}__kurt"),
             ]
-
-    wide = df.agg(*aggs)
-    if dist_aggs:
-        wide = wide.crossJoin(df.agg(*dist_aggs))  # 1-row × 1-row join
+    wide = _wide(df, aggs, dist_aggs)
 
     # Pivot the single wide row to long form IN-PLAN (no driver collect):
     # one struct per column, then inline explode. The wide row is 1 row, so this
@@ -170,57 +261,41 @@ _PROFILE_SCHEMA = T.StructType(
 )
 
 
-def _profile_driver(df: DataFrame, cols: list[str], num: set[str]) -> DataFrame | None:
-    """profile()'s small-input execution shape: one bounded Arrow collect,
-    every metric via pandas/numpy (identical formulas: linear-interpolation
-    quantiles, ddof=1 stddev, pandas G1/G2 skew/kurt — see functions/stats),
-    result re-entered as a local DataFrame with the standard profile schema.
-    Returns None if the row cap tripped (caller falls back to distributed)."""
-    import math
-
+def _profile_pandas(df: DataFrame, pdf, cols: list[str], num: set[str]) -> DataFrame:
+    """profile()'s driver tier: the :func:`column_stats` fields of the
+    collected frame, plus moments and quartiles via pandas/numpy (identical
+    formulas: linear-interpolation quantiles, ddof=1 stddev, pandas G1/G2
+    skew/kurt — see functions/stats), re-entered as a local DataFrame with
+    the standard profile schema."""
     import numpy as np
-
-    from analyst_toolkit_spark.functions.stats import collect_driver_bounded
-
-    pdf = collect_driver_bounded(df, cols)
-    if pdf is None:
-        return None
-    rows_total = len(pdf)
-
-    def _f(x) -> float | None:
-        x = float(x)
-        return None if math.isnan(x) else x
+    import pandas as pd
 
     out_rows = []
     for c in cols:
-        series = pdf[c].dropna()
-        n = int(len(series))
-        base = {
-            "column": c,
-            "count": rows_total,
-            "nulls": rows_total - n,
-            "null_pct": (rows_total - n) / rows_total if rows_total else None,
-            "n_unique": int(series.nunique()),
-        }
-        stats = dict.fromkeys(
-            ("mean", "stddev", "min", "max", "q25", "q50", "q75", "skewness", "kurtosis")
-        )
-        if c in num and n > 0:
-            vals = series.to_numpy(dtype=float)
-            qs = np.quantile(vals, [0.25, 0.5, 0.75])
-            stats.update(
-                mean=_f(vals.mean()),
-                stddev=_f(np.std(vals, ddof=1)) if n > 1 else None,
-                min=_f(vals.min()),
-                max=_f(vals.max()),
-                q25=_f(qs[0]),
-                q50=_f(qs[1]),
-                q75=_f(qs[2]),
-                skewness=_f(series.astype(float).skew()) if n >= 3 else None,
-                kurtosis=_f(series.astype(float).kurt()) if n >= 4 else None,
+        stats, vals = _pandas_stats(pdf, c, c in num)
+        n = vals.size
+        row = dict.fromkeys(_PROFILE_SCHEMA.fieldNames())
+        row.update(column=c, null_pct=stats["nulls"] / stats["count"] if stats["count"] else None, **stats)
+        if n > 0:
+            s = pd.Series(vals)
+            q25, q50, q75 = np.quantile(vals, [0.25, 0.5, 0.75])
+            row.update(
+                mean=_nan_none(vals.mean()),
+                stddev=_nan_none(np.std(vals, ddof=1)) if n > 1 else None,
+                q25=_nan_none(q25),
+                q50=_nan_none(q50),
+                q75=_nan_none(q75),
+                skewness=_nan_none(s.skew()) if n >= 3 else None,
+                kurtosis=_nan_none(s.kurt()) if n >= 4 else None,
             )
-        out_rows.append({**base, **stats})
+        out_rows.append(row)
     return df.sparkSession.createDataFrame(out_rows, _PROFILE_SCHEMA)
+
+
+def _nan_none(x) -> float | None:
+    """A float, with NaN (e.g. the mean of +inf and -inf) as None."""
+    x = float(x)
+    return None if math.isnan(x) else x
 
 
 def profile_by(

@@ -79,13 +79,8 @@ def run_pipeline(spark: SparkSession, cfg: C.PipelineConfig, df: DataFrame | Non
         path = cfg.pipeline_entry_path
         if path is None:
             raise ValueError("no input DataFrame and no pipeline_entry_path")
-        if path.endswith(".csv"):
-            df = ingest.load_csv(spark, path, row_id=True)
-        else:
-            df = spark.read.parquet(path)
-            df = ingest.with_row_id(df)
-    else:
-        df = ingest.with_row_id(df)
+        df = S_io.load_any(spark, path)
+    df = ingest.with_row_id(df)
 
     run = PipelineRun(run_id=cfg.run_id, df=df)
 

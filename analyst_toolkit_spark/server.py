@@ -47,8 +47,6 @@ SERVER_VERSION = "0.2.0"
 #: must never become a driver-side full collect of a 100 TB frame.
 MAX_PREVIEW_ROWS = 100
 
-_SESSION_PARAMS = ("session_id", "input_path", "config", "run_id")
-
 _GENERIC_SCHEMA = {
     "type": "object",
     "properties": {
@@ -128,6 +126,18 @@ _TOOL_SCHEMAS: dict[str, dict] = {
             "session_id": {"type": "string"},
             "input_path": {"type": "string"},
             "viz_columns": {"type": "array", "items": {"type": "string"}},
+            "title": {"type": "string"},
+        },
+        "required": ["output_path"],
+    },
+    "export_visuals": {
+        "type": "object",
+        "properties": {
+            "output_path": {"type": "string", "description": "server-visible path of the HTML report to write"},
+            "session_id": {"type": "string"},
+            "input_path": {"type": "string"},
+            "numeric_columns": {"type": "array", "items": {"type": "string"}},
+            "categorical_columns": {"type": "array", "items": {"type": "string"}},
             "title": {"type": "string"},
         },
         "required": ["output_path"],
@@ -507,6 +517,7 @@ def _tool_description(name: str) -> str:
         "dashboard": "Cockpit summary: health + latest status per module.",
         "load_session": "Load a file into a named session.",
         "export_dashboard": "Write a self-contained HTML dashboard (history + health + optional charts).",
+        "export_visuals": "Write a self-contained HTML visual report of a table (missingness, dtypes, correlations, per-column charts).",
         "get_job_status": "Get current status for an async toolkit job by job_id.",
         "list_jobs": "List recent async toolkit jobs, optionally filtered by state.",
         "cancel_job": "Cancel a queued/running async job (cancels its Spark job group).",

@@ -7,6 +7,7 @@ from pyspark.sql import Row
 from analyst_toolkit_spark.operators import dictionary as M_dict
 from analyst_toolkit_spark.operators.infer import infer_configs
 from analyst_toolkit_spark.plans import config as C
+from tests.test_profile import nan_frame
 
 
 def test_semantic_type_heuristic():
@@ -46,6 +47,16 @@ def test_data_dictionary(sample):
     # F12: first distinct values in ingest order
     assert d["species"]["examples"].startswith("Adelie, Gentoo")
     assert d["tag_id"]["examples"] == "t0, t1, t2, t3, t4"
+
+
+@pytest.mark.parametrize("tier", ["driver", "spark"])
+def test_dictionary_and_infer_read_nan_as_missing(spark, tmp_path, monkeypatch, tier):
+    df = nan_frame(spark, tmp_path, monkeypatch, tier)
+    d = M_dict.data_dictionary(df).first()
+    assert (d["null_count"], d["null_pct"], d["n_unique"]) == (2, 50.0, 2)
+    rules = yaml.safe_load(infer_configs(df, modules=["validation"])["validation"])
+    ranges = rules["validation"]["schema_validation"]["rules"]["numeric_ranges"]
+    assert ranges == {"x": {"min": 1.0, "max": 3.0}}
 
 
 def test_example_values_order(spark):

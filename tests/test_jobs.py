@@ -85,6 +85,31 @@ def test_jobstore_persistence_roundtrip(tmp_path):
     assert store2.get(job_id)["result"] == {"ok": True}
 
 
+def test_jobstore_restart_fails_interrupted_jobs(tmp_path):
+    # no thread of a restarted process runs a job left queued or running:
+    # the new store ends it once, on disk too, and then prunes it by TTL
+    path = str(tmp_path / "state.json")
+    store = JobStore(state_path=path, ttl_sec=3600)
+    running, queued, done = store.create("auto_heal"), store.create("auto_heal"), store.create("auto_heal")
+    store.mark_running(running)
+    store.mark_succeeded(done, {"ok": True})
+
+    store2 = JobStore(state_path=path, ttl_sec=3600)
+    for job_id in (running, queued):
+        job = store2.get(job_id)
+        assert job["state"] == "failed" and job["error"]["error_type"] == "Interrupted"
+        assert job["finished_at"] is not None
+    assert store2.get(done)["result"] == {"ok": True}
+    assert store2.list(state="running") == [] and store2.list(state="queued") == []
+    with open(path) as fh:
+        assert {j: v["state"] for j, v in json.load(fh).items()} == {
+            running: "failed", queued: "failed", done: "succeeded"
+        }
+    later = JobStore(state_path=path, ttl_sec=0.05)
+    time.sleep(0.1)
+    assert later.get(running) is None  # terminal now, so the TTL applies
+
+
 def test_spawn_job_success_and_failure(spark):
     store = JobStore()
     ok_id = store.create("m")

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import Row
 
 from analyst_toolkit_spark.functions.scoring import calculate_health_score, metrics_from_history
+from analyst_toolkit_spark.ingest import ROW_ID
 from analyst_toolkit_spark.plans import config as C
 from analyst_toolkit_spark.plans.pipeline import run_pipeline, strptime_to_spark
 
@@ -225,3 +226,22 @@ def test_pipeline_checkpoint_dir_durable_and_identical(spark, dirty, tmp_path):
         assert (tmp_path / "pipe_ckpt" / f"test_run_{module}.parquet").is_dir()
     files = durable.df.inputFiles()
     assert files and all("pipe_ckpt" in f for f in files)
+
+
+@pytest.mark.parametrize("fmt", ["csv", "json"])
+def test_pipeline_entry_path_reads_any_format(spark, tmp_path, fmt):
+    # a part-file directory (csv) and a named file (json) both load through
+    # the one format-dispatching reader, with the row id minted after
+    rows = [Row(k=i, seg=["A", "B"][i % 2]) for i in range(6)]
+    if fmt == "csv":
+        path = str(tmp_path / "entry")
+        spark.createDataFrame(rows).coalesce(1).write.option("header", "true").csv(path)
+    else:
+        path = str(tmp_path / "entry.json")
+        with open(path, "w") as fh:
+            fh.writelines(f'{{"k": {r.k}, "seg": "{r.seg}"}}\n' for r in rows)
+    cfg = C.pipeline_config({"pipeline_entry_path": path, "modules": {"diagnostics": {"run": True}}})
+    run = run_pipeline(spark, cfg)
+    got = sorted((int(r["k"]), r["seg"]) for r in run.df.drop(ROW_ID).collect())
+    assert got == [(r.k, r.seg) for r in rows]
+    assert run.history[0]["summary"]["row_count"] == 6

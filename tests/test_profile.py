@@ -2,7 +2,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from analyst_toolkit_spark.ingest import load_table
+from analyst_toolkit_spark.functions import stats as S
 from analyst_toolkit_spark.operators.profile import (
+    column_stats,
     correlation_matrix,
     duplicate_row_count,
     profile,
@@ -58,6 +60,27 @@ def test_profile_scan_count(spark, sf_dir, monkeypatch):
     # approx mode (sketch aggregates, no EXPAND): single scan
     plan = profile(df, exact=False)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1
+
+
+def nan_frame(spark, tmp_path, monkeypatch, tier):
+    """A parquet double column ``[1.0, NaN, null, 3.0]`` on the given tier:
+    the driver tier by its size, the Spark tier with the size gate shut."""
+    path = str(tmp_path / "nan.parquet")
+    spark.createDataFrame([(1.0,), (float("nan"),), (None,), (3.0,)], "x double").write.parquet(path)
+    if tier == "spark":
+        monkeypatch.setattr(S, "QUANTILE_DRIVER_THRESHOLD_BYTES", -1)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("tier", ["driver", "spark"])
+def test_column_stats_and_profile_read_nan_as_missing(spark, tmp_path, monkeypatch, tier):
+    df = nan_frame(spark, tmp_path, monkeypatch, tier)
+    assert column_stats(df) == [
+        {"column": "x", "dtype": "double", "count": 4, "nulls": 2, "n_unique": 2, "min": 1.0, "max": 3.0}
+    ]
+    p = profile(df).first()
+    assert (p["count"], p["nulls"], p["null_pct"], p["n_unique"]) == (4, 2, 0.5, 2)
+    assert (p["mean"], p["min"], p["max"], p["q50"]) == (2.0, 1.0, 3.0, 2.0)
 
 
 def test_profile_oracle(spark, oracle_sf_dir, con):

@@ -49,6 +49,47 @@ def test_stats_match_pandas(spark, vals):
     assert row["std"] == pytest.approx(s.std(), rel=1e-9)  # ddof=1
 
 
+@pytest.mark.parametrize("tier", ["driver", "spark"])
+@given(vals=st.lists(st.one_of(st.none(), st.floats(allow_nan=True, allow_infinity=False, width=16)), max_size=30))
+@SET
+def test_column_stats_and_profile_match_pandas(spark, tmp_path, monkeypatch, tier, vals):
+    # half-precision draws keep every sum exact in double, so the mean is
+    # the same number whichever order Spark or numpy adds in; NaN is missing
+    import uuid
+
+    from analyst_toolkit_spark.functions import stats as S
+    from analyst_toolkit_spark.operators.profile import column_stats, profile
+
+    if tier == "spark":
+        monkeypatch.setattr(S, "QUANTILE_DRIVER_THRESHOLD_BYTES", -1)
+    path = str(tmp_path / uuid.uuid4().hex)
+    spark.createDataFrame([(v,) for v in vals], "x double").write.parquet(path)
+    df = spark.read.parquet(path)
+    assert S.quantile_strategy(df) == ("driver" if tier == "driver" else "builtin")
+    s = pd.Series(vals, dtype="float64")
+    n = len(s)
+    empty = s.isna().all()
+    want = {
+        "column": "x",
+        "dtype": "double",
+        "count": n,
+        "nulls": int(s.isna().sum()),
+        "n_unique": int(s.nunique()),
+        "min": None if empty else float(s.min()),
+        "max": None if empty else float(s.max()),
+    }
+    assert column_stats(df) == [want]
+    p = profile(df).first().asDict()
+    shared = ("column", "count", "nulls", "n_unique", "min", "max")
+    assert {k: p[k] for k in shared} == {k: want[k] for k in shared}
+    assert p["null_pct"] == (want["nulls"] / n if n else None)
+    if empty:
+        assert p["mean"] is None and p["q50"] is None
+    else:
+        assert p["mean"] == pytest.approx(s.mean(), rel=1e-12)
+        assert p["q50"] == pytest.approx(s.quantile(0.5), rel=1e-12)
+
+
 @given(vals=st.lists(st.one_of(st.none(), st.sampled_from(["a", "b", "c", "d"])), min_size=1, max_size=30))
 @SET
 def test_mode_matches_pandas(spark, vals):

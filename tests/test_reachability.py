@@ -1,10 +1,12 @@
 """Every top-level definition of the engine has a caller or a stated reason.
 
-The scan parses each top-level ``def`` and ``class`` in ``analyst_toolkit_spark/``
-and follows names from a set of roots: everything ``__spark_entry__.py``,
-the non-test ``perfbench/*.py`` and ``examples/*.py`` use, and everything
-each engine module's own module-level statements use (imports, registries,
-``__all__``, ``if __name__ == "__main__"``). A reached definition reaches
+The scan parses each top-level ``def``, ``class`` and assignment (a module
+constant or registry) in ``analyst_toolkit_spark/`` and follows names from a
+set of roots: everything ``__spark_entry__.py``, the non-test
+``perfbench/*.py`` and ``examples/*.py`` use, and everything each engine
+module's other module-level statements use (imports, ``__all__``,
+``if __name__ == "__main__"``). An assignment is not a root: a constant
+that only its own assignment names is an orphan. A reached definition reaches
 every name used inside it; a reached class reaches its whole body, so the
 ``Toolkit`` and ``RpcServer`` methods count. A use is a name, an attribute,
 an imported name or a string constant spelled like an identifier (tool
@@ -57,6 +59,24 @@ def _uses(node: ast.AST) -> set[str]:
     return out
 
 
+def _defines(stmt: ast.stmt) -> list[tuple[str, ast.AST]]:
+    """(name, what its definition uses) for each name a top-level ``def``,
+    ``class`` or assignment defines; [] for any other statement. A dunder
+    assignment (``__all__``) is read by Python itself, so it stays a root."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [(stmt.name, stmt)]
+    if isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    elif isinstance(stmt, ast.AnnAssign) and stmt.value is not None:
+        targets = [stmt.target]
+    else:
+        return []
+    names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+    if any(n.startswith("__") and n.endswith("__") for n in names):
+        return []
+    return [(n, stmt.value) for n in names]
+
+
 def _scan() -> tuple[dict[str, list[str]], dict[str, set[str]], set[str]]:
     """(name -> defining modules, name -> names its definitions use, roots)."""
     where: dict[str, list[str]] = {}
@@ -65,10 +85,11 @@ def _scan() -> tuple[dict[str, list[str]], dict[str, set[str]], set[str]]:
     for path in sorted(PACKAGE.rglob("*.py")):
         module = path.relative_to(ROOT).as_posix()
         for stmt in ast.parse(path.read_text()).body:
-            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                where.setdefault(stmt.name, []).append(module)
-                uses.setdefault(stmt.name, set()).update(_uses(stmt))
-            else:
+            defined = _defines(stmt)
+            for name, body in defined:
+                where.setdefault(name, []).append(module)
+                uses.setdefault(name, set()).update(_uses(body))
+            if not defined:
                 roots |= _uses(stmt)
     outside = [ROOT / "__spark_entry__.py"]
     outside += [p for p in sorted((ROOT / "perfbench").glob("*.py")) if not p.name.startswith("test_")]

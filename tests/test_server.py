@@ -46,6 +46,22 @@ def test_tools_list_shape(rpc):
         assert t["inputSchema"]["type"] == "object"
 
 
+def test_tools_list_required_matches_signatures(rpc):
+    # a schema requires exactly what its tool cannot run without: the
+    # parameters of tool_<name> (or of the module runner) with no default
+    import inspect
+
+    tools = rpc.handle({"jsonrpc": "2.0", "id": 2, "method": "tools/list"})["result"]["tools"]
+    for t in tools:
+        fn = getattr(Toolkit, f"tool_{t['name']}", None)
+        params = list(inspect.signature(fn or Toolkit._module_tool).parameters.values())
+        params = params[1:] if fn else params[2:]  # self, and the module runner's module name
+        need = [p.name for p in params if p.default is p.empty and p.kind is not p.VAR_KEYWORD]
+        assert t["inputSchema"].get("required", []) == need, t["name"]
+        assert set(need) <= set(t["inputSchema"]["properties"]), t["name"]
+        assert t["description"] != f"{t['name']} tool.", t["name"]
+
+
 def test_tools_call_diagnostics(rpc, sf_dir):
     resp = rpc.handle(
         {
@@ -94,6 +110,25 @@ def test_tools_call_alias_and_session_roundtrip(rpc, sf_dir):
         }
     )
     assert "l_orderkey" in info["result"]["columns"]
+
+
+def test_session_with_array_column(rpc, spark, tmp_path):
+    # pandas cannot hash the arrays an array<int> column collects to, so its
+    # statistics come from the Spark tier for every tool that reads them
+    path = str(tmp_path / "arrays.parquet")
+    spark.createDataFrame([(1, [1, 2]), (2, [1, 2]), (3, None)], "k int, tags array<int>").write.parquet(path)
+
+    def call(name, **arguments):
+        body = {"jsonrpc": "2.0", "id": 9, "method": "tools/call", "params": {"name": name, "arguments": arguments}}
+        return rpc.handle(body)["result"]
+
+    assert call("load_session", session_id="arrays", input_path=path)["status"] == "pass"
+    diag = call("diagnostics", session_id="arrays")
+    assert diag["status"] == "pass"
+    tags = next(r for r in diag["reports"]["diagnostics"] if r["column"] == "tags")
+    assert (tags["nulls"], tags["n_unique"]) == (1, 1)
+    d = {r["column"]: r for r in call("data_dictionary", session_id="arrays")["columns"]}
+    assert (d["tags"]["null_count"], d["tags"]["n_unique"]) == (1, 1)
 
 
 def test_drift_detection_wire_adaptation(rpc, sf_dir):
