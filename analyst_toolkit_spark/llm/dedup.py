@@ -816,17 +816,16 @@ def connected_components(
                     StructField("component", node_t, True),
                 ]
             )
-            # broadcast hint (guide §3): a LogicalRDD carries no size stats,
-            # so without it Spark plans downstream label joins as SMJ and
-            # shuffles BOTH sides — including the caller's corpus-scale
-            # frame. The tier just PROVED the relation is bounded (<= 2x
-            # CC_DRIVER_TIER_MAX_EDGES rows, a few MB), so the hint is
-            # data-size-gated by construction, never a blind constant.
-            return F.broadcast(
-                spark.createDataFrame(
-                    _union_find_labels(rows), schema
-                )
-            )
+            # broadcast hint (guide §3): the labels are a local relation
+            # whose size estimate is rows x the columns' default widths, so
+            # near the cap (<= 2x CC_DRIVER_TIER_MAX_EDGES rows) it can pass
+            # spark.sql.autoBroadcastJoinThreshold (400k string-id rows
+            # estimate 19 MB, long ids 9.6 MB), and without the hint Spark
+            # plans downstream label joins as SMJ and shuffles BOTH sides —
+            # including the caller's corpus-scale frame. The tier just PROVED the relation
+            # is bounded (a few MB), so the hint is data-size-gated by
+            # construction, never a blind constant.
+            return F.broadcast(S_io.local_frame(spark, _union_find_labels(rows), schema))
     converged = False
     for _ in range(max_iter):
         prop = edges.join(labels, edges["dst"] == labels["node"], "inner").select(

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from analyst_toolkit_spark.llm.text import token_count  # packing counts tokens the same way the text metrics do
+from analyst_toolkit_spark.sources.io import local_frame
 
 _PID = "__pack_pid"
 _OFF = "__pack_off"
@@ -100,9 +101,10 @@ def with_global_cumsum(
             offsets[(r[_PID], g)] = running_by_group.get(g, 0)
             running_by_group[g] = running_by_group.get(g, 0) + (r["t"] or 0)
         grp_type = dict(df.dtypes)[group_col]
-        off_df = spark.createDataFrame(
+        off_df = local_frame(
+            spark,
             [(pid, g, off) for (pid, g), off in offsets.items()],
-            schema=f"{_PID} int, {group_col} {grp_type}, {_OFF} long",
+            f"{_PID} int, {group_col} {grp_type}, {_OFF} long",
         )
         join_keys = [_PID, group_col]
         w_part = [F.col(_PID), F.col(group_col)]
@@ -112,9 +114,7 @@ def with_global_cumsum(
         for pid in sorted(totals):
             off_map[pid] = running
             running += totals[pid] or 0
-        off_df = spark.createDataFrame(
-            [(pid, off) for pid, off in off_map.items()], f"{_PID} int, {_OFF} long"
-        )
+        off_df = local_frame(spark, [(pid, off) for pid, off in off_map.items()], f"{_PID} int, {_OFF} long")
         join_keys = [_PID]
         w_part = [F.col(_PID)]
     # phase 3: local cumsum + offset == exact global cumsum

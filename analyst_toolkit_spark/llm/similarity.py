@@ -17,7 +17,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from analyst_toolkit_spark.sources.io import hadoop_fs
+from analyst_toolkit_spark.sources.io import hadoop_fs, local_frame
 
 
 def lit_vec(vec: list[float]) -> Column:
@@ -2210,9 +2210,8 @@ def semantic_decon_exposure(
     )
     spark = corpus.sparkSession
     bid_type = dict(benchmark.dtypes)[bench_id_col]
-    ids = spark.createDataFrame(
-        [(i, r["__bid"]) for i, r in enumerate(rows)],
-        schema=f"__i int, {bench_id_col} {bid_type}",
+    ids = local_frame(
+        spark, [(i, r["__bid"]) for i, r in enumerate(rows)], f"__i int, {bench_id_col} {bid_type}"
     )
     # no hint: the preserved side of a left join cannot build-broadcast, and
     # `exposed` is structurally bounded at <= len(rows) groups (the key is

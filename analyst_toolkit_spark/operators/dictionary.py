@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from analyst_toolkit_spark.ingest import ROW_ID, with_row_id
 from analyst_toolkit_spark.operators.profile import column_stats
+from analyst_toolkit_spark.sources.io import local_frame
 
 _INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
 _FLOAT_TYPES = {"float", "double"} | {f"decimal({p},{s})" for p in range(39) for s in range(39)}
@@ -107,4 +108,4 @@ def data_dictionary(
         "column string, dtype string, semantic_type string, count long, "
         "null_count long, null_pct double, n_unique long, examples string"
     )
-    return df.sparkSession.createDataFrame(rows, schema)
+    return local_frame(df.sparkSession, rows, schema)

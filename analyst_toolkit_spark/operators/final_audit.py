@@ -23,7 +23,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from analyst_toolkit_spark.functions.stats import _nan_as_null
 from analyst_toolkit_spark.operators.validation import ValidationConfig, run_validation
+from analyst_toolkit_spark.sources.io import local_frame
 
 
 @dataclass
@@ -97,13 +99,14 @@ def strict_cast(df: DataFrame, dtype_map: dict[str, str]) -> tuple[DataFrame, li
 
 
 def null_audit(df: DataFrame, disallowed_columns: list[str]) -> DataFrame:
-    """Per-column null counts for required columns, ONE agg pass (A19).
+    """Per-column null counts for required columns, ONE agg pass (A19);
+    NaN in a float/double column counts as null, as pandas' ``isna`` does.
     Output: column, null_count (all listed columns, zero rows included)."""
     cols = [c for c in disallowed_columns if c in df.columns]
     if not cols:
-        return df.sparkSession.createDataFrame([], "column string, null_count long")
+        return local_frame(df.sparkSession, [], "column string, null_count long")
     # coalesce: sum over an EMPTY frame is null, not 0
-    wide = df.agg(*[F.coalesce(F.sum(F.col(c).isNull().cast("long")), F.lit(0)).alias(c) for c in cols])
+    wide = df.agg(*[F.coalesce(F.sum(_nan_as_null(df, c).isNull().cast("long")), F.lit(0)).alias(c) for c in cols])
     structs = [
         F.struct(F.lit(c).alias("column"), F.col(c).cast("long").alias("null_count")) for c in cols
     ]

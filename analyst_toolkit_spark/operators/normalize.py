@@ -28,6 +28,8 @@ import difflib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from analyst_toolkit_spark.sources.io import local_frame
+
 SQL_NULL_SENTINEL = "null"
 
 #: Above this optimizer-estimated input size, fuzzy correction's "auto" mode
@@ -162,7 +164,7 @@ def fuzzy_correction_map_distributed(
     a qualifying match) — apply with ``apply_fuzzy_correction_distributed``.
     """
     spark = df.sparkSession
-    master_df = spark.createDataFrame([(m,) for m in master], "master string")
+    master_df = local_frame(spark, [(m,) for m in master], "master string")
     distinct = (
         df.select(F.col(column).alias("value"))
         .filter(F.col("value").isNotNull())

@@ -39,6 +39,7 @@ from analyst_toolkit_spark.functions.stats import (
     skewness_g1,
 )
 from analyst_toolkit_spark.ingest import ROW_ID
+from analyst_toolkit_spark.sources.io import local_frame
 
 NUMERIC_TYPES = (
     T.ByteType,
@@ -289,7 +290,7 @@ def _profile_pandas(df: DataFrame, pdf, cols: list[str], num: set[str]) -> DataF
                 kurtosis=_nan_none(s.kurt()) if n >= 4 else None,
             )
         out_rows.append(row)
-    return df.sparkSession.createDataFrame(out_rows, _PROFILE_SCHEMA)
+    return local_frame(df.sparkSession, out_rows, _PROFILE_SCHEMA)
 
 
 def _nan_none(x) -> float | None:

@@ -21,6 +21,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from analyst_toolkit_spark.functions.stats import _nan_as_null
+
 
 @dataclass
 class ValidationConfig:
@@ -39,7 +41,8 @@ def compile_rules(df: DataFrame, cfg: ValidationConfig) -> dict[str, Column]:
 
     Null handling mirrors the reference: categorical and range rules skip nulls
     (`~isin(...) & notna()` — validate_data.py:29-31, :102); null-check rules
-    flag them.
+    flag them, and NaN in a float/double column, which pandas' ``isna`` reads
+    as missing.
     """
     preds: dict[str, Column] = {}
     cols = set(df.columns)
@@ -61,7 +64,7 @@ def compile_rules(df: DataFrame, cfg: ValidationConfig) -> dict[str, Column]:
         preds[f"range:{col}"] = out_of_range & F.col(col).isNotNull()
     for col in cfg.non_null_columns:
         if col in cols:
-            preds[f"not_null:{col}"] = F.col(col).isNull()
+            preds[f"not_null:{col}"] = _nan_as_null(df, col).isNull()
     return preds
 
 

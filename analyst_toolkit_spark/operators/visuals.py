@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from analyst_toolkit_spark.functions.stats import collect_stats, quantile_stats
 from analyst_toolkit_spark.operators.profile import numeric_columns
+from analyst_toolkit_spark.sources.io import local_frame
 
 
 def histogram(
@@ -48,7 +49,7 @@ def histogram(
     else:
         mm = df.agg(F.min(column).alias("lo"), F.max(column).alias("hi")).first()
     if mm["lo"] is None:
-        return df.sparkSession.createDataFrame([], "bin int, lo double, hi double, count long")
+        return local_frame(df.sparkSession, [], "bin int, lo double, hi double, count long")
     lo, hi = float(mm["lo"]), float(mm["hi"])
     if lo == hi:  # degenerate: single value → one occupied bin
         hi = lo + 1.0
@@ -67,7 +68,7 @@ def histogram(
         {"bin": b, "lo": lo + b * width, "hi": lo + (b + 1) * width, "count": counts.get(b, 0)}
         for b in range(bins)
     ]
-    return df.sparkSession.createDataFrame(rows, "bin int, lo double, hi double, count long")
+    return local_frame(df.sparkSession, rows, "bin int, lo double, hi double, count long")
 
 
 def boxplot_stats(
@@ -139,7 +140,7 @@ def boxplot_stats(
         "column string, min double, q1 double, median double, q3 double, max double, "
         "lo_whisker double, hi_whisker double, n_outliers long"
     )
-    return df.sparkSession.createDataFrame(rows, schema)
+    return local_frame(df.sparkSession, rows, schema)
 
 
 def kde_grid(df: DataFrame, column: str, grid_points: int = 100, bandwidth: float | None = None) -> DataFrame:
@@ -157,7 +158,7 @@ def kde_grid(df: DataFrame, column: str, grid_points: int = 100, bandwidth: floa
     ).first()
     n, sd = stats["n"], stats["sd"]
     if not n or sd is None or sd == 0:
-        return df.sparkSession.createDataFrame([], "x double, density double")
+        return local_frame(df.sparkSession, [], "x double, density double")
     lo, hi = float(stats["lo"]), float(stats["hi"])
     bw = bandwidth or float(sd) * n ** (-1 / 5)
     pad = 3 * bw
@@ -170,7 +171,7 @@ def kde_grid(df: DataFrame, column: str, grid_points: int = 100, bandwidth: floa
     ]
     row = df.agg(*aggs).first()
     rows = [{"x": x, "density": float(row[f"g{i}"] or 0.0) * norm} for i, x in enumerate(xs)]
-    return df.sparkSession.createDataFrame(rows, "x double, density double")
+    return local_frame(df.sparkSession, rows, "x double, density double")
 
 
 def dtype_composition(df: DataFrame) -> DataFrame:
@@ -178,8 +179,10 @@ def dtype_composition(df: DataFrame) -> DataFrame:
     counts: dict[str, int] = {}
     for _, t in df.dtypes:
         counts[t] = counts.get(t, 0) + 1
-    return df.sparkSession.createDataFrame(
-        [{"dtype": t, "n_columns": n} for t, n in sorted(counts.items())], "dtype string, n_columns long"
+    return local_frame(
+        df.sparkSession,
+        [{"dtype": t, "n_columns": n} for t, n in sorted(counts.items())],
+        "dtype string, n_columns long",
     )
 
 
@@ -212,7 +215,7 @@ def histogram_pair(
     spark = df_before.sparkSession
     empty_schema = "bin int, lo double, hi double, count long"
     if not spans:
-        return spark.createDataFrame([], empty_schema), spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema), local_frame(spark, [], empty_schema)
     lo = min(s[0] for s in spans)
     hi = max(s[1] for s in spans)
     if lo == hi:
@@ -234,7 +237,7 @@ def histogram_pair(
             {"bin": b, "lo": lo + b * width, "hi": lo + (b + 1) * width, "count": counts.get(b, 0)}
             for b in range(bins)
         ]
-        return spark.createDataFrame(rows, empty_schema)
+        return local_frame(spark, rows, empty_schema)
 
     return _bin(df_before), _bin(df_after)
 

@@ -28,8 +28,10 @@ def get_spark(app_name: str = "analyst_toolkit_spark", master: str | None = None
       per shuffle at local scale. On a cluster AQE coalesces from it.
     - ``spark.sql.session.timeZone=UTC``: Spark takes the host's zone, so
       timestamp parsing and rendering would vary by host.
-    - ``spark.sql.execution.arrow.pyspark.enabled``: off by default; every
-      Python<->JVM hop (``toPandas``, ``createDataFrame``) goes over Arrow.
+    - ``spark.sql.execution.arrow.pyspark.enabled``: off by default;
+      ``toPandas`` and ``createDataFrame`` of a pandas frame go over Arrow.
+      (A ``pyarrow.Table`` always does; the engine's driver-held rows enter
+      as one through ``sources.io.local_frame``. A plain list never does.)
     - ``spark.sql.legacy.parquet.nanosAsLong``: nanosecond parquet
       timestamps (e.g. pandas-written event streams) read as long, which
       ``ingest.load_table`` converts to µs timestamps; Spark fails on them.

@@ -11,7 +11,8 @@ same Hadoop ``FileSystem`` (``hadoop_fs``).
 
 Report plane (S8/S9, m00_utils/export_utils.py:30-131): reports are SMALL
 collected aggregates by construction (profile rows, audit tables), so the
-driver-side render is not a scale concern. Excel needs openpyxl — gated behind
+driver-side render is not a scale concern; such rows re-enter Spark through
+``local_frame`` as a local relation. Excel needs openpyxl — gated behind
 an import-try; CSV always works. The HTML dashboard sink is
 ``reporting.export_pipeline_dashboard``.
 """
@@ -19,9 +20,11 @@ an import-try; CSV always works. The HTML dashboard sink is
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 REPORT_ROW_CAP = 10_000  # defensive cap: report tables must be aggregates, not data dumps
 
@@ -66,6 +69,39 @@ def cut(df: DataFrame, *, durable_dir: str | None = None, name: str) -> DataFram
     path = f"{durable_dir.rstrip('/')}/{name}"
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Any], schema: StructType | str) -> DataFrame:
+    """Rows the driver already holds (dicts by field name; tuples or ``Row``s
+    by position) as a DataFrame of ``schema`` (a ``StructType`` or DDL).
+
+    The rows go to Spark as one Arrow table, so the plan is a
+    ``LocalRelation``: collecting, limiting, projecting or broadcasting it
+    runs no Spark job and starts no Python worker (a list handed to
+    ``createDataFrame`` is parallelized and mapped through one). Above
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark keeps the
+    Arrow batches in a JVM-side RDD instead. Each row is first checked by
+    the verifier ``createDataFrame`` runs on a list, so a wrong-typed value
+    or a null in a non-nullable field raises as it did there (Arrow alone
+    would truncate a float into an integer field). A non-``str`` value in a
+    string field raises too, where the list path stored its Java
+    ``toString``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType, _make_type_verifier
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    verify = _make_type_verifier(schema)
+    names = schema.fieldNames()
+    columns: list[list[Any]] = [[] for _ in names]
+    for row in rows:
+        verify(row)
+        for column, value in zip(columns, [row.get(n) for n in names] if isinstance(row, dict) else row):
+            column.append(value)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays([pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def hadoop_fs(spark: SparkSession, path: str):

@@ -72,3 +72,15 @@ def test_run_final_audit_gate_raises(dirty):
     assert res["null_audit_results"]["failures"] == {"note": 1}
     with pytest.raises(ValueError):
         M.run_final_audit(dirty, cfg, fail_on_error=True)
+
+
+def test_null_audit_reads_nan_as_missing(spark, tmp_path):
+    import pandas as pd
+
+    path = str(tmp_path / "nan.parquet")
+    spark.createDataFrame(
+        [(1.0, "a"), (float("nan"), "NaN"), (None, None)], "x double, s string"
+    ).write.parquet(path)
+    rows = {r["column"]: r["null_count"] for r in M.null_audit(spark.read.parquet(path), ["x", "s"]).collect()}
+    pdf = pd.read_parquet(path)
+    assert rows == {c: int(pdf[c].isna().sum()) for c in ("x", "s")} == {"x": 2, "s": 1}

@@ -87,13 +87,14 @@ _CASES["cc_no_driver_tier"] = _CASES["cc"]  # run with CC_DRIVER_TIER_MAX_EDGES 
 #: (jobs during the call, jobs collecting the result) per operator and cut.
 #: A durable cut reads back with the writer's schema, so it runs no
 #: schema-inference job: cc and cc_no_driver_tier make 9 durable cuts,
-#: bucket 4 and curate 6.
+#: bucket 4 and curate 6. The driver tier's labels are a local relation,
+#: so collecting them runs no job (cc and bucket, local).
 _JOBS_PER_CALL = {
-    ("cc", "local"): (7, 1),
+    ("cc", "local"): (7, 0),
     ("cc", "durable"): (48, 1),
     ("cc_no_driver_tier", "local"): (51, 1),
     ("cc_no_driver_tier", "durable"): (48, 1),
-    ("bucket", "local"): (10, 1),
+    ("bucket", "local"): (10, 0),
     ("bucket", "durable"): (15, 1),
     ("curate", "local"): (28, 2),
     ("curate", "durable"): (35, 2),

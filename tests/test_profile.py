@@ -49,8 +49,9 @@ def test_profile_scan_count(spark, sf_dir, monkeypatch):
     df = load_table(spark, sf_dir, "lineitem")
     # tiny input (driver tier): the result is a local relation — the heavy
     # work happened in ONE bounded Arrow collect, no distributed agg at all
-    plan = profile(df, exact=True)._jdf.queryExecution().executedPlan().toString()
-    assert "Scan parquet" not in plan
+    qe = profile(df, exact=True)._jdf.queryExecution()
+    assert qe.analyzed().getClass().getSimpleName() == "LocalRelation"
+    assert "Scan parquet" not in qe.executedPlan().toString()
     # distributed exact mode: two scans — stats agg + distinct-count agg
     # (kept apart so countDistinct's EXPAND rewrite never multiplies the
     # percentile inputs)

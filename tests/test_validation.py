@@ -88,3 +88,20 @@ def test_validation_single_pass(spark, oracle_sf_dir):
     )
     plan = validation_summary(df, cfg)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1
+
+
+def test_not_null_reads_nan_as_missing(spark, tmp_path):
+    import pandas as pd
+
+    path = str(tmp_path / "nan.parquet")
+    spark.createDataFrame(
+        [(1.0, "a"), (float("nan"), "NaN"), (None, None)], "x double, s string"
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    pdf = pd.read_parquet(path)
+    cfg = ValidationConfig(non_null_columns=["x", "s"])
+    rules = run_validation(df, cfg)["rules"]
+    for c in ("x", "s"):
+        assert rules[f"not_null:{c}"]["violations"] == int(pdf[c].isna().sum())
+        assert violating_rows(df, cfg, f"not_null:{c}").count() == int(pdf[c].isna().sum())
+    assert rules["not_null:x"]["violations"] == 2  # NaN and null; the string "NaN" is a value
